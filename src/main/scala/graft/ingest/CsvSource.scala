@@ -17,6 +17,14 @@ import org.apache.spark.sql.types.StructType
   */
 object CsvSource {
 
+  /** Header row of the BCB quarterly complaints CSV (the reference's
+    * bucket layout): 14 `;`-separated columns, ISO-8859-1 text. */
+  val bcbHeader: String =
+    "Ano;Trimestre;Categoria;Tipo;CNPJ IF;Instituição financeira;Índice;" +
+      "Quantidade de reclamações reguladas procedentes;Quantidade de reclamações reguladas - outras;" +
+      "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
+      "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR"
+
   private def common(r: org.apache.spark.sql.DataFrameReader) = r
     .option("sep", ";")
     .option("encoding", "ISO-8859-1")
@@ -36,17 +44,28 @@ object CsvSource {
   /** Streaming flavor of the same scan — replaces the reference's 60 s
     * re-list-everything polling loop (`app.py:176-196`) with Spark's
     * FileStreamSource, which keeps the seen-files ledger the reference
-    * lacks (SURVEY.md §3.2). `maxFilesPerTrigger` plays the role of the
-    * reference's sequential one-file-at-a-time pacing, without the sleeps. */
-  def readStream(spark: SparkSession, path: String, schema: StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
+    * lacks (SURVEY.md §3.2). Admission is by bytes, not by file count:
+    * each micro-batch takes up to [[batchByteBudget]] of newly seen
+    * files. A backlog of many small files then lands as one batch per
+    * wave of tasks instead of one single-task batch per file (the
+    * reference's one-file-at-a-time pacing, whose fixed per-batch cost
+    * of offset listing, WAL write and commit dominated), a large file
+    * still splits across tasks, and a huge backlog never becomes one
+    * unbounded batch. */
+  def readStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.readStream
       .option("sep", ";")
       .option("encoding", "ISO-8859-1")
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .option("pathGlobFilter", "*.csv")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .option("maxBytesPerTrigger", batchByteBudget(spark).toString)
       .schema(schema)
       .csv(path)
+
+  /** Bytes one streaming micro-batch admits: one full file split
+    * (`spark.sql.files.maxPartitionBytes`) per core, i.e. one task wave.
+    * Read when the stream is defined. */
+  def batchByteBudget(spark: SparkSession): Long =
+    spark.sparkContext.defaultParallelism.toLong * spark.sessionState.conf.filesMaxPartitionBytes
 }

@@ -1,8 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.core.Schemas
 
@@ -15,7 +16,10 @@ import graft.core.Schemas
   * with FileStreamSource + checkpoint (incremental listing, seen-files
   * log, at-least-once delivery). The reference's chunk pacing
   * (`CHUNK_SIZE=10` + 20 s sleeps ⇒ 0.5 rows/s) is deliberately NOT
-  * reproduced — `maxFilesPerTrigger` is the scalable backpressure knob.
+  * reproduced: each micro-batch admits one task wave of bytes
+  * (`CsvSource.batchByteBudget`), so a backlog is caught up in a few
+  * full-width batches and the budget, derived from the session's own
+  * parallelism and split size, is the backpressure bound.
   */
 object Pipeline {
 
@@ -57,9 +61,8 @@ object Pipeline {
   /** Streaming: unbounded CSV prefix → Avro `value` frame. The schema
     * must be declared up front (streaming sources cannot infer); the wire
     * StructType is exactly the csv.DictReader shape — all strings. */
-  def valuesStream(spark: SparkSession, path: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path), maxFilesPerTrigger)
+  def valuesStream(spark: SparkSession, path: String): DataFrame = {
+    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path))
     AvroCodec.encodeFrame(spark, canonicalize(raw))
   }
 
@@ -69,9 +72,9 @@ object Pipeline {
     * instead of failing the micro-batch. This is the production posture:
     * one poison row in a 100 TB backfill should cost one counter tick,
     * not the query. */
-  def valuesStreamLenient(spark: SparkSession, path: String,
-      maxFilesPerTrigger: Int = 1): (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path), maxFilesPerTrigger)
+  def valuesStreamLenient(spark: SparkSession, path: String)
+      : (DataFrame, org.apache.spark.util.LongAccumulator) = {
+    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path))
     AvroCodec.encodeFrameLenient(spark, canonicalize(raw))
   }
 
@@ -80,18 +83,24 @@ object Pipeline {
     * .observedMetrics(observedMetricsName)` — the Observation handle is
     * batch-only, but the `CollectMetrics` node is the same, so
     * production monitoring reads progress events instead of a handle. */
-  def valuesStreamObserved(spark: SparkSession, path: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path), maxFilesPerTrigger)
+  def valuesStreamObserved(spark: SparkSession, path: String): DataFrame = {
+    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path))
     val canon = canonicalize(raw)
       .observe(observedMetricsName, qualityMetrics.head, qualityMetrics.tail: _*)
     AvroCodec.encodeFrame(spark, canon)
   }
 
   /** Streaming schema bootstrap: one batch peek at the header (the
-    * streaming analog of DictReader's first-row header read). */
-  private def rawCsvSchema(spark: SparkSession, path: String) =
-    CsvSource.readBatch(spark, path).schema
+    * streaming analog of DictReader's first-row header read). A prefix
+    * with no CSV yet has no header to peek, so it gets the BCB layout;
+    * files landing later bind to it by position, as they do to a peeked
+    * header. */
+  private def rawCsvSchema(spark: SparkSession, path: String): StructType =
+    try CsvSource.readBatch(spark, path).schema
+    catch {
+      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+        StructType(CsvSource.bcbHeader.split(';').toSeq.map(StructField(_, StringType)))
+    }
 
   /** The whole producer, running: stream → sink at the reference cadence. */
   def run(spark: SparkSession, sourcePath: String, sink: GraftSink,

@@ -3,10 +3,9 @@ package graft.tools
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.ingest.{AvroCodec, ParquetSink, Pipeline}
+import graft.ingest.{AvroCodec, CsvSource, ParquetSink, Pipeline}
 
 /** Runnable demo of the whole producer (the reference's `python -m
   * ex8_producer.app`, Spark-shaped): CSVs appear under a prefix → the
@@ -19,19 +18,12 @@ object ProducerDemo {
     val src = s"$work/incoming"; val out = s"$work/values"
     Files.createDirectories(Paths.get(src))
 
-    val header =
-      "Ano;Trimestre;Categoria;Tipo;CNPJ IF;Instituição financeira;Índice;" +
-        "Quantidade de reclamações reguladas procedentes;Quantidade de reclamações reguladas - outras;" +
-        "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
-        "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR\n"
+    val header = CsvSource.bcbHeader + "\n"
     Files.write(Paths.get(src, "t0.csv"),
       (header + "2022;1º;Bancos;Banco;123;BANCO UM;9,5;1;2;3;4;5;6;7\n")
         .getBytes(Charset.forName("ISO-8859-1")))
 
-    val spark = graft.core.GraftSession.withLocalDir(SparkSession.builder()).master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.GraftSession.getOrCreate("local[4]", 4)
     spark.sparkContext.setLogLevel("WARN")
 
     val q = Pipeline.run(spark, src, ParquetSink(out, s"$work/ckpt"),

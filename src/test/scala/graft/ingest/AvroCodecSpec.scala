@@ -170,10 +170,7 @@ class AvroCodecSpec extends SparkSpec {
   test("fixture CSV through the whole batch pipeline yields decodable values") {
     val dir = tmpDir("pipe_csv")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.csv"),
-      ("Ano;Trimestre;Categoria;Tipo;CNPJ IF;Instituição financeira;Índice;" +
-        "Quantidade de reclamações reguladas procedentes;Quantidade de reclamações reguladas - outras;" +
-        "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
-        "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR\n" +
+      (CsvSource.bcbHeader + "\n" +
         "2022;1º;Cat;Banco;1;B;2;3;4;5;6;7;8;9\n")
         .getBytes(java.nio.charset.Charset.forName("ISO-8859-1")))
     val values = Pipeline.valuesBatch(spark, dir).collect()

@@ -14,10 +14,7 @@ class CanonicalizeSpec extends SparkSpec {
   private def writeFixture(): String = {
     val dir = tmpDir("reclamacoes_csv")
     val content =
-      "Ano;Trimestre;Categoria;Tipo;CNPJ IF;Instituição financeira;Índice;" +
-      "Quantidade de reclamações reguladas procedentes;Quantidade de reclamações reguladas - outras;" +
-      "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
-      "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR;Extra\n" +
+      CsvSource.bcbHeader + ";Extra\n" +
       "2022;1º;Bancos e financeiras;Banco;00000000;BANCO EXEMPLO S.A.;25,91;130;22;5;157;10000000;9000000;1000000;drop-me\n" +
       "2022;1º;Bancos e financeiras;Banco;;BANCO SEM CNPJ;;0;;;0;500;400;;x\n"
     Files.write(Paths.get(dir, "fixture.csv"),

@@ -14,14 +14,7 @@ class ObservationSpec extends SparkSpec {
 
   test("canonicalization metrics ride the shipping action (no second scan)") {
     val dir = tmpDir("obs_csv")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.csv"),
-      ("Ano;Trimestre;Categoria;Tipo;CNPJ IF;Instituição financeira;Índice;" +
-        "Quantidade de reclamações reguladas procedentes;Quantidade de reclamações reguladas - outras;" +
-        "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
-        "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR\n" +
-        "2022;1º;C;B;1;BANCO A;2;3;4;5;6;7;8;9\n" +
-        "2022;2º;C;B;;BANCO B;3;4;5;6;7;8;9;10\n")
-        .getBytes(java.nio.charset.Charset.forName("ISO-8859-1")))
+    writeFixture(dir)
     val obs = Observation("canon_metrics")
     val canon = Pipeline.canonicalBatch(spark, dir)
       .observe(obs,
@@ -41,10 +34,7 @@ class ObservationSpec extends SparkSpec {
 
   private def writeFixture(dir: String): Unit =
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.csv"),
-      ("Ano;Trimestre;Categoria;Tipo;CNPJ IF;Instituição financeira;Índice;" +
-        "Quantidade de reclamações reguladas procedentes;Quantidade de reclamações reguladas - outras;" +
-        "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
-        "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR\n" +
+      (CsvSource.bcbHeader + "\n" +
         "2022;1º;C;B;1;BANCO A;2;3;4;5;6;7;8;9\n" +
         "2022;2º;C;B;;BANCO B;3;4;5;6;7;8;9;10\n")
         .getBytes(java.nio.charset.Charset.forName("ISO-8859-1")))

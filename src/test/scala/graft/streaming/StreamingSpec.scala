@@ -1,15 +1,18 @@
 package graft.streaming
 
 import java.nio.charset.Charset
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.SparkSpec
-import graft.ingest.{AvroCodec, MemorySink, Pipeline, Sinks}
+import graft.core.Schemas
+import graft.ingest.{AvroCodec, CsvSource, MemorySink, ParquetSink, Pipeline, Sinks}
 
 /** Streaming surface s70–s74 (SURVEY.md §2.2): the reference's polling
   * loop upgraded to Structured Streaming, plus the state/watermark/dedup
@@ -21,21 +24,51 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(min: Int): Timestamp = new Timestamp(3600_000L * 24 + min * 60_000L)
 
-  private val header =
-    "Ano;Trimestre;Categoria;Tipo;CNPJ IF;Instituição financeira;Índice;" +
-      "Quantidade de reclamações reguladas procedentes;Quantidade de reclamações reguladas - outras;" +
-      "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
-      "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR\n"
-
   private def writeCsv(dir: String, name: String, rows: String*): Unit =
     Files.write(Paths.get(dir, name),
-      (header + rows.mkString("\n") + "\n").getBytes(Charset.forName("ISO-8859-1")))
+      ((CsvSource.bcbHeader +: rows).mkString("\n") + "\n").getBytes(Charset.forName("ISO-8859-1")))
+
+  /** Land a CSV into a prefix a running query is listing: write it under
+    * a hidden name (the file source skips `.`-files), then rename, so the
+    * listing never sees a half-written file. */
+  private def landCsv(dir: String, name: String, rows: String*): Unit = {
+    writeCsv(dir, s".$name.tmp", rows: _*)
+    Files.move(Paths.get(dir, s".$name.tmp"), Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** (file name, batch id) pairs of a file-source checkpoint's source
+    * log, plain and compacted entries alike. */
+  private def sourceLog(ckpt: String): Seq[(String, Long)] = {
+    val entry = "\"path\":\"([^\"]+)\".*\"batchId\":(\\d+)".r.unanchored
+    Files.list(Paths.get(ckpt, "sources", "0")).iterator().asScala.toSeq
+      .filterNot(_.getFileName.toString.startsWith("."))
+      .flatMap(p => Files.readAllLines(p).asScala)
+      .collect { case entry(path, id) => (path.split('/').last, id.toLong) }
+      .distinct
+  }
+
+  /** Decoded `cnpj_if` of every row in a ParquetSink's committed output. */
+  private def sinkKeys(out: String): Seq[String] =
+    AvroCodec.decodeFrame(spark, spark.read.parquet(out)).collect()
+      .map(_.getAs[String]("cnpj_if")).toSeq.sorted
+
+  private def withMaxPartitionBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Stage `names` as one-row CSVs whose CNPJ is the file's name, so a
+    * sink row names the file it came from. All files have equal size. */
+  private def stageFiles(dir: String, names: Seq[String]): Unit =
+    names.foreach(n => writeCsv(dir, s"$n.csv", s"2022;1º;C;B;$n;BANCO $n;2;3;4;5;6;7;8;9"))
 
   test("s70: file-stream ingest — CSV files appear, avro values come out") {
     val dir = tmpDir("s70_src")
     writeCsv(dir, "a.csv", "2022;1º;C;B;1;BANCO A;2;3;4;5;6;7;8;9")
     val q = Sinks.start(
-      Pipeline.valuesStream(spark, dir, maxFilesPerTrigger = 1),
+      Pipeline.valuesStream(spark, dir),
       MemorySink("s70_out"), Trigger.ProcessingTime(0))
     try {
       q.processAllAvailable()
@@ -58,7 +91,7 @@ class StreamingSpec extends SparkSpec {
     writeCsv(dir, "a.csv",
       "2022;1º;C;B;1;BANCO A;2;3;4;5;6;7;8;9",
       "2022;;C;B;2;BANCO RUIM;3;4;5;6;7;8;9;10")
-    val (values, bad) = Pipeline.valuesStreamLenient(spark, dir, maxFilesPerTrigger = 1)
+    val (values, bad) = Pipeline.valuesStreamLenient(spark, dir)
     val q = Sinks.start(values, MemorySink("s70b_out"), Trigger.ProcessingTime(0))
     try {
       q.processAllAvailable() // must NOT throw
@@ -68,6 +101,82 @@ class StreamingSpec extends SparkSpec {
       assert(decoded.head.getAs[String]("instituicao_financeira") == "BANCO A")
       assert(bad.value == 1L, s"bad-record metric = ${bad.value}, want 1")
     } finally q.stop()
+  }
+
+  test("s70c: Pipeline.run starts on an empty prefix and decodes the first file to land") {
+    val dir = tmpDir("s70c_src"); val out = tmpDir("s70c_out")
+    val q = Pipeline.run(spark, dir, ParquetSink(out, tmpDir("s70c_ckpt")),
+      Trigger.ProcessingTime(0))
+    try {
+      q.processAllAvailable()
+      landCsv(dir, "a.csv", "2022;1º;C;B;1;BANCO A;2;3;;5;6;7;8;9")
+      q.processAllAvailable()
+    } finally q.stop()
+    val rows = AvroCodec.decodeFrame(spark, spark.read.parquet(out)).collect()
+    assert(rows.length == 1)
+    // the BCB layout binds all 14 columns by position; R5 nulls the empty one
+    assert(Schemas.reclamacoesColumns.map(rows.head.getAs[String]) ==
+      Seq("2022", "1º", "C", "B", "1", "BANCO A", "2", "3", null, "5", "6", "7", "8", "9"))
+  }
+
+  test("s70d: a backlog is admitted as one task wave of bytes, not one batch per file") {
+    val dir = tmpDir("s70d_src")
+    val names = (0 until 6).map(i => f"f$i%02d")
+    stageFiles(dir, names)
+    // each run is a fresh query (own sink and checkpoint) over the same files
+    def availableNow(tag: String): (Map[String, Seq[Long]], Seq[String]) = {
+      val out = tmpDir(s"s70d_${tag}_out"); val ckpt = tmpDir(s"s70d_${tag}_ckpt")
+      val q = Pipeline.run(spark, dir, ParquetSink(out, ckpt), Trigger.AvailableNow())
+      try q.awaitTermination() finally q.stop()
+      (sourceLog(ckpt).groupMap(_._1)(_._2), sinkKeys(out))
+    }
+    val files = names.map(_ + ".csv").toSet
+
+    // default budget (cores × 128 MB): the whole backlog is one batch
+    val (wide, wideRows) = availableNow("wide")
+    assert(wide.keySet == files)
+    assert(wide.values.flatten.toSet.size == 1, s"batches: $wide")
+    assert(wideRows == names)
+
+    // a budget of `cores` files: the same backlog spreads over several
+    // batches, each file admitted once and no batch over its budget
+    val fileBytes = Files.size(Paths.get(dir, s"${names.head}.csv"))
+    val cores = spark.sparkContext.defaultParallelism
+    withMaxPartitionBytes(fileBytes) {
+      assert(CsvSource.batchByteBudget(spark) == cores * fileBytes)
+      val (narrow, narrowRows) = availableNow("narrow")
+      assert(narrow.keySet == files)
+      assert(narrow.values.forall(_.size == 1), s"a file under two batches: $narrow")
+      val perBatch = narrow.values.flatten.groupBy(identity).values.map(_.size)
+      assert(perBatch.size > 1, s"batches: $narrow")
+      assert(perBatch.max <= cores, s"batches: $narrow")
+      assert(narrowRows == names)
+    }
+  }
+
+  test("s70e: a producer stopped after its first batch restarts from its checkpoint, no file skipped or repeated") {
+    val dir = tmpDir("s70e_src"); val out = tmpDir("s70e_out"); val ckpt = tmpDir("s70e_ckpt")
+    val first = (0 until 6).map(i => f"f$i%02d")
+    val later = (0 until 3).map(i => f"g$i%02d")
+    stageFiles(dir, first)
+    val fileBytes = Files.size(Paths.get(dir, s"${first.head}.csv"))
+    // a budget below the backlog, so the stop lands mid-prefix
+    withMaxPartitionBytes(fileBytes) {
+      val q1 = Pipeline.run(spark, dir, ParquetSink(out, ckpt), Trigger.ProcessingTime(0))
+      try {
+        val deadline = System.currentTimeMillis + 60000
+        while (!Files.exists(Paths.get(ckpt, "commits", "0")) && q1.isActive &&
+          System.currentTimeMillis < deadline) Thread.sleep(10)
+        assert(Files.exists(Paths.get(ckpt, "commits", "0")), "first batch never committed")
+      } finally q1.stop()
+      stageFiles(dir, later)
+      val q2 = Pipeline.run(spark, dir, ParquetSink(out, ckpt), Trigger.ProcessingTime(0))
+      try q2.processAllAvailable() finally q2.stop()
+    }
+    assert(sinkKeys(out) == first ++ later)
+    val log = sourceLog(ckpt).groupMap(_._1)(_._2)
+    assert(log.keySet == (first ++ later).map(_ + ".csv").toSet)
+    assert(log.values.forall(_.size == 1), s"a file under two batches: $log")
   }
 
   test("s71: watermark drops late rows beyond the 10-minute bound") {
