@@ -1,6 +1,15 @@
 package graft
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** JSON writer for the bench and verify records (Spark's bundled
+    * Jackson + Scala module); ListMaps keep their field order. */
+  private[graft] val json: ObjectMapper =
+    new ObjectMapper().registerModule(DefaultScalaModule)
+
   /** q25/q28/q106 are legitimately no-oracle (sketch internals are
     * engine-local), so their accuracy contracts — HLL within 5% of exact
     * distinct, GK percentiles within 2% of exact, and q106's rollup
@@ -13,8 +22,8 @@ object Bench {
     * ApproxSpec's fixed test SF. Untimed (runs after the timed loop); a
     * violation marks the bench line `"ok":false` and logs loudly rather
     * than aborting, so the timing record survives for diagnosis.
-    * Returns a JSON object string. */
-  private def approxBounds(spark: SparkSession, sfDir: String): String = {
+    * Returns the record's `approx_bounds` object. */
+  private def approxBounds(spark: SparkSession, sfDir: String): ListMap[String, Any] = {
     import org.apache.spark.sql.functions._
     def rel(a: Double, e: Double) = math.abs(a - e) / e
     try {
@@ -70,11 +79,13 @@ object Bench {
       else System.err.println(
         f"[bench] approx bounds ok: q25 rel err $q25Err%.4f < .05, q28 $q28Err%.4f < .02, " +
           f"q106 union-vs-direct $q106VsDirect%.4f < .05, vs exact $q106Err%.4f < .05")
-      f"""{"q25_max_rel_err":$q25Err%.6f,"q28_max_rel_err":$q28Err%.6f,""" +
-        f""""q106_union_vs_direct_rel":$q106VsDirect%.6f,"q106_max_rel_err":$q106Err%.6f,"ok":$ok}"""
+      def r6(x: Double) = math.rint(x * 1e6) / 1e6
+      ListMap("q25_max_rel_err" -> r6(q25Err), "q28_max_rel_err" -> r6(q28Err),
+        "q106_union_vs_direct_rel" -> r6(q106VsDirect), "q106_max_rel_err" -> r6(q106Err),
+        "ok" -> ok)
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] approx-bound check failed: ${e.getMessage}")
-      s"""{"ok":false,"err":"${e.getClass.getSimpleName}"}"""
+      ListMap("ok" -> false, "err" -> e.getClass.getSimpleName)
     }
   }
 
@@ -178,8 +189,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = graft.core.GraftSession.localCpus
     // Measurement protocol (BASELINE.md §"Bench-gate protocol"):
     //   warm1+min2 (default) — per query one discarded warm rep, then
     //     min of two timed reps; the gate protocol since round 8 (single
@@ -196,25 +206,8 @@ object Bench {
     require(protocol == "warm1+min2" || protocol == "cold1",
       s"GRAFT_BENCH_PROTOCOL=$protocol — known protocols: warm1+min2, cold1")
     val quiesceWait = quiesce()
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE for cached plans — see GraftSession.builder's scaladoc (r16:
-      // cached frames otherwise materialize at the static partition
-      // count; measured q148 822→78 tasks, q111 428→56, q115 610→195)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // coalescing floor: the 1 MB default serialized compute-dense
-      // medium caches (GraftSession.AqeMinPartitionSize scaladoc)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.core.GraftSession.AqeMinPartitionSize)
-      .config("spark.ui.enabled", "false")
-    graft.core.GraftSession.localDirConfig.foreach { case (k, v) =>
-      // shuffle scratch on tmpfs — GraftSession.LocalDir scaladoc (r16:
-      // the root ext4's 143 µs/file-create serialized 32-wide shuffle
-      // writers in open0; measured q115 Σtask-time 72→37 s)
-      spark0.config(k, v)
-    }
-    val spark = spark0.getOrCreate()
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus,
+      Map("spark.ui.enabled" -> "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadStart = loadAvg1m()
     val stealStart = stealJiffies()
@@ -236,17 +229,23 @@ object Bench {
       .groupBy("r_regionkey").count().count()
     // ScaleProbe's measurement protocol, adopted per round-8 review: one
     // discarded warm rep (JIT/codegen/encoder init — measured 5.3 s cold
-    // vs 0.5 s warm on q45 via Profile) then two timed reps, recording
+    // vs 0.5 s warm on q45) then two timed reps, recording
     // the MIN. Back-to-back round-8 totals swung 37% (86.2 vs 62.9 s)
     // under the single-rep protocol; min-of-2-warm removes the
     // cold-position and GC-phase jitter that made per-query cross-round
     // diffs mushy. Caches drain between reps so every rep is a full
     // execution on a warm JVM, not a cache read.
+    // A query that throws is a recorded failure ("failed":[...]), never
+    // a timing: it stays out of `queries` and `total`, and is not re-run
+    // (its remaining reps would only re-throw).
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       System.err.println(s"[bench] start $name")
-      def rep(): Double = {
+      def rep(): Option[Double] = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          false
+        }
         graft.core.CacheScope.drain() // per-query cache lifecycle: reuse inside, none after
         val dt = (System.nanoTime() - t0) / 1e9
         // Untimed heap quiesce: without it, GC debt accumulated by a heavy
@@ -264,25 +263,24 @@ object Bench {
           .foreach(_.unpersist(blocking = false))
         System.gc()
         System.gc()
-        dt
+        if (ok) Some(dt) else None
       }
-      if (protocol == "cold1") {
-        val t = rep()
-        System.err.println(f"[bench] done  $name cold $t%.2f s")
-        (name, t, Seq(t))
-      } else {
-        val warm = rep()
-        val timed = Seq(rep(), rep())
-        System.err.println(f"[bench] done  $name min ${timed.min}%.2f s " +
-          f"(warm $warm%.2f, reps ${timed.map(t => f"$t%.2f").mkString("/")})")
-        (name, timed.min, timed)
-      }
+      val timed =
+        if (protocol == "cold1") rep().map { t =>
+          System.err.println(f"[bench] done  $name cold $t%.2f s")
+          Seq(t)
+        }
+        else for (warm <- rep(); a <- rep(); b <- rep()) yield {
+          System.err.println(f"[bench] done  $name min ${math.min(a, b)}%.2f s " +
+            f"(warm $warm%.2f, reps $a%.2f/$b%.2f)")
+          Seq(a, b)
+        }
+      name -> timed
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val reps = results.map { case (k, _, ts) => s"\"" + k + "\":" + ts.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val reps = results.collect { case (k, Some(ts)) => k -> ts }
+    val failed = results.collect { case (k, None) => k }
+    val qs = ListMap(reps.map { case (k, ts) => k -> ts.min }: _*)
+    val total = qs.values.sum
     val bounds = approxBounds(spark, sfDir)
     // label-memo posture rides every record: q131/q145/q146/q148 read
     // the materialized LabelTable unless GRAFT_LABEL_MEMO=0 forces
@@ -294,8 +292,8 @@ object Bench {
     // are the only ones guaranteed to survive into BENCH_r{N}.json.
     // VERDICT r14 item 2: the r14 artifact's total had to be recovered
     // from BENCH_HISTORY because only the head carried it — total,
-    // n_queries, and protocol now ride the tail alongside the
-    // contention fields, making the artifact self-contained (a
+    // n_queries (attempted), failed, and protocol ride the tail alongside
+    // the contention fields, making the artifact self-contained (a
     // contended official row also classifies itself via steal_cpus).
     // The head keeps the driver-contract "metric"/"value" pair.
     val stealCpus: Double = {
@@ -305,7 +303,12 @@ object Bench {
       // USER_HZ is 100 by kernel ABI for /proc fields
       else math.round(((s2 - stealStart) / 100.0 / elapsed) * 1000) / 1000.0
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","label_memo":"$labelMemo","queries":$qs,"approx_bounds":$bounds,"sf":"$sfDir","load_start":$loadStart,"load_end":${loadAvg1m()},"steal_cpus":$stealCpus,"quiesce_wait_sec":$quiesceWait,"protocol":"$protocol","n_queries":${results.size},"total":$total}"""
+    val line = json.writeValueAsString(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec", "label_memo" -> labelMemo,
+      "queries" -> qs, "approx_bounds" -> bounds, "sf" -> sfDir,
+      "load_start" -> loadStart, "load_end" -> loadAvg1m(), "steal_cpus" -> stealCpus,
+      "quiesce_wait_sec" -> quiesceWait, "protocol" -> protocol, "failed" -> failed,
+      "n_queries" -> results.size, "total" -> total))
     println(line)
     // stdout tail-capture can truncate long runs; the file copy is the
     // durable record (driver picks up either). Both files anchor to the
@@ -326,13 +329,12 @@ object Bench {
     // first ~25 queries, so cross-round per-query diffs need this record.
     // Best-effort — an unwritable path must not fail the bench run itself
     try {
-      // cpus is a raw env string ("*" is a legal local[*] spec) — only a
-      // pure integer may be emitted unquoted, anything else would corrupt
-      // every downstream parse of the whole jsonl file
-      val cpusJson =
-        if (cpus.matches("[0-9]+")) cpus
-        else "\"" + cpus.replaceAll("[\"\\\\]", "") + "\""
-      val stamped = s"""{"ts":"${java.time.Instant.now()}","sf":"$sfDir","cpus":$cpusJson,"protocol":"$protocol","label_memo":"$labelMemo","n_queries":${results.size},"load_start":$loadStart,"load_end":${loadAvg1m()},"steal_cpus":$stealCpus,"quiesce_wait_sec":$quiesceWait,"total":$total,"queries":$qs,"reps":$reps}"""
+      val stamped = json.writeValueAsString(ListMap(
+        "ts" -> java.time.Instant.now().toString, "sf" -> sfDir, "cpus" -> cpus,
+        "protocol" -> protocol, "label_memo" -> labelMemo, "n_queries" -> results.size,
+        "load_start" -> loadStart, "load_end" -> loadAvg1m(), "steal_cpus" -> stealCpus,
+        "quiesce_wait_sec" -> quiesceWait, "total" -> total, "queries" -> qs,
+        "reps" -> ListMap(reps: _*), "failed" -> failed))
       java.nio.file.Files.writeString(
         root.resolve("BENCH_HISTORY.jsonl"), stamped + "\n",
         java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)

@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import scala.reflect.{classTag, ClassTag}
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.core.Schemas
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, MinHashSignature, SimHash64, SortedIntersect, SquaredL2}
 import graft.ingest.{AvroDecodeExpression, AvroEncodeExpression}
 import graft.plans.AsOfJoinStrategy
 
@@ -17,66 +20,29 @@ import graft.plans.AsOfJoinStrategy
   *
   * wires the custom planner strategy (the distributed as-of join,
   * `graft.plans.AsOfJoinExec`) and the engine's SQL functions
-  * (`cosine_sim`, `avro_encode`, `avro_decode`, `minhash_sig`,
-  * `simhash64`, `sorted_intersect`, `squared_l2`; the reference-table
-  * kernels `set_hit_count`/`set_keep_positions`/`srp_bucket` stay
-  * Column-API-only — their probe tables and projection matrices are
-  * driver-built values, not SQL literals) into every session of
-  * the cluster — the declarative alternative to the imperative
-  * `GraftSession.getOrCreate()` / `AsOfJoin.install(spark)` calls, and
-  * the standard way a Spark library ships Catalyst extensions. */
+  * ([[GraftExtensions.functions]]: `cosine_sim`, `avro_encode`,
+  * `avro_decode`, `minhash_sig`, `simhash64`, `sorted_intersect`,
+  * `squared_l2`, `bloom_filter_agg`, `might_contain`; the
+  * reference-table kernels `set_hit_count`/`set_keep_positions`/
+  * `srp_bucket` stay Column-API-only — their probe tables and projection
+  * matrices are driver-built values, not SQL literals) into every session
+  * of the cluster. `GraftSession.builder` installs the same extension, so
+  * this is the one place an engine function is defined — the standard
+  * way a Spark library ships Catalyst extensions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  import GraftExtensions.checkArity
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      checkArity("cosine_sim", 2)(exprs => CosineSimilarity(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("avro_encode"),
-      new ExpressionInfo(classOf[AvroEncodeExpression].getName, "avro_encode"),
-      checkArity("avro_encode", 1)(exprs =>
-        AvroEncodeExpression(exprs.head, Schemas.reclamacoesAvsc))))
-    ext.injectFunction((
-      FunctionIdentifier("avro_decode"),
-      new ExpressionInfo(classOf[AvroDecodeExpression].getName, "avro_decode"),
-      checkArity("avro_decode", 1)(exprs =>
-        AvroDecodeExpression(exprs.head, Schemas.reclamacoesAvsc))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSignature].getName, "minhash_sig"),
-      checkArity("minhash_sig", 2)(exprs => graft.functions.MinHashSignature(
-        exprs(0), graft.functions.MinHashSignature.kOf(exprs(1))))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, "simhash64"),
-      checkArity("simhash64", 1)(exprs => graft.functions.SimHash64(exprs.head))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect"),
-      new ExpressionInfo(classOf[graft.functions.SortedIntersect].getName, "sorted_intersect"),
-      checkArity("sorted_intersect", 2)(exprs =>
-        graft.functions.SortedIntersect(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("squared_l2"),
-      new ExpressionInfo(classOf[graft.functions.SquaredL2].getName, "squared_l2"),
-      checkArity("squared_l2", 2)(exprs =>
-        graft.functions.SquaredL2(exprs(0), exprs(1)))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }
 
 object GraftExtensions {
 
-  /** Arity guard for function builders — injected here AND reused by the
-    * per-function `register` methods, so a session-scoped registration
-    * can never clobber an injected builder with a weaker one: a
-    * wrong-arity SQL call (`minhash_sig(arr)`, `cosine_sim(a)`) surfaces
-    * as the standard WRONG_NUM_ARGS AnalysisException naming the
-    * function — not an IndexOutOfBoundsException escaping the
-    * analyzer. */
-  private[graft] def checkArity(name: String, expected: Int)(
+  /** Arity guard for function builders: a wrong-arity SQL call
+    * (`minhash_sig(arr)`, `cosine_sim(a)`) surfaces as the standard
+    * WRONG_NUM_ARGS AnalysisException naming the function — not an
+    * IndexOutOfBoundsException escaping the analyzer. */
+  private def checkArity(name: String, expected: Int)(
       build: Seq[Expression] => Expression): Seq[Expression] => Expression =
     exprs => {
       if (exprs.length != expected) {
@@ -90,4 +56,49 @@ object GraftExtensions {
       }
       build(exprs)
     }
+
+  private def fn[E: ClassTag](name: String, arity: Int)(
+      build: Seq[Expression] => Expression): SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name),
+      checkArity(name, arity)(build))
+
+  /** Every engine SQL function as (name, arity, builder).
+    *
+    * `bloom_filter_agg(xxhash64(key), estItems, numBits)` → binary and
+    * `might_contain(bf, xxhash64(key))` → boolean expose Spark's OWN
+    * runtime-filter Bloom expressions (the machinery behind
+    * `spark.sql.optimizer.runtime.bloomFilter.*`), which ship in the
+    * catalyst jar but sit on the internal function registry only. q128
+    * wants the rewrite as an explicit, plan-pinned operator rather than
+    * an optimizer heuristic; nothing is reimplemented. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn[CosineSimilarity]("cosine_sim", 2)(e => CosineSimilarity(e(0), e(1))),
+    fn[AvroEncodeExpression]("avro_encode", 1)(e =>
+      AvroEncodeExpression(e.head, Schemas.reclamacoesAvsc)),
+    fn[AvroDecodeExpression]("avro_decode", 1)(e =>
+      AvroDecodeExpression(e.head, Schemas.reclamacoesAvsc)),
+    fn[MinHashSignature]("minhash_sig", 2)(e =>
+      MinHashSignature(e(0), MinHashSignature.kOf(e(1)))),
+    fn[SimHash64]("simhash64", 1)(e => SimHash64(e.head)),
+    fn[SortedIntersect]("sorted_intersect", 2)(e => SortedIntersect(e(0), e(1))),
+    fn[SquaredL2]("squared_l2", 2)(e => SquaredL2(e(0), e(1))),
+    fn[BloomFilterAggregate]("bloom_filter_agg", 3)(e =>
+      new BloomFilterAggregate(e(0), e(1), e(2)).toAggregateExpression()),
+    fn[BloomFilterMightContain]("might_contain", 2)(e =>
+      BloomFilterMightContain(e(0), e(1))))
+
+  /** Install the extension into a session that was built WITHOUT it (a
+    * spark-shell `spark`, a host application's session): registers
+    * [[functions]] and appends the as-of strategy. Idempotent — a session
+    * that already resolves `cosine_sim` (built by `GraftSession.builder`
+    * or with `spark.sql.extensions=graft.GraftExtensions`) is left
+    * untouched, so the strategy is never planned twice. */
+  private[graft] def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("cosine_sim"))) {
+      functions.foreach { case (id, info, build) => registry.registerFunction(id, info, build) }
+      spark.experimental.extraStrategies :+= AsOfJoinStrategy
+    }
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +8,9 @@ object Verify {
     // optional 3rd arg: comma-separated query subset (local iteration;
     // the driver always passes exactly two args → full dump)
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE for cached plans — same posture as Bench (GraftSession
-      // scaladoc), so the correctness dump exercises the benched plans
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.core.GraftSession.AqeMinPartitionSize)
-      .config("spark.ui.enabled", "false")
-    // shuffle scratch on tmpfs — GraftSession.LocalDir scaladoc
-    graft.core.GraftSession.localDirConfig.foreach { case (k, v) =>
-      spark0.config(k, v) }
-    val spark = spark0.getOrCreate()
+    val cpus = graft.core.GraftSession.localCpus
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus,
+      Map("spark.ui.enabled" -> "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // the declared-surface manifest, written BEFORE any query runs: a
@@ -33,8 +19,7 @@ object Verify {
     // downstream gate (tools/second_sf_sweep.py) cannot tell "declared
     // but crashed" from "never existed"
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted
-        .map(n => "\"" + n + "\"").mkString("[", ",", "]"))
+      Bench.json.writeValueAsString(SparkEntry.queries.keys.toSeq.sorted))
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -45,21 +30,8 @@ object Verify {
       }
       finally graft.core.CacheScope.drain() // per-query cache lifecycle
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Bench.json.writeValueAsString(SparkEntry.oracleSql))
     spark.stop()
   }
 }

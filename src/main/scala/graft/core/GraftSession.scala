@@ -3,8 +3,9 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The engine's session entry point: a SparkSession builder carrying the
-  * configuration this library is designed against, plus registration of
-  * the engine's SQL functions (avro_encode/avro_decode, cosine_sim).
+  * configuration this library is designed against ([[GraftSession.conf]])
+  * and the engine's extension (`graft.GraftExtensions`: SQL functions and
+  * the as-of join strategy).
   *
   * Scale posture defaults (overridable via `extra`):
   *  - AQE on (runtime re-plan: skew joins, coalesced shuffles) — Spark 4
@@ -73,16 +74,8 @@ object GraftSession {
   }
 
   /** [[LocalDir]] as builder-ready config entries (empty when default). */
-  val localDirConfig: Map[String, String] =
+  private val localDirConfig: Map[String, String] =
     LocalDir.map("spark.local.dir" -> _).toMap
-
-  /** Apply [[localDirConfig]] to a raw builder (the tool mains'
-    * spelling — Builder is mutable, so wrapping the head of the chain
-    * configures the whole chain). */
-  def withLocalDir(b: SparkSession.Builder): SparkSession.Builder = {
-    localDirConfig.foreach { case (k, v) => b.config(k, v) }
-    b
-  }
 
   /** RocksDB-backed streaming state — the production posture once join/
     * dedup/session state outgrows executor heap (the default HDFS-backed
@@ -102,48 +95,52 @@ object GraftSession {
       "spark.sql.streaming.stateStore.providerClass" -> RocksDBProviderClass,
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
+  /** The engine's session settings — every key the shipped session sets
+    * besides the per-call geometry (master, shuffle partitions), the
+    * scratch directory and the state store. */
+  val conf: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // Let AQE re-plan CACHED plans too (upstream default is false for
+    // output-partitioning stability of cache consumers). Off, every
+    // `.persist` materializes at the static spark.sql.shuffle.partitions
+    // — the engine's scoped caches (pair/shingle/edge frames, graph
+    // intermediates) then hold dozens of near-empty blocks, every
+    // downstream stage launches shuffle.partitions tasks regardless of
+    // data, and a union of k cached frames multiplies (q148's edge
+    // checkpoint materialized 4×32 = 128 partitions for ~20 KB; its
+    // propagation rounds each paid 128-task stages). On, AQE sizes
+    // cached partitions by bytes (advisoryPartitionSizeInBytes), which
+    // is the right answer at EVERY scale: measured at sf0.1/local[32]
+    // (r16, same contended window, back-to-back) q148 822→78 tasks and
+    // Σtask-time 74→2.7 s, q111 428→56 tasks 50→6 s, q115 610→195
+    // tasks 81→27 s. The engine never relies on a cache's output
+    // partitioning (no co-partitioned cache⋈cache joins; join keys are
+    // re-exchanged or broadcast), so the stability caveat is moot here.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    // coalescing floor — see AqeMinPartitionSize scaladoc
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> AqeMinPartitionSize,
+    "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.parquet.compression.codec" -> "zstd")
+
+  /** The one session configuration: the shipped engine, Bench, Verify,
+    * the tools and the test suites all build through here, varying only
+    * the geometry and `extra` (e.g. `spark.ui.enabled=false`). */
   def builder(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
       extra: Map[String, String] = Map.empty,
       largeState: Boolean = sys.env.get("GRAFT_STATE_STORE").contains("rocksdb"))
-      : SparkSession.Builder = {
-    val b = SparkSession.builder()
+      : SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft-engine")
       // same wiring as spark.sql.extensions=graft.GraftExtensions —
       // as-of join strategy + engine SQL functions at session build
       .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Let AQE re-plan CACHED plans too (upstream default is false for
-      // output-partitioning stability of cache consumers). Off, every
-      // `.persist` materializes at the static spark.sql.shuffle.partitions
-      // — the engine's scoped caches (pair/shingle/edge frames, graph
-      // intermediates) then hold dozens of near-empty blocks, every
-      // downstream stage launches shuffle.partitions tasks regardless of
-      // data, and a union of k cached frames multiplies (q148's edge
-      // checkpoint materialized 4×32 = 128 partitions for ~20 KB; its
-      // propagation rounds each paid 128-task stages). On, AQE sizes
-      // cached partitions by bytes (advisoryPartitionSizeInBytes), which
-      // is the right answer at EVERY scale: measured at sf0.1/local[32]
-      // (r16, same contended window, back-to-back) q148 822→78 tasks and
-      // Σtask-time 74→2.7 s, q111 428→56 tasks 50→6 s, q115 610→195
-      // tasks 81→27 s. The engine never relies on a cache's output
-      // partitioning (no co-partitioned cache⋈cache joins; join keys are
-      // re-exchanged or broadcast), so the stability caveat is moot here.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // coalescing floor — see AqeMinPartitionSize scaladoc
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        AqeMinPartitionSize)
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-    (localDirConfig ++ stateStoreConfigs(largeState) ++ extra).foldLeft(b) {
-      case (bb, (k, v)) => bb.config(k, v)
-    }
-  }
+      .config(conf ++ Map("spark.sql.shuffle.partitions" -> shufflePartitions.toString) ++
+        localDirConfig ++ stateStoreConfigs(largeState) ++ extra)
 
   /** Builder pre-wired with the settings' S3A credential mapping — the
     * production path for reading the reference's `s3a://` source root.
@@ -154,26 +151,23 @@ object GraftSession {
       extra: Map[String, String] = Map.empty): SparkSession.Builder =
     builder(master, shufflePartitions, settings.s3aConfigs ++ extra)
 
-  /** Build the session and register the engine's SQL functions. A fresh
-    * session gets them twice — injected by `builder()`'s
-    * `withExtensions(GraftExtensions)` AND re-registered here — because
-    * `getOrCreate` can also ATTACH to a pre-existing session built
-    * without the extension, where only these calls provide the
-    * functions. The double registration is safe precisely because every
-    * `register` builder wraps the same `GraftExtensions.checkArity`
-    * guard as the injected one (a round-10 review caught the unguarded
-    * spelling clobbering the checked builders). */
+  /** Local core count of the driver mains (Bench, Verify, the tools):
+    * `SPARK_GRAFT_CPUS`, default every available processor. */
+  def localCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Build the session, or attach to the one already running. A session
+    * built here carries the engine's functions and as-of strategy via
+    * the extension. Attaching to a session built elsewhere WITHOUT the
+    * extension (a spark-shell `spark`) only applies the runtime SQL
+    * settings — Spark installs extensions at session construction — so
+    * the functions and strategy are then installed once, idempotently
+    * (`GraftExtensions.install`). */
   def getOrCreate(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors(),
       extra: Map[String, String] = Map.empty): SparkSession = {
     val spark = builder(master, shufflePartitions, extra).getOrCreate()
-    graft.ingest.AvroCodec.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.MinHashSignature.register(spark)
-    graft.functions.SimHash64.register(spark)
-    graft.functions.SortedIntersect.register(spark)
-    graft.functions.SquaredL2.register(spark)
-    graft.functions.BloomJoin.register(spark)
+    graft.GraftExtensions.install(spark)
     spark
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -90,13 +89,4 @@ object MinHashSignature {
     require(k > 0, s"minhash_sig: k must be positive, got $k")
     k
   }
-
-  /** Session-scoped SQL registration: `minhash_sig(arr, k)` (k must be a
-    * foldable positive int literal). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      graft.GraftExtensions.checkArity("minhash_sig", 2)(
-        exprs => MinHashSignature(exprs(0), kOf(exprs(1)))),
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -71,12 +70,4 @@ case class SimHash64(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
-}
-
-object SimHash64 {
-  /** Session-scoped SQL registration: `simhash64(arr)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", graft.GraftExtensions.checkArity("simhash64", 1)(
-        exprs => SimHash64(exprs.head)), "scala_udf")
 }

@@ -88,11 +88,4 @@ object SortedIntersect {
   def apply(a: Column, b: Column): Column =
     ColumnBridge.column(
       SortedIntersect(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL surface: `sorted_intersect(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect",
-      graft.GraftExtensions.checkArity("sorted_intersect", 2)(
-        exprs => SortedIntersect(exprs(0), exprs(1))), "scala_udf")
 }

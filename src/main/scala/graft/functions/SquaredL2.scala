@@ -73,11 +73,4 @@ object SquaredL2 {
   def apply(a: Column, b: Column): Column =
     ColumnBridge.column(
       SquaredL2(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** SQL surface: `squared_l2(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "squared_l2",
-      graft.GraftExtensions.checkArity("squared_l2", 2)(
-        exprs => SquaredL2(exprs(0), exprs(1))), "scala_udf")
 }

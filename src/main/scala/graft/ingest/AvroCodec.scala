@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{expr, struct}
+import org.apache.spark.sql.functions.{col, expr, struct}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -148,73 +149,44 @@ case class AvroDecodeExpression(child: Expression, avscJson: String,
 
 object AvroCodec {
 
-  /** Register avro_encode/avro_decode for this session (Spark 4's Column
-    * API is node-based, so SQL registration + `expr` is the clean route
-    * from an Expression to a Column). */
-  def register(spark: SparkSession, avscJson: String = Schemas.reclamacoesAvsc): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avro_encode", graft.GraftExtensions.checkArity("avro_encode", 1)(
-        exprs => AvroEncodeExpression(exprs.head, avscJson)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avro_decode", graft.GraftExtensions.checkArity("avro_decode", 1)(
-        exprs => AvroDecodeExpression(exprs.head, avscJson)), "scala_udf")
-  }
+  /** The canonical frame's 14 columns as the struct the encoder reads. */
+  private def record(canonical: DataFrame): Column =
+    struct(Schemas.reclamacoesColumns.map(canonical.col): _*).as("r")
+
+  private def attr(name: String): Expression = ColumnBridge.expression(col(name))
 
   /** Canonical 14-column frame → single binary `value` column (the Kafka
     * message body shape, `app.py:153`). */
-  def encodeFrame(spark: SparkSession, canonical: DataFrame): DataFrame = {
-    register(spark)
-    canonical
-      .select(struct(Schemas.reclamacoesColumns.map(canonical.col): _*).as("r"))
-      .select(expr("avro_encode(r)").as("value"))
-  }
+  def encodeFrame(spark: SparkSession, canonical: DataFrame): DataFrame =
+    canonical.select(record(canonical)).select(ColumnBridge.column(
+      AvroEncodeExpression(attr("r"), Schemas.reclamacoesAvsc)).as("value"))
 
   /** Lenient flavor: rows that violate the wire schema (null in a
     * required field) are dropped and counted instead of failing the
     * batch/micro-batch — returns the value frame plus the live
-    * bad-record counter (SURVEY §7.3's promised metric). */
-  /** Per-call suffix for the lenient function name: a session-global
-    * shared name would let two interleaved calls bind a frame to the
-    * other call's accumulator (register-then-analyze race), and the last
-    * registration would silently win for SQL users. Registry growth is
-    * bounded by call count (names are tiny). */
-  private val lenientSeq = new java.util.concurrent.atomic.AtomicLong()
-
+    * bad-record counter (SURVEY §7.3's promised metric). Each call binds
+    * its own accumulator into its own expression. */
   def encodeFrameLenient(spark: SparkSession, canonical: DataFrame)
       : (DataFrame, org.apache.spark.util.LongAccumulator) = {
     val acc = spark.sparkContext.longAccumulator("graft.avro.bad_records")
-    val fn = s"avro_encode_lenient_${lenientSeq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fn,
-      exprs => AvroEncodeExpression(exprs.head, Schemas.reclamacoesAvsc,
-        lenient = true, badRecords = Some(acc)),
-      "scala_udf")
-    val values = canonical
-      .select(struct(Schemas.reclamacoesColumns.map(canonical.col): _*).as("r"))
-      .select(expr(s"$fn(r)").as("value"))
+    val values = canonical.select(record(canonical))
+      .select(ColumnBridge.column(AvroEncodeExpression(attr("r"),
+        Schemas.reclamacoesAvsc, lenient = true, badRecords = Some(acc))).as("value"))
       .filter(expr("value IS NOT NULL")) // nulled-out poison rows: counted, not shipped
     (values, acc)
   }
 
   /** value column → canonical wire columns (round-trip/test path). */
-  def decodeFrame(spark: SparkSession, encoded: DataFrame): DataFrame = {
-    register(spark)
-    encoded.select(expr("avro_decode(value)").as("r")).select("r.*")
-  }
+  def decodeFrame(spark: SparkSession, encoded: DataFrame): DataFrame =
+    encoded.select(ColumnBridge.column(
+      AvroDecodeExpression(attr("value"), Schemas.reclamacoesAvsc)).as("r")).select("r.*")
 
   /** value column → READER-schema columns via Avro writer→reader
     * resolution (see [[AvroDecodeExpression]]): dropped writer fields
-    * are skipped, reader-only fields take their declared defaults.
-    * The function name carries a per-call suffix for the same
-    * register-then-analyze race [[encodeFrameLenient]] documents. */
+    * are skipped, reader-only fields take their declared defaults. */
   def decodeFrameEvolved(spark: SparkSession, encoded: DataFrame,
       readerAvscJson: String,
-      writerAvscJson: String = Schemas.reclamacoesAvsc): DataFrame = {
-    val fn = s"avro_decode_evolved_${lenientSeq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fn, graft.GraftExtensions.checkArity(fn, 1)(exprs =>
-        AvroDecodeExpression(exprs.head, writerAvscJson,
-          Some(readerAvscJson))), "scala_udf")
-    encoded.select(expr(s"$fn(value)").as("r")).select("r.*")
-  }
+      writerAvscJson: String = Schemas.reclamacoesAvsc): DataFrame =
+    encoded.select(ColumnBridge.column(AvroDecodeExpression(attr("value"),
+      writerAvscJson, Some(readerAvscJson))).as("r")).select("r.*")
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -150,14 +150,10 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
 }
 
 /** User-facing API. Left rows must be sorted-joinable on long-valued key
-  * and time columns; timestamps are converted to epoch microseconds. */
+  * and time columns; timestamps are converted to epoch microseconds.
+  * Planning needs [[AsOfJoinStrategy]], which `graft.GraftExtensions`
+  * installs in every session `GraftSession` builds or attaches to. */
 object AsOf {
-
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
 
   /** Long-valued view of a column: TimestampType already evaluates to its
     * internal epoch-microsecond Long (so does LongType); anything else
@@ -182,7 +178,6 @@ object AsOf {
       rightTieBreak: Option[String] = None,
       outer: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n)

@@ -254,7 +254,6 @@ object CorpusOps {
     * (argmax assignment) and q100 (IVF probe lists). */
   private def centroidScores(spark: SparkSession, dir: String,
       k: Int = 8): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
     val v = t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val cent = v.filter(col("vec_id") < k)
@@ -312,7 +311,6 @@ object CorpusOps {
     * srpBits dial (bits + ⌈log2 k⌉ at k× data), the same operating
     * procedure q92 documents. */
   private[graft] def q75WithGeometry(g: graft.core.SketchGeometry): Q = (spark, dir) => {
-    graft.functions.CosineSimilarity.register(spark)
     val v = t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("bkt", LlmOps.srpBucket(col("e"), g))
@@ -484,7 +482,6 @@ object CorpusOps {
     * sweeps m for the compression-vs-recall curve. */
   private[graft] def q101WithPq(k: Int, nProbe: Int, m: Int, ks: Int,
       shortlist: Int): Q = (spark, dir) => {
-    graft.functions.CosineSimilarity.register(spark)
     val dim = LlmOps.geom.embeddingDim
     require(dim % m == 0, s"embeddingDim $dim not divisible into $m sub-spaces")
     val sub = dim / m
@@ -1600,7 +1597,6 @@ object CorpusOps {
     * stays linear — the "k grows with n" operating procedure the
     * SemDeDup scaladoc promises). */
   private[graft] def q110WithCodebook(kCells: Int): Q = (spark, dir) => {
-    graft.functions.CosineSimilarity.register(spark)
     val dim = LlmOps.geom.embeddingDim
     val v = t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))

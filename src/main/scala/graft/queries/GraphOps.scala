@@ -20,13 +20,14 @@ object GraphOps {
   /** Storage level for the graph intermediates (q111's edges/deg, q115's
     * co/arcs/adj): MEMORY_AND_DISK_SER, chosen by measurement, not
     * theory (VERDICT r10 item 6). The same-JVM interleaved A/B
-    * ([[graft.tools.GraphPersistProbe]], 2026-08-14, sf0.1, contended
+    * (a same-JVM interleaved probe, 2026-08-14, sf0.1, contended
     * boot, 5 rounds) read: q111 SER 2.08–2.23 s vs DISK 2.82–3.53 s —
     * a ~0.7 s win in EVERY round, not noise (the edge cache is
     * re-scanned twice per rank round, so smaller serialized blocks cut
     * exactly the memory-bandwidth footprint the co-tenant contention
     * multiplies); q115 a wash on mins (4.34 vs 4.44 s) with SER the
-    * more outlier-robust arm (worst rounds 5.35 vs 11.99 s). Env-dialed
+    * more outlier-robust arm (worst rounds 5.35 vs 11.99 s) — on record
+    * in SURVEY.md and OPTIMIZATION_r15.md. Env-dialed
     * (`GRAFT_GRAPH_PERSIST=MEMORY_AND_DISK`) for a CPU-starved,
     * bandwidth-rich deployment where the trade reverses. */
   private[graft] val GraphPersistLevel: org.apache.spark.storage.StorageLevel =
@@ -76,10 +77,9 @@ object GraphOps {
 
   /** `maxBroadcastNodes` exposed for the spec: GraphOpsSpec pins the
     * broadcast and shuffle spellings row-identical (the fallback is a
-    * tested execution path, not a comment). `persistLevel` exposed for
-    * [[graft.tools.GraphPersistProbe]] — see [[GraphPersistLevel]]. */
-  private[graft] def q111WithStrategy(rounds: Int, maxBroadcastNodes: Long,
-      persistLevel: org.apache.spark.storage.StorageLevel = GraphPersistLevel): Q =
+    * tested execution path, not a comment). Intermediates persist at
+    * [[GraphPersistLevel]]. */
+  private[graft] def q111WithStrategy(rounds: Int, maxBroadcastNodes: Long): Q =
     (spark, dir) => {
     require(rounds >= 1, s"pagerank needs >= 1 round, got $rounds")
     val trade = t(spark, dir, "orders")
@@ -95,10 +95,10 @@ object GraphOps {
     val edges = graft.core.CacheScope.persist(
       graft.queries.LlmOps.symmetrize(
         trade.select(col("c").as("d1"), col("s").as("d2"))),
-      persistLevel)
+      GraphPersistLevel)
     val deg = graft.core.CacheScope.persist(
       edges.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg")), persistLevel)
+        .agg(count(lit(1)).as("outdeg")), GraphPersistLevel)
     // the one driver-side scalar: N for the seed/teleport constant —
     // and the broadcast dial: state is exactly one row per node, so
     // below the node cap each round's state ships TO the cached edge
@@ -196,9 +196,8 @@ object GraphOps {
   /** `maxBroadcastArcs` exposed for the spec: GraphOpsSpec pins the
     * broadcast and shuffle adjacency spellings row-identical (the
     * above-cap fallback is a tested execution path, not a comment).
-    * `persistLevel` exposed for [[graft.tools.GraphPersistProbe]]. */
-  private[graft] def q115WithStrategy(maxWidth: Int, maxBroadcastArcs: Long,
-      persistLevel: org.apache.spark.storage.StorageLevel = GraphPersistLevel): Q =
+    * Intermediates persist at [[GraphPersistLevel]]. */
+  private[graft] def q115WithStrategy(maxWidth: Int, maxBroadcastArcs: Long): Q =
     (spark, dir) => {
     require(maxWidth >= 2, s"order-width cap $maxWidth admits no pairs")
     val li0 = t(spark, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
@@ -216,7 +215,7 @@ object GraphOps {
           col("a.l_partkey") < col("b.l_partkey"))
       .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
       .distinct()
-    graft.core.CacheScope.persist(co, persistLevel)
+    graft.core.CacheScope.persist(co, GraphPersistLevel)
     // one cached-co scan emitting both endpoints row-locally, not two
     // union branches each re-scanning the cache (r16)
     val deg = co.select(explode(array(col("u"), col("v"))).as("node"))
@@ -227,13 +226,13 @@ object GraphOps {
       .join(deg.select(col("node").as("vn"), col("deg").as("dv")), col("v") === col("vn"))
       .select(when(fwd, col("u")).otherwise(col("v")).as("src"),
         when(fwd, col("v")).otherwise(col("u")).as("dst")),
-      persistLevel)
+      GraphPersistLevel)
     // one driver scalar (q68's convergence-scalar pattern): materializes
     // the arc persist and picks the strategy for both adjacency attaches
     val adj = graft.core.CacheScope.persist(
       arcs.groupBy(col("src"))
         .agg(sort_array(collect_list(col("dst"))).as("nbrs")),
-      persistLevel)
+      GraphPersistLevel)
     // the one driver scalar, now read THROUGH the adjacency: Σ|N⁺(src)|
     // IS the arc count, and aggregating it off `adj` materializes BOTH
     // caches (arcs upstream, adj itself) in this single action — r16:

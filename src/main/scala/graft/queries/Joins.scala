@@ -319,7 +319,6 @@ object Joins {
     * semantically invisible — which is exactly what the hash gate
     * proves. */
   val q128JoinBloomPrefilter: Q = (spark, dir) => {
-    graft.functions.BloomJoin.register(spark)
     val urgent = t(spark, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_totalprice"))

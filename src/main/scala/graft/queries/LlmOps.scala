@@ -170,7 +170,6 @@ object LlmOps {
     // persisted: three consumers below (band explode + two verify joins)
     // would otherwise each recompute shingling + 12 minhash passes from
     // the scan — Spark reuses exchanges, not arbitrary subtrees
-    graft.functions.MinHashSignature.register(spark)
     // shingle = 64-bit xxhash of the 3 tokens (equality is all minhash
     // and Jaccard need — skips string building, and the verify-join
     // arrays below are long[] instead of string[]); the k signature
@@ -222,7 +221,6 @@ object LlmOps {
     * corpus side stays partitioned and only top-k per query survives the
     * final shuffle (q91 is the bucketed scale path). */
   val q82SimilarityTopk: Q = (spark, dir) => {
-    graft.functions.CosineSimilarity.register(spark)
     val v = t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val queries = v.filter(col("vec_id") < 10)
@@ -479,9 +477,9 @@ object LlmOps {
     * three joins over two label-table-sized frames, the driver only
     * compares the monotone label-sum scalar for convergence.
     *
-    * Cost shape, measured (tools/Profile, sf0.001, local[8]): warm
-    * steady state 3.3 s total, ~0.3-0.5 s/round; the first rep pays the
-    * q81 pair pipeline. Round cost is scheduling floor at toy scale and
+    * Cost shape, measured (a solo per-query profile, sf0.001,
+    * local[8]): warm steady state 3.3 s total, ~0.3-0.5 s/round; the
+    * first rep pays the q81 pair pipeline. Round cost is scheduling floor at toy scale and
     * shuffle volume of the (node, label) pair table — ~16 B/row — at
     * 100 TB; round count depends on chain length, not corpus size
     * (ScaleProbe: 8× data ⇒ same 3 rounds). FULLY ORACLED: DuckDB
@@ -1661,9 +1659,9 @@ object LlmOps {
     * No oracle — and measurably CANNOT have one by q81's verified-pairs
     * recipe: an exact-similarity oracle requires the candidate stage to
     * have recall 1 above some threshold, and simhash banding does not
-    * (measured via tools/Q89Probe at sf0.01: 112 of the 600 exact-
-    * Jaccard ≥ 0.5 pairs agree on ZERO of the 4×16-bit bands, and the
-    * maximum Jaccard among those misses is 0.9895 — on ~100-shingle
+    * (measured at sf0.01, on record in SURVEY.md and VERDICT.md: 112
+    * of the 600 exact-Jaccard ≥ 0.5 pairs agree on ZERO of the 4×16-bit
+    * bands, and the maximum Jaccard among those misses is 0.9895 — on ~100-shingle
     * documents each per-bit majority margin is ~√|shingles| ≈ 10, so
     * dropping one shingle flips every near-zero-margin bit and true
     * near-dups land at hamming 4-15, spread across all four bands. A
@@ -1673,7 +1671,6 @@ object LlmOps {
     * with planted-pair recall + the hamming-ball property test, and
     * q81/q88/q92 are the oracled near-dup modalities. */
   val q89DedupSimhash: Q = (spark, dir) => {
-    graft.functions.SimHash64.register(spark)
     // spreadScan: the shingle+simhash fold is the per-rep cost (q81's note)
     val d = spreadScan(docsWithNearDups(spark, dir))
       .withColumn("toks", split(col("text"), " "))
@@ -1793,7 +1790,6 @@ object LlmOps {
     * [[geom]]; specs pass overridden geometries to measure the
     * recall-vs-work curve of `srpProbeRadius` live. */
   private[graft] def q91WithGeometry(g: SketchGeometry): Q = (spark, dir) => {
-    graft.functions.CosineSimilarity.register(spark)
     val v = t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     // persisted: consumed by both the corpus side and the query probes,
@@ -1839,7 +1835,6 @@ object LlmOps {
     * demonstrates the scaling: bits + log2(k) at k× data keeps
     * candidate work linear). */
   private[graft] def q92WithGeometry(g: SketchGeometry): Q = (spark, dir) => {
-    graft.functions.CosineSimilarity.register(spark)
     val v = t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val planted = v.select((col("vec_id") + 1000000).as("vec_id"),

@@ -57,9 +57,9 @@ object TokenStats {
     * returns BIGINT on both engines below the cap.
     *
     * Why DECIMAL and not a q70-style pure-BIGINT decompose (VERDICT r10
-    * item 4, probed by [[graft.tools.Q118Probe]]): the lift runs only on
-    * the cnt≥5-filtered AGGREGATED pair table — vocab-shaped, ~10⁴ rows
-    * at sf0.1 — and a same-JVM interleaved A/B (decimal vs naive-BIGINT
+    * item 4; the probe's verdict is on record in SURVEY.md): the lift
+    * runs only on the cnt≥5-filtered AGGREGATED pair table —
+    * vocab-shaped, ~10⁴ rows at sf0.1 — and a same-JVM interleaved A/B (decimal vs naive-BIGINT
     * vs no-lift-at-all) measured all three within noise (means
     * 1.34/1.33/1.30 s at sf0.1); the r9→r10 +0.5 s was boot contention,
     * not decimal. A wrap-safe BIGINT spelling would also need TWO

@@ -58,7 +58,6 @@ object NearDupGate {
     * production this is a table bucketed by band, appended per admitted
     * batch; here it is derived from the corpus frame on the fly. */
   def index(spark: SparkSession, corpus: DataFrame, g: SketchGeometry): DataFrame = {
-    graft.functions.MinHashSignature.register(spark)
     // NO `filter(size(shingles) > 0)` here: predicate pushdown would
     // substitute the alias chain and re-expand the whole shingle
     // transform (split re-inlined) into a per-row Filter at the scan —
@@ -86,7 +85,6 @@ object NearDupGate {
   def flag(spark: SparkSession, batch: DataFrame, corpusIndex: DataFrame,
       g: SketchGeometry): DataFrame = {
     import graft.queries.ScopedPersist
-    graft.functions.MinHashSignature.register(spark)
     // bsh is persisted, so the size filter below applies to CACHED
     // arrays (cheap per-row check) — pushdown stops at the cache
     // boundary and cannot re-expand the shingle transform
@@ -112,7 +110,6 @@ object NearDupGate {
   def verifiedPairs(spark: SparkSession, batch: DataFrame,
       corpusIndex: DataFrame, g: SketchGeometry): DataFrame = {
     import graft.queries.ScopedPersist
-    graft.functions.MinHashSignature.register(spark)
     verifiedFrom(shingled(batch).scopedPersist, corpusIndex, g)
       .select(col("b_id"), col("c_id"), col("jacc"))
   }
@@ -174,7 +171,6 @@ object NearDupGate {
   def selfDedup(spark: SparkSession, batch: DataFrame,
       g: SketchGeometry): DataFrame = {
     import graft.queries.ScopedPersist
-    graft.functions.MinHashSignature.register(spark)
     val bsh = shingled(batch).scopedPersist
     val bands = bsh.filter(size(col("shingles")) > 0)
       .withColumn("sig", expr(s"minhash_sig(shingles, ${g.minhashK})"))

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: finalized physical plans for the headline queries —
   * the evidence that pruning/pushdown/broadcast/codegen/two-phase-agg
   * actually happen (PlanSpec asserts them; this makes them readable).
@@ -11,14 +9,8 @@ import org.apache.spark.sql.SparkSession
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.core.GraftSession.withLocalDir(SparkSession.builder()).master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // AQE for cached plans — the bench posture (GraftSession scaladoc)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.core.GraftSession.AqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.GraftSession.builder("local[8]", 8,
+      Map("spark.ui.enabled" -> "false")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val headline = Seq(

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round evidence dumper: writes the FINALIZED (post-AQE)
   * `explain("formatted")` output of selected declared queries to
   * plans/<tag>/<query>_<suffix>.txt — the before/after plan artifacts the
@@ -46,14 +44,8 @@ object ExplainDump {
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")} — valid names: " +
         graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
-    val spark = graft.core.GraftSession.withLocalDir(SparkSession.builder()).master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // AQE for cached plans — the bench posture (GraftSession scaladoc)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.core.GraftSession.AqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.GraftSession.builder("local[8]", 8,
+      Map("spark.ui.enabled" -> "false")).getOrCreate()
     try {
       spark.sparkContext.setLogLevel("ERROR")
       val outDir = repoRoot().resolve("plans").resolve(tag)

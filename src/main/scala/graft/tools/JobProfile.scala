@@ -1,15 +1,13 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-/** Dev scratch: per-JOB / per-STAGE breakdown of one declared query at
-  * the BENCH session geometry (master/shuffle partitions from
-  * SPARK_GRAFT_CPUS, default 32 — [[graft.Bench]]'s spelling), because
-  * [[Profile]] is pinned to local[8] and the c32-vs-c8 bench gap lives
-  * exactly in per-job fixed costs that an 8-core profile cannot see.
+/** Per-JOB / per-STAGE breakdown of one declared query at the bench
+  * session geometry (`local[SPARK_GRAFT_CPUS]` with as many shuffle
+  * partitions, default every available processor — [[graft.Bench]]'s
+  * spelling), so per-job fixed costs show at the width they are paid.
   * Prints, per rep: wall, #jobs, #stages, #tasks, Σ executorRunTime,
   * Σ jvmGcTime, and the per-stage table (duration, tasks, run/gc ms,
   * shuffle bytes, name) sorted by submission.
@@ -19,28 +17,9 @@ object JobProfile {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // bisect dials: decouple thread count from partition count to tell
-    // thread-contention inflation from partition-geometry inflation
-    val master = sys.env.getOrElse("GRAFT_PROFILE_MASTER", s"local[$cpus]")
-    val parts = sys.env.getOrElse("GRAFT_PROFILE_PARTITIONS", cpus)
-    val b0 = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", parts)
-    val b1 = sys.env.get("GRAFT_PROFILE_PAGESIZE")
-      .fold(b0)(p => b0.config("spark.buffer.pageSize", p))
-    // shuffle scratch on tmpfs — GraftSession.LocalDir scaladoc;
-    // GRAFT_PROFILE_LOCAL_DIR overrides for A/B runs of the dial itself
-    val b2 = (sys.env.get("GRAFT_PROFILE_LOCAL_DIR") match {
-      case Some(d) => Map("spark.local.dir" -> d)
-      case None    => graft.core.GraftSession.localDirConfig
-    }).foldLeft(b1) { case (bb, (k, v)) => bb.config(k, v) }
-    val spark = b2
-      // AQE for cached plans — the bench posture (GraftSession scaladoc)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.core.GraftSession.AqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = graft.core.GraftSession.localCpus
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus,
+      Map("spark.ui.enabled" -> "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name' — valid: " +

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical linearity probe for the dedup family AND the superlinear-
@@ -282,15 +281,9 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.GraftSession.withLocalDir(SparkSession.builder()).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE for cached plans — the bench posture (GraftSession scaladoc)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.core.GraftSession.AqeMinPartitionSize)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = graft.core.GraftSession.localCpus
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus,
+      Map("spark.ui.enabled" -> "false")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
@@ -307,7 +300,7 @@ object ScaleProbe {
           array_join(transform(split(col("text"), " "),
             t => concat(t, lit(s"_$i"))), " "))
       }.reduce(_ unionByName _)
-      scaled.coalesce(cpus.toInt).write.mode("overwrite")
+      scaled.coalesce(cpus).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
       // vectors: copy i multiplies each dim by a deterministic ±1 drawn
       // from xxhash64(i, dim) — a diagonal orthogonal transform, so
@@ -322,7 +315,7 @@ object ScaleProbe {
           transform(col("embedding"),
             (v, j) => when(pmod(xxhash64(lit(i), j), lit(2)) === 0, v).otherwise(-v)))
       }.reduce(_ unionByName _)
-      scaledEmb.coalesce(cpus.toInt).write.mode("overwrite")
+      scaledEmb.coalesce(cpus).write.mode("overwrite")
         .parquet(s"$dir/embeddings.parquet")
       System.err.println(s"[scaleprobe] built k=$k corpus (${baseRows * k} docs)")
       k -> dir
@@ -348,7 +341,7 @@ object ScaleProbe {
         baseEv.withColumn("user_id", col("user_id") + lit(i * Shift))
           .withColumn("event_id", col("event_id") + lit(i * Shift))
       }.reduce(_ unionByName _)
-      scaledEv.coalesce(cpus.toInt).write.mode("overwrite")
+      scaledEv.coalesce(cpus).write.mode("overwrite")
         .parquet(s"$dir/events.parquet")
       System.err.println(s"[scaleprobe] built k=$k events (${baseEvRows * k} rows)")
     }
@@ -364,7 +357,7 @@ object ScaleProbe {
         baseOrd.withColumn("o_orderkey", col("o_orderkey") + lit(i * Shift))
           .withColumn("o_custkey", col("o_custkey") + lit(i * Shift))
       }.reduce(_ unionByName _)
-      so.coalesce(cpus.toInt).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      so.coalesce(cpus).write.mode("overwrite").parquet(s"$dir/orders.parquet")
       val sl = (0 until k).map { i =>
         baseLi.withColumn("l_orderkey", col("l_orderkey") + lit(i * Shift))
           .withColumn("l_suppkey", col("l_suppkey") + lit(i * Shift))
@@ -373,7 +366,7 @@ object ScaleProbe {
           // and distinct() collapses the edge list back to 1×)
           .withColumn("l_partkey", col("l_partkey") + lit(i * Shift))
       }.reduce(_ unionByName _)
-      sl.coalesce(cpus.toInt).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      sl.coalesce(cpus).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       System.err.println(s"[scaleprobe] built k=$k orders/lineitem")
     }
 

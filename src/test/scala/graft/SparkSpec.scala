@@ -3,24 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (SURVEY.md §5.2). */
+/** One shared local session per suite (SURVEY.md §5.2), built by the
+  * shipped factory so the tested session is the shipped one. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE for cached plans — the bench/verify posture (GraftSession
-      // scaladoc), so plan pins hold in the configuration that is benched
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.core.GraftSession.AqeMinPartitionSize)
-      .config("spark.ui.enabled", "false")
-    // shuffle scratch on tmpfs — GraftSession.LocalDir scaladoc
-    graft.core.GraftSession.localDirConfig.foreach { case (k, v) => b.config(k, v) }
-    b.getOrCreate()
-  }
+  lazy val spark: SparkSession = graft.core.GraftSession.builder("local[4]", 4,
+    Map("spark.ui.enabled" -> "false")).getOrCreate()
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

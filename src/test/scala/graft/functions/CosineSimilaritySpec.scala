@@ -8,7 +8,6 @@ class CosineSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("matches the higher-order-function formulation bit-for-bit") {
-    CosineSimilarity.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .limit(50)
@@ -26,7 +25,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("self-similarity is 1, orthogonal is 0, zero vector is 0, null is null") {
-    CosineSimilarity.register(spark)
     val rows = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0, 3.0)),
       (Seq(1.0, 0.0), Seq(0.0, 5.0)),
@@ -40,7 +38,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("float arrays cast implicitly and losslessly") {
-    CosineSimilarity.register(spark)
     val f = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(5)
     // raw float arrays accepted directly (implicit cast), same result as

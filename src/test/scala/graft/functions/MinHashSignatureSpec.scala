@@ -15,7 +15,6 @@ class MinHashSignatureSpec extends SparkSpec {
   private val K = 12
 
   test("codegen and interpreted paths match the definitional k-pass minhash") {
-    MinHashSignature.register(spark)
     val rows = Seq(
       Seq(1L, 2L, 3L),
       Seq(-9223372036854775808L, 0L, 9223372036854775807L),
@@ -45,7 +44,6 @@ class MinHashSignatureSpec extends SparkSpec {
   }
 
   test("near-identical shingle sets agree on most signature positions") {
-    MinHashSignature.register(spark)
     val base = (1L to 100L).toSeq
     val mutated = base.drop(1) // jaccard 99/100
     val sigs = Seq(base, mutated).toDF("shingles")

@@ -24,7 +24,6 @@ class SimHash64Spec extends SparkSpec {
   }
 
   test("codegen and interpreted paths match the definitional bit votes") {
-    SimHash64.register(spark)
     val rows = Seq(
       Seq(1L, 2L, 3L),
       Seq(-1L, Long.MinValue, Long.MaxValue),
@@ -45,7 +44,6 @@ class SimHash64Spec extends SparkSpec {
   }
 
   test("near-identical sets land at small hamming distance") {
-    SimHash64.register(spark)
     // deterministic pseudo-random fingerprints (no RNG in tests)
     val base = (1 to 200).map(i =>
       org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(i.toLong, 7).toLong * 2654435761L)

@@ -335,9 +335,9 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("q89: engine output is row-identical to a driver-side JVM mirror of the whole pipeline") {
-    // q89 is the surface's one no-oracle dedup op (tools/Q89Probe
-    // documents why no DuckDB oracle can exist: simhash banding has no
-    // recall-1 similarity threshold to verify against). This mirror is
+    // q89 is the surface's one no-oracle dedup op (SURVEY.md and
+    // VERDICT.md record why no DuckDB oracle can exist: simhash banding
+    // has no recall-1 similarity threshold to verify against). This mirror is
     // the s86–s94 recipe instead: recompute the ENTIRE result —
     // plant → split → 3-shingle xxhash64 → distinct → majority-vote
     // simhash → 4×16-bit bands → occupancy cap → pairs → hamming ≤ 6 —

@@ -8,12 +8,12 @@ import _root_.graft.{GraftExtensions, SparkSpec}
 
 /** The `spark.sql.extensions=graft.GraftExtensions` contract: the
   * extension object must register the as-of planner strategy and all
-  * three engine SQL functions, and the injected builders must produce
+  * nine engine SQL functions, and the injected builders must produce
   * working expressions. Lives in the org.apache.spark.sql package
   * because the buildPlannerStrategies/registerFunctions hooks — exactly
   * what SparkSession invokes at session construction — are
-  * private[sql]; the suite's shared session was already created without
-  * the config, so construction-time wiring is probed directly. */
+  * private[sql], and so is the constructor of a bare session built
+  * without the extension (the attach case of `GraftSession.getOrCreate`). */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("extensions wire the as-of strategy and the engine's SQL functions") {
@@ -24,7 +24,7 @@ class GraftExtensionsSpec extends SparkSpec {
 
     val reg = ext.registerFunctions(spark.sessionState.functionRegistry)
     Seq("cosine_sim", "avro_encode", "avro_decode", "minhash_sig", "simhash64",
-      "sorted_intersect", "squared_l2")
+      "sorted_intersect", "squared_l2", "bloom_filter_agg", "might_contain")
       .foreach { f =>
         assert(reg.functionExists(FunctionIdentifier(f)), s"$f not registered")
       }
@@ -69,6 +69,9 @@ class GraftExtensionsSpec extends SparkSpec {
     arityError("SELECT avro_decode(x'00', 1)", "avro_decode")
     arityError("SELECT sorted_intersect(array(1L))", "sorted_intersect")
     arityError("SELECT squared_l2(array(1.0F))", "squared_l2")
+    arityError("SELECT bloom_filter_agg(xxhash64(id), 100L) FROM range(3)",
+      "bloom_filter_agg")
+    arityError("SELECT might_contain(x'00')", "might_contain")
   }
 
   test("minhash_sig rejects non-literal, null, and non-positive k") {
@@ -76,5 +79,22 @@ class GraftExtensionsSpec extends SparkSpec {
     intercept[Exception](spark.sql("SELECT minhash_sig(array(1L), 0)").collect())
     intercept[Exception](
       spark.sql("SELECT minhash_sig(array(1L), 'twelve')").collect())
+  }
+
+  test("getOrCreate attaching to a session built without the extension installs it once") {
+    val bare = new classic.SparkSession(spark.sparkContext)
+    assert(!bare.sessionState.functionRegistry.functionExists(FunctionIdentifier("cosine_sim")))
+    SparkSession.setActiveSession(bare)
+    try {
+      val attached = _root_.graft.core.GraftSession.getOrCreate("local[4]", 4)
+      assert(attached eq bare)
+      _root_.graft.core.GraftSession.getOrCreate("local[4]", 4) // idempotent
+      assert(bare.sessionState.planner.strategies
+        .count(_ == _root_.graft.plans.AsOfJoinStrategy) == 1)
+      val cos = bare.sql(
+        "SELECT cosine_sim(array(3.0D, 4.0D), array(3.0D, 4.0D)) AS c")
+        .collect().head.getDouble(0)
+      assert(math.abs(cos - 1.0) < 1e-12)
+    } finally SparkSession.setActiveSession(spark)
   }
 }
