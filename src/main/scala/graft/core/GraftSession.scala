@@ -37,9 +37,14 @@ object GraftSession {
     sys.env.getOrElse("GRAFT_AQE_MIN_PARTITION", "256k")
 
   /** Shuffle scratch directory (spark.local.dir), env-dialed with a
-    * measured default: `GRAFT_LOCAL_DIR=<path>` pins it, `-` keeps
-    * Spark's default (java.io.tmpdir), unset auto-picks tmpfs
-    * (`/dev/shm/graft-spark-local`) when present and writable.
+    * measured default. Precedence, first match wins:
+    *  1. `SPARK_LOCAL_DIRS` set: `None`. Spark reads that variable
+    *     before `spark.local.dir` (`Utils.getConfiguredLocalDirs`), so
+    *     setting both would only log Spark's override warning.
+    *  2. `GRAFT_LOCAL_DIR=-`: `None`, Spark's default (java.io.tmpdir).
+    *  3. `GRAFT_LOCAL_DIR=<path>`: that path.
+    *  4. unset: tmpfs (`/dev/shm/graft-spark-local`) when present and
+    *     writable, else `None`.
     *
     * Why (r16, jstack-sampled): a local[N]-with-N-shuffle-partitions
     * shuffle opens M×R block segments on read plus M data+index file
@@ -62,16 +67,21 @@ object GraftSession {
     * GRAFT_LOCAL_DIR at the fastest real disks (the standard
     * spark.local.dir guidance: local NVMe, never network/overlay FS) —
     * same knob, same reasoning, different medium. */
-  val LocalDir: Option[String] = sys.env.get("GRAFT_LOCAL_DIR") match {
-    case Some("-")              => None
-    case Some(d) if d.nonEmpty  => Some(d)
-    case _ =>
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        Some("/dev/shm/graft-spark-local")
-      else None
-  }
+  val LocalDir: Option[String] = localDir(sys.env)
+
+  /** [[LocalDir]] as a function of the environment `env`. */
+  private[core] def localDir(env: Map[String, String]): Option[String] =
+    if (env.contains("SPARK_LOCAL_DIRS")) None
+    else env.get("GRAFT_LOCAL_DIR") match {
+      case Some("-")              => None
+      case Some(d) if d.nonEmpty  => Some(d)
+      case _ =>
+        val shm = java.nio.file.Paths.get("/dev/shm")
+        if (java.nio.file.Files.isDirectory(shm) &&
+            java.nio.file.Files.isWritable(shm))
+          Some("/dev/shm/graft-spark-local")
+        else None
+    }
 
   /** [[LocalDir]] as builder-ready config entries (empty when default). */
   private val localDirConfig: Map[String, String] =

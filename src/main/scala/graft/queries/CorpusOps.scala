@@ -683,17 +683,14 @@ object CorpusOps {
     val sel = aggregate(cands, array().cast("array<int>"),
       (acc, i) => when(size(acc) > 0 && element_at(acc, -1) === i - 1, acc)
         .otherwise(concat(acc, array(i))))
-    // `sel` must be BOUND, not inlined: higher-order functions evaluate
-    // interpreted, with no common-subexpression elimination — two bare
-    // array_contains(sel, _) references per position re-run the whole
-    // candidate scan n times (measured: 2× the solo floor). Wrapping
-    // the rebuild in transform(array(sel), ...) evaluates sel once per
-    // row and hands the lambda a bound variable.
-    val rebuilt = element_at(transform(array(sel), selv =>
+    // `sel` is [[bind]]-ed, not inlined: two bare array_contains(sel, _)
+    // references per position would re-run the whole candidate scan n
+    // times (measured: 2× the solo floor; PlanSpec's lambda audit)
+    val rebuilt = bind(sel)(selv =>
       flatten(transform(sequence(lit(1), n),
         i => when(array_contains(selv, i), array(lit(p1 + BpeSep + p2)))
           .when(array_contains(selv, i - 1), array().cast("array<string>"))
-          .otherwise(array(element_at(toks, i)))))), 1)
+          .otherwise(array(element_at(toks, i))))))
     // one-token docs (possible after an earlier merge) have no pairs —
     // and sequence(1, 0) would DESCEND, so the guard is load-bearing
     when(n >= 2, rebuilt).otherwise(toks)
@@ -1225,13 +1222,10 @@ object CorpusOps {
   }
 
   /** q156's core against an explicit merge list, spec-drivable on hand
-    * corpora (the bpeEncode factoring pattern). Each layer is BOUND via
-    * the element_at∘transform∘array trick before the next applies —
-    * [[graft.streaming.BpeEncoder]]'s no-CSE argument. */
+    * corpora (the bpeEncode factoring pattern). Each layer is [[bind]]-ed
+    * before the next applies, as in [[graft.streaming.BpeEncoder]]. */
   private[graft] def bpeRoundTrip(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    def bind(c: Column)(f: Column => Column): Column =
-      element_at(transform(array(c), f), 1)
     val toks0 = filter(split(coalesce(col("text"), lit("")), " "),
       x => x =!= "")
     val report = bind(toks0) { t0 =>
@@ -1353,8 +1347,10 @@ object CorpusOps {
     * type with SQL equality (q151 runs it on token strings for the
     * repeat-run signal AND on sorted bigram structs, where the longest
     * equal-adjacent run of a sorted array is the multiset mode's
-    * multiplicity). */
-  private def maxRun(toks: Column): Column = {
+    * multiplicity). The array is [[bind]]-ed first, so an expression
+    * argument (q151's sorted bigram array) is evaluated once per row,
+    * not once per fold step. */
+  private def maxRun(arr: Column): Column = bind(arr) { toks =>
     val n = size(toks)
     val folded = aggregate(sequence(lit(2), n),
       struct(lit(1L).as("run"), lit(1L).as("best")),

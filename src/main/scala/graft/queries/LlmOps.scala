@@ -1508,12 +1508,14 @@ object LlmOps {
       "+ 257 * ascii(substr(t, length(t), 1)) " +
       "+ 65537 * ascii(substr(t, (length(t) + 1) // 2, 1)) AS BIGINT) END"
 
-  /** The winnowed fingerprint set of a MATERIALIZED token-code array
-    * column: k-gram rolling hashes over [[winnowTokenCode]] values,
-    * then the distinct minima of every w-window. Rightmost tie-break
-    * is irrelevant for the VALUE set (ties select the same value), so
-    * the set is total-order-free and oracle-exact. Pure row-local HOF
-    * folds — O(n·(k+w)) per doc, no shuffle. */
+  /** The winnowed fingerprint set of a token-code array column:
+    * k-gram rolling hashes over [[winnowTokenCode]] values, then the
+    * distinct minima of every w-window. Rightmost tie-break is
+    * irrelevant for the VALUE set (ties select the same value), so the
+    * set is total-order-free and oracle-exact. Pure row-local HOF
+    * folds — O(n·(k+w)) per doc, no shuffle. Pass a column reference
+    * or a [[bind]]-ed variable, never an expression (PlanSpec's lambda
+    * audit). */
   private[graft] def gramHashes(codes: Column, k: Int): Column =
     // guarded: sequence(1, n <= 0) DESCENDS (q64's gotcha) and the
     // descending indices land element_at out of bounds
@@ -1523,16 +1525,15 @@ object LlmOps {
           pmod(h * 31 + element_at(codes, i + o), lit(KnuthP)))))
       .otherwise(array().cast("array<bigint>"))
 
-  /** Window-min selection over a MATERIALIZED grams column. BOTH
-    * inputs must ride their own projections: an inline [[gramHashes]]
-    * here re-evaluates the whole gram transform PER WINDOW START
-    * (lambda interiors evaluate interpretively, outside codegen CSE —
-    * the q135/q64 defect class; measured on this very op: 6.9 s solo
-    * at sf0.1 inlined vs the materialized spelling's q88-beating
-    * floor). A doc with fewer than k tokens has NO grams
-    * (sequence(1, n<=0) DESCENDS — q64's gotcha) and selects the empty
-    * set; with 1 <= n_grams < w the single truncated window selects
-    * the global min (slice truncates at the array edge). */
+  /** Window-min selection over a grams column. Pass a column reference
+    * or a [[bind]]-ed variable: an inline [[gramHashes]] here is
+    * re-evaluated per window start (measured: 6.9 s solo at sf0.1
+    * inlined vs the materialized spelling's q88-beating floor), and
+    * PlanSpec's lambda audit fails on it. A doc with fewer than k
+    * tokens has NO grams (sequence(1, n<=0) DESCENDS — q64's gotcha)
+    * and selects the empty set; with 1 <= n_grams < w the single
+    * truncated window selects the global min (slice truncates at the
+    * array edge). */
   private[graft] def winnowSelect(grams: Column, w: Int): Column =
     when(size(grams) >= 1,
       array_distinct(transform(
@@ -2347,12 +2348,11 @@ object LlmOps {
     * for a 100 TB quality pass: reads the corpus once, writes flags).
     * N-grams are counted as xxhash64 fingerprints; the oracle counts the
     * string forms (q88's collision argument). */
-  /** q64's duplicate-fraction kernels over a MATERIALIZED toks column —
-    * factored so q162's funnel stage runs the IDENTICAL rule (the
-    * shared-spelling convention; q64's own CORRECTNESS row certifies
-    * the arithmetic for both consumers). Pass a toks column that rides
-    * its own projection, not an inline `split` (the HOF re-evaluation
-    * defect class q64's body documents). */
+  /** q64's duplicate-fraction kernels over a toks column — factored so
+    * q162's funnel stage runs the IDENTICAL rule (the shared-spelling
+    * convention; q64's own CORRECTNESS row certifies the arithmetic for
+    * both consumers). Pass a column reference or a [[bind]]-ed
+    * variable, not an inline `split` (PlanSpec's lambda audit). */
   private[queries] def dupWordFrac(toks: Column): Column = {
     val n1 = size(toks)
     round((n1 - size(array_distinct(toks))).cast("double") / n1, 6)
@@ -2381,12 +2381,9 @@ object LlmOps {
     val text = when(col("doc_id") % 10 === 0,
       concat(col("text"), lit(" spam spam spam spam spam spam spam spam spam spam spam spam")))
       .otherwise(col("text"))
-    // toks rides its own projection: HOF lambda bodies re-evaluate
-    // every non-attribute expression they reference, so an inlined
-    // split would re-split the text for each element_at in the gram
-    // lambdas — ~5 splits per token position (q135's measured defect
-    // class; harmless at 54-token fixture docs, a real multiplier on
-    // long documents at scale)
+    // toks rides its own projection: an inlined split would re-split
+    // the text for each element_at in the gram lambdas (PlanSpec's
+    // lambda audit; [[bind]] is the in-expression alternative)
     val withToks = d.withColumn("toks", split(text, " "))
     val toks = col("toks")
     val n1 = size(toks)

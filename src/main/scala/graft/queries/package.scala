@@ -62,6 +62,17 @@ package object queries {
     def scopedPersist: T = graft.core.CacheScope.persist(ds)
   }
 
+  /** Evaluate `c` once per row and hand the result to `f` as a bound
+    * lambda variable. Higher-order-function lambdas evaluate
+    * interpreted, with no common-subexpression elimination, so an
+    * expression that a lambda references directly is re-evaluated on
+    * every call of that lambda (once per element or fold step).
+    * Binding wraps it in a 1-element `transform`, which runs `f` once.
+    * `PlanSpec`'s whole-surface lambda audit fails on any query that
+    * leaves such an expression unbound. */
+  def bind(c: Column)(f: Column => Column): Column =
+    element_at(transform(array(c), f), 1)
+
   /** Order by every column (ascending, nulls first — both engines'
     * default ASC null ordering differs: Spark NULLS FIRST, DuckDB NULLS
     * LAST — so pin NULLS FIRST explicitly in SQL). */

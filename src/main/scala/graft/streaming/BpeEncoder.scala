@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.queries.CorpusOps
+import graft.queries.{CorpusOps, bind}
 
 /** BPE encode with a LEARNED merge-list artifact — the production
   * posture q149's scaladoc promises: train ships an ordered merge list
@@ -23,19 +23,12 @@ import graft.queries.CorpusOps
   * encode scales as embarrassingly parallel map work, which is exactly
   * how tokenization jobs run over crawl shards.
   *
-  * Each merge layer is BOUND via `element_at(transform(array(_)), 1)`
-  * before the next applies: higher-order-function interiors evaluate
-  * interpreted with no common-subexpression elimination, so inlining
-  * layer r's expression into layer r+1's multiple references would
-  * re-run it per reference (~3^R blowup). Binding keeps the fold
-  * O(R·n) per row — the same reason [[CorpusOps.applyMerge]] binds its
-  * candidate list internally. */
+  * Each merge layer is bound through [[graft.queries.bind]] before the
+  * next applies: inlining layer r's expression into layer r+1's
+  * multiple references would re-run it per reference (~3^R blowup).
+  * Binding keeps the fold O(R·n) per row; `PlanSpec`'s lambda audit
+  * pins it. */
 object BpeEncoder {
-
-  /** Evaluate `c` once and hand the result to `f` as a bound lambda
-    * variable (the HOF no-CSE workaround). */
-  private def bind(c: Column)(f: Column => Column): Column =
-    element_at(transform(array(c), f), 1)
 
   /** Encode a (doc_id, text, …) frame against an ordered merge list:
     * (doc_id, keep…, n_raw, n_enc, n_merged). TOTAL like q149: empty /

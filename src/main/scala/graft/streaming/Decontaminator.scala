@@ -26,10 +26,10 @@ object Decontaminator {
 
   /** Distinct n-token shingle fingerprints of a `toks` string-array
     * column — q63's shingle kernel (`LlmOps.q63With`), shared so the
-    * batch oracle and the streaming gate cannot drift. Pass a
-    * MATERIALIZED token column (its own projection), not an inline
-    * `split(...)`: the lambda interior evaluates interpretively, so an
-    * inlined split re-runs once per array element. */
+    * batch oracle and the streaming gate cannot drift. Pass a column
+    * reference or a [[graft.queries.bind]]-ed variable, not an inline
+    * `split(...)`, which the lambda would re-run once per element
+    * (PlanSpec's lambda audit). */
   def shingleFingerprints(toks: Column, n: Int): Column = {
     require(n >= 2, s"decontamination shingle width must be >= 2, got $n")
     // sequence(1, k) DESCENDS for k <= 0 (q64's gotcha): short docs get
@@ -62,10 +62,9 @@ object Decontaminator {
   def flag(docs: DataFrame, evalShingles: Seq[Long], n: Int): DataFrame = {
     docs
       // toks and sha ride their own projections (multi-use aliases, so
-      // CollapseProject keeps them): inlining `split` into the shingle
-      // lambda would re-split the document per element — lambda
-      // interiors evaluate interpretively, outside codegen CSE — and
-      // inlining sha would run the whole shingle transform once per
+      // CollapseProject keeps them): an inlined `split` would re-split
+      // the document per shingle element (PlanSpec's lambda audit), and
+      // an inlined sha would run the whole shingle transform once per
       // consumer
       .withColumn("toks", split(col("text"), " "))
       .withColumn("sha", shingleFingerprints(col("toks"), n))

@@ -164,9 +164,9 @@ object ScaleProbe {
     // top of q149's learn+encode — its wall must track q149's, and
     // superlinearity would mean the report stopped riding one scan
     "q150_encode_by_lang",
-    // q151's stats are row-local (array_distinct + the max-run fold)
-    // and its bigram rollups shrink per doc — superlinearity means the
-    // fold stopped being O(n) or a rollup stopped partial-aggregating
+    // q151's whole profile is row-local (array_distinct + the max-run
+    // fold over the tokens and over the bound sorted bigram array) —
+    // superlinearity means a fold stopped being O(n log n) per doc
     "q151_repetition_profile",
     // q152 is two row-local score folds into a <=4-group rollup (the
     // q147/q139 map-only class plus one shrinking exchange)

@@ -1,5 +1,7 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 import graft.SparkSpec
@@ -40,5 +42,19 @@ class GraftSessionSpec extends SparkSpec {
     val again = GraftSession.getOrCreate("local[4]", 4, Map("spark.ui.enabled" -> "false"))
     assert(again eq spark)
     assert(again.sessionState.planner.strategies.count(_ == AsOfJoinStrategy) == 1)
+  }
+
+  test("LocalDir: SPARK_LOCAL_DIRS wins, then GRAFT_LOCAL_DIR, then the tmpfs probe") {
+    assert(GraftSession.localDir(
+      Map("SPARK_LOCAL_DIRS" -> "/tmp/a", "GRAFT_LOCAL_DIR" -> "/tmp/b")).isEmpty)
+    assert(GraftSession.localDir(Map("GRAFT_LOCAL_DIR" -> "-")).isEmpty)
+    assert(GraftSession.localDir(Map("GRAFT_LOCAL_DIR" -> "/tmp/b")).contains("/tmp/b"))
+    val shm = Paths.get("/dev/shm")
+    val probe = Option.when(Files.isDirectory(shm) && Files.isWritable(shm))(
+      "/dev/shm/graft-spark-local")
+    assert(GraftSession.localDir(Map.empty) == probe)
+    // the session leaves spark.local.dir unset when Spark would ignore it
+    if (sys.env.contains("SPARK_LOCAL_DIRS"))
+      assert(spark.sparkContext.getConf.getOption("spark.local.dir").isEmpty)
   }
 }

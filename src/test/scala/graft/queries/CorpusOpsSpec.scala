@@ -662,4 +662,36 @@ class CorpusOpsSpec extends SparkSpec {
       (5L, 4L, 0.75, 4L, 1.0)),
       s"profile diverged:\n${got.mkString("\n")}")
   }
+
+  test("q151: long documents — the bound fold reads real sorted bigram arrays") {
+    // fixture documents are too short to exercise the modal-bigram fold
+    // on a long sorted array: a looping 3-token phrase and a long run of
+    // one token, in both orders of dominance
+    val loop = Seq.fill(120)(Seq("alpha", "beta", "gamma")).flatten
+    val uniq = (0 until 20).map(i => s"u$i")
+    val texts = Seq(
+      1L -> (loop ++ Seq.fill(60)("z") ++ uniq),
+      2L -> (uniq ++ Seq.fill(300)("z") ++ loop.take(60)))
+    def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def maxRun(xs: Seq[Any]): Long =
+      xs.zip(xs.drop(1)).foldLeft((1L, 1L)) { case ((run, best), (a, b)) =>
+        val r = if (a == b) run + 1 else 1L
+        (r, best max r)
+      }._2
+    val want = texts.map { case (id, toks) =>
+      val n = toks.size
+      val bigrams = toks.zip(toks.drop(1))
+      val top = bigrams.groupBy(identity).values.map(_.size).max
+      (id, n.toLong, round6(1.0 - toks.distinct.size.toDouble / n), maxRun(toks),
+        round6(top.toDouble / (n - 1)))
+    }
+    val docs = texts.map { case (id, toks) => (id, toks.mkString(" ")) }
+      .toDF("doc_id", "text")
+    val got = CorpusOps.repetitionProfile(docs).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3),
+        r.getDouble(4)))
+      .sortBy(_._1).toSeq
+    assert(got == want, s"profile diverged:\n${got.mkString("\n")}")
+  }
 }

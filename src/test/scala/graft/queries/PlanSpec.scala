@@ -1,12 +1,21 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayExcept,
+  ArrayIntersect, ArraySort, ArrayUnion, Concat, CreateArray, ExprId, Expression, Flatten,
+  HigherOrderFunction, LambdaFunction, NamedLambdaVariable, RegExpExtractBase,
+  RegExpReplace, ScalaUDF, Sequence, SortArray, StringRegexExpression, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 /** Golden physical-plan assertions (SURVEY.md §4.2): the optimizations we
   * rely on for 100 TB must actually be in the plan, not assumed — column
   * pruning into the scan, predicate pushdown, broadcast joins for dims,
   * TakeOrderedAndProject for top-k, two-phase aggregation, and no
-  * cartesian/nested-loop anywhere in the declared surface. */
+  * cartesian/nested-loop or lambda re-evaluation anywhere in the
+  * declared surface. */
 class PlanSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
@@ -108,6 +117,30 @@ class PlanSpec extends SparkSpec {
       p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")
     }
     assert(offenders.isEmpty, s"non-scalable joins in: $offenders")
+  }
+
+  test("lambda audit: flags an unbound sorted array, passes it bound") {
+    val df = spark.range(1).select(array(lit("b"), col("id").cast("string")).as("a"))
+    def fold(arr: Column) = aggregate(sequence(lit(1), size(arr)), lit(0L),
+      (acc, i) => acc + length(element_at(arr, i)))
+    val unbound = df.select(fold(array_sort(col("a"))))
+    val bound = df.select(bind(array_sort(col("a")))(fold))
+    assert(PlanSpec.lambdaReevaluations(unbound.queryExecution.optimizedPlan)
+      .exists(_.isInstanceOf[ArraySort]))
+    assert(PlanSpec.lambdaReevaluations(bound.queryExecution.optimizedPlan).isEmpty)
+  }
+
+  test("no lambda re-evaluates an expensive expression anywhere in the declared surface") {
+    // lambda bodies evaluate interpreted, with no common-subexpression
+    // elimination: a subtree that reads none of its lambda's variables
+    // is re-computed on every call (q151's sorted bigram array was
+    // re-sorted per fold step, O(n² log n) per doc). [[bind]] it, or
+    // give it its own projection.
+    val offenders = graft.SparkEntry.queries.keySet.toSeq.sorted.flatMap { name =>
+      val optimized = graft.SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+      PlanSpec.lambdaReevaluations(optimized).map(e => s"$name: ${e.sql.take(300)}").distinct
+    }
+    assert(offenders.isEmpty, s"lambda re-evaluation in:\n${offenders.mkString("\n")}")
   }
 
   test("q15: range join keys on user_id (hash/merge join, band as residual)") {
@@ -1295,4 +1328,49 @@ class PlanSpec extends SparkSpec {
     // codegen'd operators render as "*(n) Operator" in the final AQE plan
     assert(p.contains("*(1) HashAggregate") || p.contains("WholeStageCodegen"), p)
   }
+}
+
+object PlanSpec {
+  private def expensive(e: Expression): Boolean = e match {
+    case _: HigherOrderFunction | _: SortArray | _: StringSplit | _: ArrayDistinct |
+         _: ArrayUnion | _: ArrayIntersect | _: ArrayExcept | _: Sequence |
+         _: StringRegexExpression | _: RegExpExtractBase | _: RegExpReplace |
+         _: Flatten | _: Concat | _: ScalaUDF => true
+    case _ => false
+  } // ArraySort is a HigherOrderFunction
+
+  /** `element_at(transform(array(c), f), 1)`: the body runs once. */
+  private def isBind(h: HigherOrderFunction): Boolean = h.arguments.headOption match {
+    case Some(CreateArray(Seq(_), _)) => true
+    case _ => false
+  }
+
+  private def reads(e: Expression, vars: Set[ExprId]): Boolean = e match {
+    case v: NamedLambdaVariable => vars(v.exprId)
+    case _ => e.children.exists(reads(_, vars))
+  }
+
+  /** The maximal subtrees of `e`, a part of a lambda body, that are
+    * non-foldable, read none of the lambda's own variables `vars`, and
+    * hold an expensive node. A nested HOF's lambdas are audited on
+    * their own, so the walk enters only its arguments. */
+  private def unbound(e: Expression, vars: Set[ExprId]): Seq[Expression] =
+    if (!e.foldable && e.exists(expensive) && !reads(e, vars)) Seq(e)
+    else e match {
+      case h: HigherOrderFunction => h.arguments.flatMap(unbound(_, vars))
+      case _ => e.children.flatMap(unbound(_, vars))
+    }
+
+  /** The lambdas of every HOF in `e`, except those of a bind. */
+  private def audited(e: Expression): Seq[LambdaFunction] = e match {
+    case h: HigherOrderFunction if !isBind(h) =>
+      h.functions.collect { case lf: LambdaFunction => lf } ++ h.children.flatMap(audited)
+    case _ => e.children.flatMap(audited)
+  }
+
+  /** Every lambda re-evaluation site in `plan`, subqueries included. */
+  def lambdaReevaluations(plan: LogicalPlan): Seq[Expression] =
+    plan.collectWithSubqueries(PartialFunction.fromFunction(identity[LogicalPlan]))
+      .flatMap(_.expressions).flatMap(audited)
+      .flatMap(lf => unbound(lf.function, lf.arguments.map(_.exprId).toSet))
 }
