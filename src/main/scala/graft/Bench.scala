@@ -1,9 +1,15 @@
 package graft
+
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
   /** JSON writer for the bench and verify records (Spark's bundled
     * Jackson + Scala module); ListMaps keep their field order. */
@@ -98,11 +104,7 @@ object Bench {
     * so load_end is a coarse signal; steal_cpus below is the clean
     * one. */
   private def loadAvg1m(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.getLines().next().split("\\s+")(0).toDouble
-      finally src.close()
-    } catch { case scala.util.control.NonFatal(_) => -1.0 }
+    scala.util.Try(procFields("/proc/loadavg")(0).toDouble).getOrElse(-1.0)
 
   /** Cumulative steal jiffies (field 8 of /proc/stat's aggregate cpu
     * line; -1 if unreadable). Steal is hypervisor time taken FROM this
@@ -112,41 +114,38 @@ object Bench {
     * steal_cpus = Δsteal/USER_HZ/elapsed — average CPUs stolen over
     * the run; ~0 on a clean window regardless of the bench's own
     * load. */
-  private def stealJiffies(): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+")
-        if (f.length > 8 && f(0) == "cpu") f(8).toLong else -1L
-      } finally src.close()
-    } catch { case scala.util.control.NonFatal(_) => -1L }
+  private def stealJiffies(): Long = scala.util.Try {
+    val f = procFields("/proc/stat")
+    if (f.length > 8 && f(0) == "cpu") f(8).toLong else -1L
+  }.getOrElse(-1L)
+
+  /** The whitespace-split first line of a /proc file (throws if unreadable). */
+  private def procFields(path: String): Array[String] = {
+    val src = scala.io.Source.fromFile(path)
+    try src.getLines().next().trim.split("\\s+") finally src.close()
+  }
+
+  private val QuiesceLoad = 4.0
+  private val QuiesceSteal = 0.05 // CPUs
+  private val QuiesceProbeSec = 30L
+  private val QuiesceMaxSec = 600L
 
   /** Launch-hygiene gate (VERDICT r14 item 1): refuse to start the
     * timed run until the box looks quiet — 1-minute load below
-    * GRAFT_BENCH_QUIESCE_LOAD (default 4; the r14 official run launched
-    * at load 21 into the just-finished test suite's JVM drain and paid
-    * ~9.5 s of band) AND steal over a GRAFT_BENCH_QUIESCE_PROBE_SEC
-    * window (default 30 s) below GRAFT_BENCH_QUIESCE_STEAL CPUs
-    * (default 0.05). Bounded: after GRAFT_BENCH_QUIESCE_MAX_SEC
-    * (default 600) the run proceeds anyway — a driver run must not
-    * hang on a busy co-tenant episode, and the record's trailing
-    * steal_cpus field classifies whatever window it got (the ratified
-    * contention rule). GRAFT_BENCH_QUIESCE=0 skips entirely (local
-    * iteration). Returns seconds waited INCLUDING the probe window, so
-    * the record shows the gate ran. The gate cannot guarantee a clean
-    * run — a burst can arrive mid-run (BASELINE.md's 101.9 s datum) —
-    * it only stops the self-inflicted launch-into-own-drain class. */
+    * [[QuiesceLoad]] (the r14 official run launched at load 21 into the
+    * just-finished test suite's JVM drain and paid ~9.5 s of band) AND
+    * steal over a [[QuiesceProbeSec]] window below [[QuiesceSteal]]
+    * CPUs. Bounded: after [[QuiesceMaxSec]] the run proceeds anyway — a
+    * driver run must not hang on a busy co-tenant episode, and the
+    * record's trailing steal_cpus field classifies whatever window it
+    * got (the ratified contention rule). GRAFT_BENCH_QUIESCE=0 skips
+    * entirely (local iteration). Returns seconds waited INCLUDING the
+    * probe window, so the record shows the gate ran. The gate cannot
+    * guarantee a clean run — a burst can arrive mid-run (BASELINE.md's
+    * 101.9 s datum) — it only stops the self-inflicted
+    * launch-into-own-drain class. */
   private def quiesce(): Double = {
     if (sys.env.get("GRAFT_BENCH_QUIESCE").contains("0")) return 0.0
-    val maxLoad = sys.env.getOrElse("GRAFT_BENCH_QUIESCE_LOAD", "4.0").toDouble
-    val maxSteal = sys.env.getOrElse("GRAFT_BENCH_QUIESCE_STEAL", "0.05").toDouble
-    val probeSec = sys.env.getOrElse("GRAFT_BENCH_QUIESCE_PROBE_SEC", "30").toInt
-    // probeSec divides the steal delta: 0 would make the steal NaN,
-    // the gate unclearable, and the loop a zero-sleep /proc spin
-    require(probeSec > 0,
-      s"GRAFT_BENCH_QUIESCE_PROBE_SEC=$probeSec — the probe window must be " +
-        "positive (to skip the gate entirely set GRAFT_BENCH_QUIESCE=0)")
-    val maxWait = sys.env.getOrElse("GRAFT_BENCH_QUIESCE_MAX_SEC", "600").toInt
     // no-/proc host (macOS, masked container): both signals are
     // unreadable, the gate can measure nothing — skip instead of
     // sleeping a dead probe window every run
@@ -157,23 +156,24 @@ object Bench {
     val t0 = System.nanoTime()
     def waited = (System.nanoTime() - t0) / 1e9
     var pass = false
-    while (!pass && waited < maxWait) {
+    while (!pass && waited < QuiesceMaxSec) {
       val load = loadAvg1m()
-      if (load >= maxLoad) { // unreadable (-1) skips the load arm
-        System.err.println(f"[bench] quiesce: load $load%.2f >= $maxLoad%.1f — waiting 10 s")
+      if (load >= QuiesceLoad) { // unreadable (-1) skips the load arm
+        System.err.println(f"[bench] quiesce: load $load%.2f >= $QuiesceLoad%.1f — waiting 10 s")
         Thread.sleep(10000)
       } else {
-        // a single probe sleep must not overshoot the maxWait bound (a
-        // probeSec > remaining budget would otherwise block past the
-        // documented hang ceiling), so the window clamps to what's left
-        val win = math.max(1, math.min(probeSec.toLong, maxWait - waited.toLong))
+        // a single probe sleep must not overshoot the QuiesceMaxSec bound
+        // (a probe window longer than the remaining budget would block
+        // past the documented hang ceiling), so the window clamps to
+        // what's left
+        val win = math.max(1L, math.min(QuiesceProbeSec, QuiesceMaxSec - waited.toLong))
         val s0 = stealJiffies()
         Thread.sleep(win * 1000L)
         val s1 = stealJiffies()
         val steal =
           if (s0 < 0 || s1 < 0) 0.0 else (s1 - s0) / 100.0 / win
         val load2 = loadAvg1m()
-        if (steal < maxSteal && load2 < maxLoad) {
+        if (steal < QuiesceSteal && load2 < QuiesceLoad) {
           System.err.println(f"[bench] quiesce: clear (load $load2%.2f, " +
             f"steal $steal%.3f CPUs over $win s; waited $waited%.0f s)")
           pass = true
@@ -187,28 +187,128 @@ object Bench {
     math.round(waited * 10) / 10.0
   }
 
+  /** The one timed action: execute the df's own `executedPlan` RDD and
+    * count its rows on the executors. Every column of every row is
+    * computed (a `count()` lets Catalyst prune the plan down to a
+    * key-only aggregate, so it times a different query), no row moves
+    * to the driver, and THIS df's AQE plan is finalized — not a second
+    * QueryExecution's, as a noop write or `df.foreach` would build.
+    * Returns the row count. */
+  def run(df: DataFrame): Long = df.queryExecution.executedPlan.execute().count()
+
+  /** One timed rep of `df` (built inside the timed region, so planning
+    * counts): [[run]] plus the per-query cache drain, then, untimed,
+    * a heap quiesce. Returns (seconds, rows); a throw propagates after
+    * the quiesce. */
+  def rep(spark: SparkSession)(df: => DataFrame): (Double, Long) = {
+    val t0 = System.nanoTime()
+    try {
+      // per-query cache lifecycle: reuse inside, none after
+      val n = try run(df) finally graft.core.CacheScope.drain()
+      ((System.nanoTime() - t0) / 1e9, n)
+    } finally {
+      // Untimed heap quiesce: without it, GC debt accumulated by a heavy
+      // query bills to whichever sub-second query runs next — observed as
+      // r4→r5 "drift" on q29/q56 (0.22→0.71 s with no code change) and as
+      // whole-run swings between consecutive identical runs.
+      // Round-10 hardening (the r9 q111/q101/q108/q110 drift cluster):
+      // belt-and-braces against anything the scoped drain missed — stray
+      // catalog cache entries and persistent RDD blocks (localCheckpoint
+      // leaves RDD-level blocks that Dataset.unpersist never sees), then
+      // two GC passes so the ContextCleaner actually reclaims broadcast
+      // and shuffle state before the next query is timed.
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.valuesIterator
+        .foreach(_.unpersist(blocking = false))
+      System.gc()
+      System.gc()
+    }
+  }
+
+  /** Per-query Spark runtime counters from the public listener API:
+    * jobs, stages, tasks, Σ executor run / CPU / GC time, shuffle
+    * read/write volume, fetch-wait and shuffle-write time — named like
+    * perfbench's `spark.*` trace metrics, so a Bench row and a traced
+    * perfbench run read alike. [[reset]] before an action; read
+    * [[record]] and [[stageTable]] after `GraftBridge.drainListenerBus`,
+    * since the bus delivers events asynchronously. */
+  final class QueryListener extends SparkListener {
+    private case class Stage(id: Int, submitted: Long, durMs: Long, tasks: Int,
+      runMs: Long, cpuMs: Long, gcMs: Long, readB: Long, writeB: Long,
+      fetchWaitMs: Long, writeMs: Long, name: String)
+    private val stages = mutable.ArrayBuffer.empty[Stage]
+    private var jobs = 0
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      synchronized {
+        stages += Stage(si.stageId, si.submissionTime.getOrElse(0L),
+          (for (c <- si.completionTime; s <- si.submissionTime) yield c - s).getOrElse(-1L),
+          si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000, m.jvmGCTime,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+          m.shuffleReadMetrics.fetchWaitTime, m.shuffleWriteMetrics.writeTime / 1000000,
+          si.name.linesIterator.next().take(90))
+      }
+    }
+
+    def reset(): Unit = synchronized { stages.clear(); jobs = 0 }
+
+    def record(): ListMap[String, Any] = synchronized {
+      def sum(f: Stage => Long) = stages.iterator.map(f).sum
+      ListMap("jobs" -> jobs, "stages" -> stages.size, "tasks" -> stages.iterator.map(_.tasks).sum,
+        "executor_run_s" -> sum(_.runMs) / 1e3, "executor_cpu_s" -> sum(_.cpuMs) / 1e3,
+        "gc_s" -> sum(_.gcMs) / 1e3, "shuffle_read_mb" -> sum(_.readB) / 1048576.0,
+        "shuffle_write_mb" -> sum(_.writeB) / 1048576.0,
+        "fetch_wait_s" -> sum(_.fetchWaitMs) / 1e3, "shuffle_write_s" -> sum(_.writeMs) / 1e3)
+    }
+
+    /** One line per completed stage, in submission order. */
+    def stageTable(): Seq[String] = synchronized {
+      stages.sortBy(_.submitted).map { r =>
+        f"  stage ${r.id}%4d dur=${r.durMs}%6d ms tasks=${r.tasks}%3d " +
+          f"run=${r.runMs}%6d cpu=${r.cpuMs}%6d gc=${r.gcMs}%5d " +
+          f"shufR=${r.readB}%9d shufW=${r.writeB}%9d " +
+          f"fw=${r.fetchWaitMs}%5d sw=${r.writeMs}%5d  ${r.name}"
+      }.toSeq
+    }
+  }
+
+  /** The repo root: the nearest ancestor of the working directory that
+    * holds build.sbt (else the working directory). Every record and
+    * report the tools write anchors here, so a run launched from a
+    * subdirectory cannot strand its files and a checkout elsewhere
+    * never writes into another tree. */
+  def repoRoot: Path = {
+    val cwd = Paths.get(sys.props("user.dir")).toAbsolutePath
+    Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
+      .find(d => Files.exists(d.resolve("build.sbt"))).getOrElse(cwd)
+  }
+
+  /** Usage: runMain graft.Bench [query ...] — with no names, every
+    * declared query (and a BENCH_HISTORY.jsonl row); with names, only
+    * those. Each query's per-stage table goes to stderr after its last
+    * rep. The scale factor comes from SPARK_GRAFT_SF_DIR. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.GraftSession.localCpus
-    // Measurement protocol (BASELINE.md §"Bench-gate protocol"):
-    //   warm1+min2 (default) — per query one discarded warm rep, then
-    //     min of two timed reps; the gate protocol since round 8 (single
-    //     reps swung 37% boot-to-boot).
-    //   cold1 (GRAFT_BENCH_PROTOCOL=cold1) — every query exactly once,
-    //     first-touch codegen/JIT billed to the query, matching how the
-    //     39.0 s round-1 baseline was recorded; exists so BASELINE.md
-    //     can carry measured anchors for BOTH protocols on one boot.
-    // Fixture/bucket-table warmup below runs in either protocol: it is
-    // scaffolding (one-time file writes), not query work.
-    // Validated BEFORE the quiesce gate: a typo'd protocol must fail
-    // fast, not after up to 10 minutes of waiting for a quiet window.
-    val protocol = sys.env.getOrElse("GRAFT_BENCH_PROTOCOL", "warm1+min2")
-    require(protocol == "warm1+min2" || protocol == "cold1",
-      s"GRAFT_BENCH_PROTOCOL=$protocol — known protocols: warm1+min2, cold1")
+    // validated BEFORE the quiesce gate: a typo'd name must fail fast,
+    // not after up to 10 minutes of waiting for a quiet window
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")} — valid: " +
+      SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
+    val names = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
+    // BASELINE.md §"Bench-gate protocol", each rep the full-output [[run]]:
+    // `+full` tells these rows from the `count()`-timed ones before them
+    val protocol = "warm1+min2+full"
     val quiesceWait = quiesce()
     val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus,
       Map("spark.ui.enabled" -> "false")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val listener = new QueryListener
+    spark.sparkContext.addSparkListener(listener)
     val loadStart = loadAvg1m()
     val stealStart = stealJiffies()
     val wallStart = System.nanoTime()
@@ -238,48 +338,34 @@ object Bench {
     // A query that throws is a recorded failure ("failed":[...]), never
     // a timing: it stays out of `queries` and `total`, and is not re-run
     // (its remaining reps would only re-throw).
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = names.map { name =>
       System.err.println(s"[bench] start $name")
-      def rep(): Option[Double] = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+      val fn = SparkEntry.queries(name)
+      // (seconds, listener record, stage table) of one rep, None if it threw
+      def timed(): Option[(Double, ListMap[String, Any], Seq[String])] = {
+        listener.reset()
+        val dt = try Some(rep(spark)(fn(spark, sfDir))._1) catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: $e")
-          false
+          None
         }
-        graft.core.CacheScope.drain() // per-query cache lifecycle: reuse inside, none after
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Untimed heap quiesce: without it, GC debt accumulated by a heavy
-        // query bills to whichever sub-second query runs next — observed as
-        // r4→r5 "drift" on q29/q56 (0.22→0.71 s with no code change) and as
-        // whole-run swings between consecutive identical runs.
-        // Round-10 hardening (the r9 q111/q101/q108/q110 drift cluster):
-        // belt-and-braces against anything the scoped drain missed — stray
-        // catalog cache entries and persistent RDD blocks (localCheckpoint
-        // leaves RDD-level blocks that Dataset.unpersist never sees), then
-        // two GC passes so the ContextCleaner actually reclaims broadcast
-        // and shuffle state before the next query is timed.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
-        System.gc()
-        if (ok) Some(dt) else None
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+        dt.map(t => (t, listener.record(), listener.stageTable()))
       }
-      val timed =
-        if (protocol == "cold1") rep().map { t =>
-          System.err.println(f"[bench] done  $name cold $t%.2f s")
-          Seq(t)
-        }
-        else for (warm <- rep(); a <- rep(); b <- rep()) yield {
-          System.err.println(f"[bench] done  $name min ${math.min(a, b)}%.2f s " +
-            f"(warm $warm%.2f, reps $a%.2f/$b%.2f)")
-          Seq(a, b)
-        }
-      name -> timed
+      val timedReps = for (warm <- timed(); a <- timed(); b <- timed()) yield {
+        val best = if (a._1 <= b._1) a else b
+        System.err.println(f"[bench] done  $name min ${best._1}%.2f s " +
+          f"(warm ${warm._1}%.2f, reps ${a._1}%.2f/${b._1}%.2f) " +
+          best._2.map { case (k, v) => s"$k=$v" }.mkString(" "))
+        best._3.foreach(System.err.println)
+        (Seq(a._1, b._1), best._2)
+      }
+      name -> timedReps
     }
-    val reps = results.collect { case (k, Some(ts)) => k -> ts }
+    spark.sparkContext.removeSparkListener(listener)
+    val reps = results.collect { case (k, Some((ts, _))) => k -> ts }
     val failed = results.collect { case (k, None) => k }
     val qs = ListMap(reps.map { case (k, ts) => k -> ts.min }: _*)
+    val metrics = ListMap(results.collect { case (k, Some((_, m))) => k -> m }: _*)
     val total = qs.values.sum
     val bounds = approxBounds(spark, sfDir)
     // label-memo posture rides every record: q131/q145/q146/q148 read
@@ -305,39 +391,30 @@ object Bench {
     }
     val line = json.writeValueAsString(ListMap(
       "metric" -> "total", "value" -> total, "unit" -> "sec", "label_memo" -> labelMemo,
-      "queries" -> qs, "approx_bounds" -> bounds, "sf" -> sfDir,
+      "queries" -> qs, "metrics" -> metrics, "approx_bounds" -> bounds, "sf" -> sfDir,
       "load_start" -> loadStart, "load_end" -> loadAvg1m(), "steal_cpus" -> stealCpus,
       "quiesce_wait_sec" -> quiesceWait, "protocol" -> protocol, "failed" -> failed,
       "n_queries" -> results.size, "total" -> total))
     println(line)
     // stdout tail-capture can truncate long runs; the file copy is the
-    // durable record (driver picks up either). Both files anchor to the
-    // repo root (nearest ancestor of CWD holding build.sbt) — a bench
-    // launched from elsewhere must not strand its records in a stray CWD
-    val root = {
-      var cur = java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath
-      var found: java.nio.file.Path = null
-      while (cur != null && found == null) {
-        if (java.nio.file.Files.exists(cur.resolve("build.sbt"))) found = cur
-        cur = cur.getParent
-      }
-      if (found == null) java.nio.file.Paths.get(sys.props("user.dir")) else found
-    }
-    java.nio.file.Files.createDirectories(root.resolve("target"))
-    java.nio.file.Files.writeString(root.resolve("target/bench.json"), line + "\n")
+    // durable record (driver picks up either)
+    val root = repoRoot
+    Files.createDirectories(root.resolve("target"))
+    Files.writeString(root.resolve("target/bench.json"), line + "\n")
     // append-only history: the per-round BENCH_r*.json tails truncate the
     // first ~25 queries, so cross-round per-query diffs need this record.
-    // Best-effort — an unwritable path must not fail the bench run itself
-    try {
+    // Only a whole-surface run appends — a subset's total is not a row of
+    // that series. Best-effort: an unwritable path must not fail the
+    // bench run itself
+    if (args.isEmpty) try {
       val stamped = json.writeValueAsString(ListMap(
         "ts" -> java.time.Instant.now().toString, "sf" -> sfDir, "cpus" -> cpus,
         "protocol" -> protocol, "label_memo" -> labelMemo, "n_queries" -> results.size,
         "load_start" -> loadStart, "load_end" -> loadAvg1m(), "steal_cpus" -> stealCpus,
         "quiesce_wait_sec" -> quiesceWait, "total" -> total, "queries" -> qs,
-        "reps" -> ListMap(reps: _*), "failed" -> failed))
-      java.nio.file.Files.writeString(
-        root.resolve("BENCH_HISTORY.jsonl"), stamped + "\n",
-        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+        "reps" -> ListMap(reps: _*), "metrics" -> metrics, "failed" -> failed))
+      Files.writeString(root.resolve("BENCH_HISTORY.jsonl"), stamped + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] history append failed: ${e.getMessage}")
     }

@@ -1,7 +1,8 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** Empirical linearity probe for the dedup family AND the superlinear-
@@ -26,9 +27,9 @@ import org.apache.spark.sql.functions._
   *     nothing about the engine.
   * Scaled corpora are written to parquet first (prep is untimed), then
   * the whole dedup family ([[Queries]]: q80/q81/q88/q89/q63/q65/q68/q69,
-  * plus q92 and q75 under the geometry dial) is timed: 1 warm rep + 2
-  * timed, min taken (Bench.scala's GC-quiesce reasoning), caches drained
-  * between reps.
+  * plus the [[dials]] rows) is timed: per cell one warm [[graft.Bench.rep]]
+  * then the min of two, so every rep computes the whole output
+  * ([[graft.Bench.run]]), drains caches and quiesces the heap.
   * Linear-growth gate: wall(k) / wall(1) ≤ 1.5·k for every query at
   * every k — superlinear growth (a quadratic candidate stage, an
   * uncapped hot bucket) fails the probe.
@@ -278,6 +279,117 @@ object ScaleProbe {
   private val Ks = Seq(1, 4, 8)
   private val Shift = 9700000L // lcm(97, 10) × 10,000 — residue-preserving
   private val GrowthFactor = 1.5
+  // Bound the driver-side materialization: MemoryStream is fed from the
+  // driver by construction, and the probe must not OOM the very driver
+  // it avoids measuring. Each stream cell takes the first MaxStreamRows
+  // rows in key order (sort+limit run in Spark, so the driver only ever
+  // holds the capped set) — far above every sf this probe runs at
+  // (sf0.1 × k=8 ≈ 800 k event rows), so the cap is a guard rail, not
+  // a truncation in practice; a capped cell logs loudly.
+  private val MaxStreamRows = 2000000
+
+  /** wall(k)/wall(1) ≤ GrowthFactor·k at every k. */
+  private def linear(wall: Int => Double): Boolean =
+    Ks.forall(k => wall(k) / wall(1) <= GrowthFactor * k)
+
+  /** A probe whose operating procedure turns one knob with the corpus:
+    * `at(k)` is (the knob's value, the query at that value) for data
+    * scale k. The rows column is `rowsCol`; `intro` and `outro` are the
+    * section's prose around its table and gate verdict. */
+  private case class Dial(label: String, heading: String, dial: String,
+      rowsCol: String, at: Int => (Int, graft.queries.Q), intro: String, outro: String)
+
+  /** The dialed probes, in report order. */
+  private def dials: Seq[Dial] = {
+    import graft.queries.{CorpusOps, LlmOps}
+    // the SRP-bucket candidate stage is quadratic in bucket OCCUPANCY, so
+    // fixed geometry at k× data grows candidate work ~k²/2^bits; the
+    // production answer is the env-backed dial — srpBits + ⌈log2 k⌉
+    // holds occupancy (and so per-bucket work) constant. The env overlay
+    // keeps ONLY the bits override on the real env — a synthetic Map
+    // would silently reset every other geometry knob (embeddingDim,
+    // probe radius, ...) to defaults and probe a different operator
+    // than the session's
+    val baseBits = graft.core.SketchGeometry.fromEnv().srpBits
+    def srpDial(f: graft.core.SketchGeometry => graft.queries.Q)(k: Int) = {
+      val bits = baseBits + (math.log(k.toDouble) / math.log(2.0)).ceil.toInt
+      (bits, f(graft.core.SketchGeometry.fromEnv(sys.env + ("GRAFT_SRP_BITS" -> bits.toString))))
+    }
+    Seq(
+      Dial("q92", "q92 embedding dedup under the geometry dial", "srpBits", "pairs",
+        srpDial(LlmOps.q92WithGeometry),
+        "The SRP-bucket candidate stage is quadratic in bucket occupancy; at k× data the " +
+          "operating procedure is srpBits + ⌈log2 k⌉ (the env-backed `GRAFT_SRP_BITS`), " +
+          "holding occupancy — and per-bucket join work — constant. Vectors are scaled by " +
+          "per-copy diagonal ±1 transforms (within-copy cosines exact, cross-copy " +
+          "decorrelated):",
+        " Pair counts track k× minus the slight recall dip more bits cost the planted " +
+          "near-identical pairs — the recall-vs-work tradeoff q91's spec measures on the " +
+          "probe-radius side of the same geometry."),
+      // same candidate machinery (SRP buckets), different consumer: a
+      // per-vector top-k instead of a threshold filter — the Σ occupancy²
+      // argument and its srpBits remedy are identical
+      Dial("q75", "q75 knn join under the same dial", "srpBits", "rows",
+        srpDial(CorpusOps.q75WithGeometry),
+        "q75 consumes the identical SRP candidate stage as q92 (per-vector top-3 instead of a " +
+          "threshold verify), so the same srpBits+⌈log2 k⌉ procedure applies:",
+        " Row counts sit near 3·vectors-with-peers and drift only with bucket occupancy — more " +
+          "bits at higher k trims some vectors' peer sets below 3."),
+      // the IVF analog of the srpBits dial: per-cell occupancy is n/k, so
+      // the codebook grows with the corpus (production: k ~ √n, centroids
+      // Lloyd-refined through q73's assignment op); here k = 8·dataK holds
+      // occupancy — and so per-query probe work at fixed nProbe=2 —
+      // constant as data scales.
+      Dial("q100", "q100 true-IVF under the codebook dial", "cells", "rows",
+        k => (8 * k, CorpusOps.q100WithCodebook(8 * k, 2)),
+        "The centroid-quantizer analog of q92/q75's srpBits dial: per-cell occupancy is n/k, " +
+          "so the codebook grows with the corpus (k = 8·dataK here; production runs k ~ √n " +
+          "with Lloyd-refined centroids through q73's assignment operator), holding per-query " +
+          "probe work at fixed nProbe constant:",
+        " The codebook scoring pass is k·n map-side work — with k ∝ data that term is the one " +
+          "superlinear ingredient, which is exactly why production uses k ~ √n (k·n = n^1.5 " +
+          "spread over the cluster) or a two-level coarse quantizer; at these scales it stays " +
+          "far below the join/shuffle floor."),
+      // q101 shares q100's coarse stage (k = 8·dataK holds cell occupancy
+      // constant); the PQ layer on top is corpus-LINEAR by construction —
+      // sub-vector encode is m lookups per vector, ADC scoring is a
+      // shortlist-bounded probe — so the whole pipeline must track k.
+      // This is the probe VERDICT r11 item 5 asked for: the PQ
+      // encode/ADC stage's linearity measured, not argued.
+      Dial("q101", "q101 IVF-PQ under the codebook dial", "cells", "rows",
+        k => (8 * k, CorpusOps.q101WithPq(8 * k, 2, 8, 8, 10)),
+        "q101 shares q100's coarse quantizer (k = 8·dataK holds cell occupancy constant); the " +
+          "PQ layer — per-vector sub-space encode, shortlist-bounded ADC re-rank — is " +
+          "corpus-linear by construction, and this row measures it:",
+        ""),
+      // the pairwise stage is Σ occupancy² over clusters, so the "k grows
+      // with n" operating procedure the SemDeDup scaladoc promises is
+      // measured here: k = 8·dataK holds occupancy — and per-cluster
+      // pair work — constant. (VERDICT r11 item 5's third row.)
+      Dial("q110", "q110 SemDeDup under the codebook dial", "cells", "rows",
+        k => (8 * k, CorpusOps.q110WithCodebook(8 * k)),
+        "Cluster-scoped pairwise verification is Σ occupancy²; growing the codebook with the " +
+          "corpus (k = 8·dataK) holds occupancy constant — the operating procedure the " +
+          "operator's scaladoc promises, measured:",
+        " Kept/cut verdicts track k× vectors; copy-0 centroids partition the decorrelated " +
+          "copies near-uniformly, so occupancy stays ~n/k."),
+      // the blocking analog of the srpBits/codebook dials: block occupancy
+      // is corpus-density × band width, so fixed width at k× data grows
+      // per-block pairs ~k²; the operating procedure narrows the band to
+      // width/k (floored at 16 = 2× the edit threshold, which preserves
+      // the neighbor-band recall bound — an ≤8-edit pair's lengths differ
+      // by ≤8 < 16), holding occupancy constant.
+      Dial("q116", "q116 fuzzy dedup under the band-width dial", "band width", "pairs",
+        { k => val width = math.max(16, 100 / k); (width, CorpusOps.q116WithBandWidth(width)) },
+        "Blocked Levenshtein's candidate stage is quadratic in block occupancy (corpus density " +
+          "× band width); at k× data the operating procedure is width/k (floored at 16 — twice " +
+          "the edit threshold, so the neighbor-band overlap still catches every ≤8-edit pair), " +
+          "holding per-block pair work constant:",
+        " Salted copies keep n_chars (and so bands) identical across copies, so this cell is " +
+          "the adversarial case — k× occupancy at fixed width — and the dial is what keeps it " +
+          "linear; pair counts shift with the width because narrower bands split some " +
+          "same-band collisions into the neighbor overlap."))
+  }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -290,33 +402,34 @@ object ScaleProbe {
     val baseRows = base.count()
 
     // ---- prep (untimed): one salted, id-shifted corpus per k ----------
+    // k copies of `base` (copy i is `copy(base, i)`) as <dir>/<name>.parquet
+    def writeScaled(base: DataFrame, k: Int, dir: String, name: String)(
+        copy: (DataFrame, Int) => DataFrame): Unit =
+      (0 until k).map(copy(base, _)).reduce(_ unionByName _)
+        .coalesce(cpus).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+    def shift(df: DataFrame, i: Int, cols: String*): DataFrame =
+      cols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(i * Shift)))
     val baseEmb = spark.read.parquet(s"$baseDir/embeddings.parquet")
     val dirs = Ks.map { k =>
-      val dir = s"target/scaleprobe/k$k"
-      val scaled = (0 until k).map { i =>
-        val shifted = base.withColumn("doc_id", col("doc_id") + lit(i * Shift))
+      val dir = graft.Bench.repoRoot.resolve(s"target/scaleprobe/k$k").toString
+      writeScaled(base, k, dir, "documents") { (df, i) =>
+        val shifted = shift(df, i, "doc_id")
         if (i == 0) shifted
         else shifted.withColumn("text",
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit(s"_$i"))), " "))
-      }.reduce(_ unionByName _)
-      scaled.coalesce(cpus).write.mode("overwrite")
-        .parquet(s"$dir/documents.parquet")
+          array_join(transform(split(col("text"), " "), t => concat(t, lit(s"_$i"))), " "))
+      }
       // vectors: copy i multiplies each dim by a deterministic ±1 drawn
       // from xxhash64(i, dim) — a diagonal orthogonal transform, so
       // within-copy inner products (cosines, planted-near-dup structure)
       // are preserved EXACTLY (±1 products are exact in IEEE) while
       // cross-copy cosines decorrelate to ~N(0, 1/dim), far below q92's
       // 0.9 verify threshold
-      val scaledEmb = (0 until k).map { i =>
-        val shifted = baseEmb.withColumn("vec_id", col("vec_id") + lit(i * Shift))
+      writeScaled(baseEmb, k, dir, "embeddings") { (df, i) =>
+        val shifted = shift(df, i, "vec_id")
         if (i == 0) shifted
-        else shifted.withColumn("embedding",
-          transform(col("embedding"),
-            (v, j) => when(pmod(xxhash64(lit(i), j), lit(2)) === 0, v).otherwise(-v)))
-      }.reduce(_ unionByName _)
-      scaledEmb.coalesce(cpus).write.mode("overwrite")
-        .parquet(s"$dir/embeddings.parquet")
+        else shifted.withColumn("embedding", transform(col("embedding"),
+          (v, j) => when(pmod(xxhash64(lit(i), j), lit(2)) === 0, v).otherwise(-v)))
+      }
       System.err.println(s"[scaleprobe] built k=$k corpus (${baseRows * k} docs)")
       k -> dir
     }
@@ -336,16 +449,6 @@ object ScaleProbe {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val baseEv = spark.read.parquet(s"$baseDir/events.parquet")
     val baseEvRows = baseEv.count()
-    dirs.foreach { case (k, dir) =>
-      val scaledEv = (0 until k).map { i =>
-        baseEv.withColumn("user_id", col("user_id") + lit(i * Shift))
-          .withColumn("event_id", col("event_id") + lit(i * Shift))
-      }.reduce(_ unionByName _)
-      scaledEv.coalesce(cpus).write.mode("overwrite")
-        .parquet(s"$dir/events.parquet")
-      System.err.println(s"[scaleprobe] built k=$k events (${baseEvRows * k} rows)")
-    }
-
     // orders/lineitem for the q111 graph probe: k× more ENTITIES —
     // custkey/suppkey/orderkey shifted per copy, so the trade graph is
     // k disjoint copies of the base graph (k× nodes, k× edges, same
@@ -353,51 +456,49 @@ object ScaleProbe {
     val baseOrd = spark.read.parquet(s"$baseDir/orders.parquet")
     val baseLi = spark.read.parquet(s"$baseDir/lineitem.parquet")
     dirs.foreach { case (k, dir) =>
-      val so = (0 until k).map { i =>
-        baseOrd.withColumn("o_orderkey", col("o_orderkey") + lit(i * Shift))
-          .withColumn("o_custkey", col("o_custkey") + lit(i * Shift))
-      }.reduce(_ unionByName _)
-      so.coalesce(cpus).write.mode("overwrite").parquet(s"$dir/orders.parquet")
-      val sl = (0 until k).map { i =>
-        baseLi.withColumn("l_orderkey", col("l_orderkey") + lit(i * Shift))
-          .withColumn("l_suppkey", col("l_suppkey") + lit(i * Shift))
-          // partkey shift keeps q115's co-purchase graph k disjoint
-          // copies too (else every copy re-derives the SAME part pairs
-          // and distinct() collapses the edge list back to 1×)
-          .withColumn("l_partkey", col("l_partkey") + lit(i * Shift))
-      }.reduce(_ unionByName _)
-      sl.coalesce(cpus).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      System.err.println(s"[scaleprobe] built k=$k orders/lineitem")
+      writeScaled(baseEv, k, dir, "events")(shift(_, _, "user_id", "event_id"))
+      writeScaled(baseOrd, k, dir, "orders")(shift(_, _, "o_orderkey", "o_custkey"))
+      // partkey shift keeps q115's co-purchase graph k disjoint copies
+      // too (else every copy re-derives the SAME part pairs and
+      // distinct() collapses the edge list back to 1×)
+      writeScaled(baseLi, k, dir, "lineitem")(shift(_, _, "l_orderkey", "l_suppkey", "l_partkey"))
+      System.err.println(s"[scaleprobe] built k=$k events (${baseEvRows * k} rows) + orders/lineitem")
     }
 
     // ---- measure ------------------------------------------------------
-    def timeFn(fn: graft.queries.Q, dir: String): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = fn(spark, dir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.core.CacheScope.drain()
-      System.gc()
-      (dt, n)
+    // one cell: a warm Bench.rep (codegen/JIT + FS client, untimed), then
+    // the min of two timed reps — (wall seconds, output rows)
+    def cell(label: String, dir: String, fn: graft.queries.Q): (Double, Long) = {
+      graft.Bench.rep(spark)(fn(spark, dir))
+      val best = Seq.fill(2)(graft.Bench.rep(spark)(fn(spark, dir))).minBy(_._1)
+      System.err.println(f"[scaleprobe] $label: ${best._1}%.2f s (${best._2} rows)")
+      best
     }
-    def timeOnce(name: String, dir: String): (Double, Long) =
-      // synthetic (non-SparkEntry) probe targets: internal builders
-      // whose serving queries read a memoized artifact
-      if (name == "pair_build_fresh")
-        timeFn(graft.queries.LlmOps.ngramPairJaccard, dir)
-      else timeFn(graft.SparkEntry.queries(name), dir)
-    // walls(query)(k) = (minWallSec, outputRows)
-    val walls: Map[String, Map[Int, (Double, Long)]] = Queries.map { q =>
-      q -> dirs.map { case (k, dir) =>
-        timeOnce(q, dir) // warm: codegen/JIT + FS client, untimed
-        val reps = Seq(timeOnce(q, dir), timeOnce(q, dir))
-        val best = reps.minBy(_._1)
-        System.err.println(f"[scaleprobe] $q k=$k: ${best._1}%.2f s (${best._2} rows)")
-        k -> best
-      }.toMap
-    }.toMap
+    // synthetic (non-SparkEntry) probe targets: internal builders whose
+    // serving queries read a memoized artifact
+    def target(name: String): graft.queries.Q =
+      if (name == "pair_build_fresh") graft.queries.LlmOps.ngramPairJaccard
+      else graft.SparkEntry.queries(name)
 
     // ---- report + gate ------------------------------------------------
     val sb = new StringBuilder
+    // the k=1/4/8 growth table the main and joins sections share: measure
+    // every cell (walls(query)(k) = (minWallSec, outputRows)), render the
+    // rows, and return whether every row passes the gate
+    def growthTable(qs: Seq[String]): Boolean = {
+      val walls = qs.map(q =>
+        q -> dirs.map { case (k, dir) => k -> cell(s"$q k=$k", dir, target(q)) }.toMap).toMap
+      sb.append("| query | k=1 wall | k=4 wall (ratio) | k=8 wall (ratio) | rows k=1→4→8 | gate (≤1.5k) |\n")
+      sb.append("|---|---|---|---|---|---|\n")
+      qs.map { q =>
+        val w = walls(q)
+        val (w1, r1) = w(1); val (w4, r4) = w(4); val (w8, r8) = w(8)
+        val pass = linear(k => w(k)._1)
+        sb.append(f"| $q | $w1%.2f s | $w4%.2f s (${w4 / w1}%.2f×) | $w8%.2f s (${w8 / w1}%.2f×) " +
+          f"| $r1%d → $r4%d → $r8%d | ${if (pass) "PASS" else "FAIL"} |\n")
+        pass
+      }.forall(identity)
+    }
     sb.append("# SCALEPROBE — measured linearity: dedup family + joins/windows\n\n")
     sb.append(s"Generated by `graft.tools.ScaleProbe` on `$baseDir` " +
       s"($baseRows base docs), local[$cpus], shuffle.partitions=$cpus.\n\n")
@@ -406,23 +507,13 @@ object ScaleProbe {
     sb.append("corpus's duplicate structure with disjoint shingles/digests — k× more ")
     sb.append("DATA, not k× replicas (unsalted replicas would force Θ(k²) dedup pairs ")
     sb.append("by construction). Prep untimed; per cell 1 warm + 2 timed reps, min, ")
+    sb.append("each rep computing every column of every row (`Bench.run`), ")
     sb.append("caches drained and heap quiesced between reps.\n\n")
-    sb.append("| query | k=1 wall | k=4 wall (ratio) | k=8 wall (ratio) | rows k=1→4→8 | gate (≤1.5k) |\n")
-    sb.append("|---|---|---|---|---|---|\n")
-    var allPass = true
-    Queries.foreach { q =>
-      val w = walls(q)
-      val (w1, r1) = w(1); val (w4, r4) = w(4); val (w8, r8) = w(8)
-      val g4 = w4 / w1; val g8 = w8 / w1
-      val pass = g4 <= GrowthFactor * 4 && g8 <= GrowthFactor * 8
-      allPass &&= pass
-      sb.append(f"| $q | $w1%.2f s | $w4%.2f s (${g4}%.2f×) | $w8%.2f s (${g8}%.2f×) " +
-        f"| $r1%d → $r4%d → $r8%d | ${if (pass) "PASS" else "FAIL"} |\n")
-    }
+    var allPass = growthTable(Queries)
     sb.append(s"\nGate: wall(k)/wall(1) ≤ ${GrowthFactor}·k for k ∈ {4, 8} — " +
       s"${if (allPass) "**ALL PASS**" else "**FAIL**"}. Sub-k ratios are expected " +
       "at this scale: per-query fixed costs (job scheduling, codegen reuse, " +
-      "broadcast build) amortize as data grows, and 32 cores are not saturated " +
+      s"broadcast build) amortize as data grows, and $cpus cores are not saturated " +
       "at k=1.\n")
     sb.append("""
 ## Methodology notes
@@ -440,202 +531,26 @@ object ScaleProbe {
   operators document.
 - Timing jitter on a shared box is real and the reason the probe takes
   min-of-2 after a warm rep. Round-7's q89 "drift" (1.41 → 1.66 s in the
-  round bench, plan unchanged) reproduces as cold-position noise, not
-  work growth: see the Profile attribution below.
+  round bench, plan unchanged) reproduced as cold-position noise, not
+  work growth: its first in-JVM rep ran well above the warm floor of
+  the reps after it.
 """)
 
-    // ---- q92 with the geometry dial -----------------------------------
-    // the SRP-bucket candidate stage is quadratic in bucket OCCUPANCY, so
-    // fixed geometry at k× data grows candidate work ~k²/2^bits; the
-    // production answer is the env-backed dial — srpBits + ⌈log2 k⌉
-    // holds occupancy (and so per-bucket work) constant. Measure q92
-    // under exactly that operating procedure.
-    val baseBits = graft.core.SketchGeometry.fromEnv().srpBits
-    // shared dial protocol for the SRP-bucketed ops: srpBits + ⌈log2 k⌉
-    // per cell, warm + min-of-2 like the main table. The env overlay
-    // keeps ONLY the bits override on the real env — a synthetic Map
-    // would silently reset every other geometry knob (embeddingDim,
-    // probe radius, ...) to defaults and probe a different operator
-    // than the session's
-    def dialedCells(label: String,
-        fnFor: graft.core.SketchGeometry => graft.queries.Q): Seq[(Int, Int, Double, Long)] =
-      dirs.map { case (k, dir) =>
-        val bits = baseBits + (math.log(k.toDouble) / math.log(2.0)).ceil.toInt
-        val g = graft.core.SketchGeometry.fromEnv(
-          sys.env + ("GRAFT_SRP_BITS" -> bits.toString))
-        val fn = fnFor(g)
-        timeFn(fn, dir) // warm, untimed — same protocol as the main table
-        val best = Seq(timeFn(fn, dir), timeFn(fn, dir)).minBy(_._1)
-        System.err.println(f"[scaleprobe] $label k=$k bits=$bits: ${best._1}%.2f s (${best._2} rows)")
-        (k, bits, best._1, best._2)
+    dials.foreach { d =>
+      val cells = dirs.map { case (k, dir) =>
+        val (v, fn) = d.at(k)
+        (k, v, cell(s"${d.label} k=$k ${d.dial}=$v", dir, fn))
       }
-    val q92Cells = dialedCells("q92", graft.queries.LlmOps.q92WithGeometry)
-    val (w92_1, w92_4, w92_8) = (q92Cells(0)._3, q92Cells(1)._3, q92Cells(2)._3)
-    val q92Pass = w92_4 / w92_1 <= GrowthFactor * 4 && w92_8 / w92_1 <= GrowthFactor * 8
-    allPass &&= q92Pass
-    sb.append("\n## q92 embedding dedup under the geometry dial\n\n")
-    sb.append("The SRP-bucket candidate stage is quadratic in bucket occupancy; at k× ")
-    sb.append("data the operating procedure is srpBits + ⌈log2 k⌉ (the env-backed ")
-    sb.append("`GRAFT_SRP_BITS`), holding occupancy — and per-bucket join work — ")
-    sb.append("constant. Vectors are scaled by per-copy diagonal ±1 transforms ")
-    sb.append("(within-copy cosines exact, cross-copy decorrelated):\n\n")
-    sb.append("| k | srpBits | wall | ratio | pairs |\n|---|---|---|---|---|\n")
-    q92Cells.foreach { case (k, bits, w, n) =>
-      sb.append(f"| $k | $bits | $w%.2f s | ${w / w92_1}%.2f× | $n%d |\n")
+      val w1 = cells.head._3._1
+      val pass = linear(k => cells.find(_._1 == k).get._3._1)
+      allPass &&= pass
+      sb.append(s"\n## ${d.heading}\n\n${d.intro}\n\n")
+      sb.append(s"| k | ${d.dial} | wall | ratio | ${d.rowsCol} |\n|---|---|---|---|---|\n")
+      cells.foreach { case (k, v, (w, n)) =>
+        sb.append(f"| $k | $v | $w%.2f s | ${w / w1}%.2f× | $n%d |\n")
+      }
+      sb.append(s"\nGate (≤1.5k): ${if (pass) "PASS" else "FAIL"}.${d.outro}\n")
     }
-    sb.append(f"\nGate (≤1.5k): ${if (q92Pass) "PASS" else "FAIL"}. Pair counts " +
-      "track k× minus the slight recall dip more bits cost the planted " +
-      "near-identical pairs — the recall-vs-work tradeoff q91's spec " +
-      "measures on the probe-radius side of the same geometry.\n")
-
-    // ---- q75 knn join under the same dial -----------------------------
-    // same candidate machinery (SRP buckets), different consumer: a
-    // per-vector top-k instead of a threshold filter — the Σ occupancy²
-    // argument and its srpBits remedy are identical
-    val q75Cells = dialedCells("q75", graft.queries.CorpusOps.q75WithGeometry)
-    val w75_1 = q75Cells(0)._3
-    val q75Pass = q75Cells(1)._3 / w75_1 <= GrowthFactor * 4 &&
-      q75Cells(2)._3 / w75_1 <= GrowthFactor * 8
-    allPass &&= q75Pass
-    sb.append("\n## q75 knn join under the same dial\n\n")
-    sb.append("q75 consumes the identical SRP candidate stage as q92 (per-vector ")
-    sb.append("top-3 instead of a threshold verify), so the same srpBits+⌈log2 k⌉ ")
-    sb.append("procedure applies:\n\n")
-    sb.append("| k | srpBits | wall | ratio | rows |\n|---|---|---|---|---|\n")
-    q75Cells.foreach { case (k, bits, w, n) =>
-      sb.append(f"| $k | $bits | $w%.2f s | ${w / w75_1}%.2f× | $n%d |\n")
-    }
-    sb.append(f"\nGate (≤1.5k): ${if (q75Pass) "PASS" else "FAIL"}. Row counts " +
-      "sit near 3·vectors-with-peers and drift only with bucket occupancy — " +
-      "more bits at higher k trims some vectors' peer sets below 3.\n")
-
-    // ---- q100 true-IVF under the codebook dial ------------------------
-    // the IVF analog of the srpBits dial: per-cell occupancy is n/k, so
-    // the codebook grows with the corpus (production: k ~ √n, centroids
-    // Lloyd-refined through q73's assignment op); here k = 8·dataK holds
-    // occupancy — and so per-query probe work at fixed nProbe=2 —
-    // constant as data scales.
-    val q100Cells = dirs.map { case (dk, dir) =>
-      val kCells = 8 * dk
-      val fn = graft.queries.CorpusOps.q100WithCodebook(kCells, 2)
-      timeFn(fn, dir) // warm, untimed
-      val best = Seq(timeFn(fn, dir), timeFn(fn, dir)).minBy(_._1)
-      System.err.println(f"[scaleprobe] q100 k=$dk cells=$kCells: ${best._1}%.2f s (${best._2} rows)")
-      (dk, kCells, best._1, best._2)
-    }
-    val w100_1 = q100Cells(0)._3
-    val q100Pass = q100Cells(1)._3 / w100_1 <= GrowthFactor * 4 &&
-      q100Cells(2)._3 / w100_1 <= GrowthFactor * 8
-    allPass &&= q100Pass
-    sb.append("\n## q100 true-IVF under the codebook dial\n\n")
-    sb.append("The centroid-quantizer analog of q92/q75's srpBits dial: per-cell ")
-    sb.append("occupancy is n/k, so the codebook grows with the corpus (k = 8·dataK ")
-    sb.append("here; production runs k ~ √n with Lloyd-refined centroids through ")
-    sb.append("q73's assignment operator), holding per-query probe work at fixed ")
-    sb.append("nProbe constant:\n\n")
-    sb.append("| k | cells | wall | ratio | rows |\n|---|---|---|---|---|\n")
-    q100Cells.foreach { case (dk, kCells, w, n) =>
-      sb.append(f"| $dk | $kCells | $w%.2f s | ${w / w100_1}%.2f× | $n%d |\n")
-    }
-    sb.append(f"\nGate (≤1.5k): ${if (q100Pass) "PASS" else "FAIL"}. The codebook " +
-      "scoring pass is k·n map-side work — with k ∝ data that term is the one " +
-      "superlinear ingredient, which is exactly why production uses k ~ √n " +
-      "(k·n = n^1.5 spread over the cluster) or a two-level coarse quantizer; " +
-      "at these scales it stays far below the join/shuffle floor.\n")
-
-    // ---- q101 IVF-PQ under the same codebook dial ---------------------
-    // q101 shares q100's coarse stage (k = 8·dataK holds cell occupancy
-    // constant); the PQ layer on top is corpus-LINEAR by construction —
-    // sub-vector encode is m lookups per vector, ADC scoring is a
-    // shortlist-bounded probe — so the whole pipeline must track k.
-    // This is the probe VERDICT r11 item 5 asked for: the PQ
-    // encode/ADC stage's linearity measured, not argued.
-    val q101Cells = dirs.map { case (dk, dir) =>
-      val kCells = 8 * dk
-      val fn = graft.queries.CorpusOps.q101WithPq(kCells, 2, 8, 8, 10)
-      timeFn(fn, dir) // warm, untimed
-      val best = Seq(timeFn(fn, dir), timeFn(fn, dir)).minBy(_._1)
-      System.err.println(f"[scaleprobe] q101 k=$dk cells=$kCells: ${best._1}%.2f s (${best._2} rows)")
-      (dk, kCells, best._1, best._2)
-    }
-    val w101_1 = q101Cells(0)._3
-    val q101Pass = q101Cells(1)._3 / w101_1 <= GrowthFactor * 4 &&
-      q101Cells(2)._3 / w101_1 <= GrowthFactor * 8
-    allPass &&= q101Pass
-    sb.append("\n## q101 IVF-PQ under the codebook dial\n\n")
-    sb.append("q101 shares q100's coarse quantizer (k = 8·dataK holds cell ")
-    sb.append("occupancy constant); the PQ layer — per-vector sub-space encode, ")
-    sb.append("shortlist-bounded ADC re-rank — is corpus-linear by construction, ")
-    sb.append("and this row measures it:\n\n")
-    sb.append("| k | cells | wall | ratio | rows |\n|---|---|---|---|---|\n")
-    q101Cells.foreach { case (dk, kCells, w, n) =>
-      sb.append(f"| $dk | $kCells | $w%.2f s | ${w / w101_1}%.2f× | $n%d |\n")
-    }
-    sb.append(f"\nGate (≤1.5k): ${if (q101Pass) "PASS" else "FAIL"}.\n")
-
-    // ---- q110 SemDeDup under the same codebook dial -------------------
-    // the pairwise stage is Σ occupancy² over clusters, so the "k grows
-    // with n" operating procedure the SemDeDup scaladoc promises is
-    // measured here: k = 8·dataK holds occupancy — and per-cluster
-    // pair work — constant. (VERDICT r11 item 5's third row.)
-    val q110Cells = dirs.map { case (dk, dir) =>
-      val kCells = 8 * dk
-      val fn = graft.queries.CorpusOps.q110WithCodebook(kCells)
-      timeFn(fn, dir) // warm, untimed
-      val best = Seq(timeFn(fn, dir), timeFn(fn, dir)).minBy(_._1)
-      System.err.println(f"[scaleprobe] q110 k=$dk cells=$kCells: ${best._1}%.2f s (${best._2} rows)")
-      (dk, kCells, best._1, best._2)
-    }
-    val w110_1 = q110Cells(0)._3
-    val q110Pass = q110Cells(1)._3 / w110_1 <= GrowthFactor * 4 &&
-      q110Cells(2)._3 / w110_1 <= GrowthFactor * 8
-    allPass &&= q110Pass
-    sb.append("\n## q110 SemDeDup under the codebook dial\n\n")
-    sb.append("Cluster-scoped pairwise verification is Σ occupancy²; growing the ")
-    sb.append("codebook with the corpus (k = 8·dataK) holds occupancy constant — ")
-    sb.append("the operating procedure the operator's scaladoc promises, measured:\n\n")
-    sb.append("| k | cells | wall | ratio | rows |\n|---|---|---|---|---|\n")
-    q110Cells.foreach { case (dk, kCells, w, n) =>
-      sb.append(f"| $dk | $kCells | $w%.2f s | ${w / w110_1}%.2f× | $n%d |\n")
-    }
-    sb.append(f"\nGate (≤1.5k): ${if (q110Pass) "PASS" else "FAIL"}. Kept/cut ")
-    sb.append("verdicts track k× vectors; copy-0 centroids partition the ")
-    sb.append("decorrelated copies near-uniformly, so occupancy stays ~n/k.\n")
-
-    // ---- q116 fuzzy dedup under the band-width dial -------------------
-    // the blocking analog of the srpBits/codebook dials: block occupancy
-    // is corpus-density × band width, so fixed width at k× data grows
-    // per-block pairs ~k²; the operating procedure narrows the band to
-    // width/k (floored at 16 = 2× the edit threshold, which preserves
-    // the neighbor-band recall bound — an ≤8-edit pair's lengths differ
-    // by ≤8 < 16), holding occupancy constant.
-    val q116Cells = dirs.map { case (k, dir) =>
-      val width = math.max(16, 100 / k)
-      val fn = graft.queries.CorpusOps.q116WithBandWidth(width)
-      timeFn(fn, dir) // warm, untimed
-      val best = Seq(timeFn(fn, dir), timeFn(fn, dir)).minBy(_._1)
-      System.err.println(f"[scaleprobe] q116 k=$k width=$width: ${best._1}%.2f s (${best._2} rows)")
-      (k, width, best._1, best._2)
-    }
-    val w116_1 = q116Cells(0)._3
-    val q116Pass = q116Cells(1)._3 / w116_1 <= GrowthFactor * 4 &&
-      q116Cells(2)._3 / w116_1 <= GrowthFactor * 8
-    allPass &&= q116Pass
-    sb.append("\n## q116 fuzzy dedup under the band-width dial\n\n")
-    sb.append("Blocked Levenshtein's candidate stage is quadratic in block ")
-    sb.append("occupancy (corpus density × band width); at k× data the operating ")
-    sb.append("procedure is width/k (floored at 16 — twice the edit threshold, so ")
-    sb.append("the neighbor-band overlap still catches every ≤8-edit pair), holding ")
-    sb.append("per-block pair work constant:\n\n")
-    sb.append("| k | band width | wall | ratio | pairs |\n|---|---|---|---|---|\n")
-    q116Cells.foreach { case (k, width, w, n) =>
-      sb.append(f"| $k | $width | $w%.2f s | ${w / w116_1}%.2f× | $n%d |\n")
-    }
-    sb.append(f"\nGate (≤1.5k): ${if (q116Pass) "PASS" else "FAIL"}. Salted copies " +
-      "keep n_chars (and so bands) identical across copies, so this cell is the " +
-      "adversarial case — k× occupancy at fixed width — and the dial is what " +
-      "keeps it linear; pair counts shift with the width because narrower bands " +
-      "split some same-band collisions into the neighbor overlap.\n")
 
     // ---- joins/windows probe (round-8 ask #6) -------------------------
     // the remaining superlinear-risk plans outside the dedup family:
@@ -645,14 +560,6 @@ object ScaleProbe {
     // sequence per user-hour-span. All three key on user_id, so k× users
     // at constant per-user activity must measure linear.
     val JoinQueries = Seq("q15_join_theta_range", "q16_join_asof", "q34_gap_fill")
-    val jwWalls = JoinQueries.map { q =>
-      q -> dirs.map { case (k, dir) =>
-        timeOnce(q, dir) // warm, untimed
-        val best = Seq(timeOnce(q, dir), timeOnce(q, dir)).minBy(_._1)
-        System.err.println(f"[scaleprobe] $q k=$k: ${best._1}%.2f s (${best._2} rows)")
-        k -> best
-      }.toMap
-    }.toMap
     sb.append("\n## joins/windows probe — theta-range, as-of, gap-fill\n\n")
     sb.append(s"Events scaled k× by user-population copies (user_id/event_id shifted ")
     sb.append(s"per copy, timestamps untouched — k× users in the same window, ")
@@ -661,34 +568,10 @@ object ScaleProbe {
     sb.append("q16 view×purchase candidates, q34 per-user hour grids), so linear ")
     sb.append("wall growth here certifies the work stays bounded per key as the ")
     sb.append("population grows:\n\n")
-    sb.append("| query | k=1 wall | k=4 wall (ratio) | k=8 wall (ratio) | rows k=1→4→8 | gate (≤1.5k) |\n")
-    sb.append("|---|---|---|---|---|---|\n")
-    JoinQueries.foreach { q =>
-      val w = jwWalls(q)
-      val (w1, r1) = w(1); val (w4, r4) = w(4); val (w8, r8) = w(8)
-      val g4 = w4 / w1; val g8 = w8 / w1
-      val pass = g4 <= GrowthFactor * 4 && g8 <= GrowthFactor * 8
-      allPass &&= pass
-      sb.append(f"| $q | $w1%.2f s | $w4%.2f s ($g4%.2f×) | $w8%.2f s ($g8%.2f×) " +
-        f"| $r1%d → $r4%d → $r8%d | ${if (pass) "PASS" else "FAIL"} |\n")
-    }
+    allPass = growthTable(JoinQueries) && allPass // measure even after a FAIL
     sb.append("\nRow counts scale exactly k×: each user copy reproduces the base " +
       "population's pairs/grids and cross-copy keys never meet — confirming " +
       "the joins stay key-local.\n")
-
-    // ---- q89 drift attribution (round-7 ask #6) -----------------------
-    val q89 = graft.SparkEntry.queries("q89_dedup_simhash")
-    val q89Walls = (1 to 4).map { _ =>
-      val t0 = System.nanoTime()
-      q89(spark, baseDir).count()
-      graft.core.CacheScope.drain(); System.gc()
-      (System.nanoTime() - t0) / 1e9
-    }
-    sb.append(f"\nq89 at `$baseDir`, 4 consecutive in-JVM reps: " +
-      q89Walls.map(w => f"$w%.2f").mkString(" s, ") + " s — first (cold) rep vs " +
-      f"warm floor = ${q89Walls.head / q89Walls.tail.min}%.2f×. The round-bench " +
-      "number includes that cold-position cost plus whatever GC debt the " +
-      "previous query left; the warm floor is the steady-state cost.\n")
 
     // ---- streaming gates under k× volume (round-10 TWS wave) ----------
     // The batch probes certify the BATCH plans; the transformWithState
@@ -704,18 +587,8 @@ object ScaleProbe {
     import spark.implicits._
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       graft.core.GraftSession.RocksDBProviderClass)
-    // Bound the driver-side materialization: MemoryStream is fed from the
-    // driver by construction, and the probe must not OOM the very driver
-    // it avoids measuring. Each cell takes the first MaxStreamRows rows
-    // in key order (sort+limit run in Spark, so the driver only ever
-    // holds the capped set) — far above every sf this probe runs at
-    // (sf0.1 × k=8 ≈ 800 k event rows), so the cap is a guard rail, not
-    // a truncation in practice; a capped cell logs loudly below.
-    val MaxStreamRows: Int =
-      sys.env.getOrElse("GRAFT_PROBE_STREAM_MAX_ROWS", "2000000").toInt
-    def timeStream[I, O](warm: Seq[I], bulk: Seq[I],
-        wire: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[O])(
-        implicit enc: org.apache.spark.sql.Encoder[I]): Double = {
+    def timeStream[I, O](warm: Seq[I], bulk: Seq[I], wire: Dataset[I] => Dataset[O])(
+        implicit enc: Encoder[I]): Double = {
       // same protocol as the batch cells: min of 2 full reps (each a
       // fresh query + state store — contention outliers shed), bulk
       // fed as 4 micro-batches (the shape a real trigger produces;
@@ -744,123 +617,79 @@ object ScaleProbe {
       }
       math.min(rep(), rep())
     }
-    val streamWalls: Map[String, Map[Int, (Double, Long)]] =
-      Seq("s88_token_meter", "s91_funnel", "s92_dup_ring",
-        "s93_chunker", "s94_minwise_panel", "s95_classifier_gate",
-        "s96_bpe_encode").map { s =>
-        s -> dirs.map { case (k, dir) =>
-          val wall = s match {
-            case "s88_token_meter" =>
-              val rows = spark.read.parquet(s"$dir/documents.parquet")
-                .select(col("lang"), col("doc_id"),
-                  size(split(col("text"), " ")).cast("long").as("n"))
-                .orderBy("doc_id").limit(MaxStreamRows)
-                .as[(String, Long, Long)].collect().sortBy(_._2)
-              if (rows.length == MaxStreamRows)
-                System.err.println(s"[scaleprobe] s88 cell CAPPED at $MaxStreamRows rows")
-              val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
-              (timeStream[(String, Long, Long), (String, Long, Long, Boolean, Long)](
-                w.toSeq, b.toSeq, ds => graft.streaming.TokenBudget.meter(ds)),
-                b.length.toLong) // bulk only: warm rows are untimed
-            case "s91_funnel" =>
-              val rows = graft.queries.events(spark, dir)
-                .select(col("user_id"), col("event_type"),
-                  expr("unix_micros(ts)").as("tus"), col("event_id"))
-                .orderBy("tus", "event_id").limit(MaxStreamRows)
-                .as[(Long, String, Long, Long)].collect().sortBy(r => (r._3, r._4))
-              if (rows.length == MaxStreamRows)
-                System.err.println(s"[scaleprobe] s91 cell CAPPED at $MaxStreamRows rows")
-              val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
-              (timeStream[(Long, String, Long, Long), graft.streaming.FunnelTracker.Out](
-                w.toSeq, b.toSeq, ds => graft.streaming.FunnelTracker.track(ds)),
-                b.length.toLong) // bulk only: warm rows are untimed
-            case "s93_chunker" =>
-              // stateless ingest chunker (batch twin q130): no state
-              // store at all — the probe certifies the streamed Generate
-              // stays row-local as the doc stream grows k× (fixed costs
-              // here are micro-batch planning, not store commits)
-              val rows = spark.read.parquet(s"$dir/documents.parquet")
-                .select(col("doc_id"), col("text"))
-                .orderBy("doc_id").limit(MaxStreamRows)
-                .as[(Long, String)].collect().sortBy(_._1)
-              if (rows.length == MaxStreamRows)
-                System.err.println(s"[scaleprobe] s93 cell CAPPED at $MaxStreamRows rows")
-              val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
-              (timeStream[(Long, String), (Long, Long, Long, Long, String)](
-                w.toSeq, b.toSeq, ds => graft.streaming.Chunker.chunk(
-                    ds.toDF("doc_id", "text"), graft.queries.LlmOps.ChunkWindow,
-                    graft.queries.LlmOps.ChunkStride)
-                  .as[(Long, Long, Long, Long, String)]),
-                b.length.toLong) // bulk only: warm rows are untimed
-            case "s95_classifier_gate" =>
-              // stateless ingest classifier (batch twin q147): no state
-              // store — the probe certifies the per-row hashed-feature
-              // fold stays row-local as the doc stream grows k×
-              val rows = spark.read.parquet(s"$dir/documents.parquet")
-                .select(col("doc_id"), col("text"))
-                .orderBy("doc_id").limit(MaxStreamRows)
-                .as[(Long, String)].collect().sortBy(_._1)
-              if (rows.length == MaxStreamRows)
-                System.err.println(s"[scaleprobe] s95 cell CAPPED at $MaxStreamRows rows")
-              val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
-              (timeStream[(Long, String), (Long, Long, Long, Boolean)](
-                w.toSeq, b.toSeq, ds => graft.streaming.ClassifierGate
-                  .gate(ds.toDF("doc_id", "text"))
-                  .as[(Long, Long, Long, Boolean)]),
-                b.length.toLong) // bulk only: warm rows are untimed
-            case "s96_bpe_encode" =>
-              // stateless artifact-fold encode (batch twin q149/q150):
-              // the merge list is learned UNTIMED (it is the shipped
-              // artifact, not ingest work), then the probe certifies
-              // the per-row R-layer fold stays row-local as the doc
-              // stream grows k×
-              val rows = spark.read.parquet(s"$dir/documents.parquet")
-                .select(col("doc_id"), col("text"))
-                .orderBy("doc_id").limit(MaxStreamRows)
-                .as[(Long, String)].collect().sortBy(_._1)
-              if (rows.length == MaxStreamRows)
-                System.err.println(s"[scaleprobe] s96 cell CAPPED at $MaxStreamRows rows")
-              val merges = graft.queries.CorpusOps.learnMerges(
-                spark.createDataset(rows.toIndexedSeq).toDF("doc_id", "text"),
-                graft.queries.CorpusOps.BpeRounds)
-              val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
-              (timeStream[(Long, String), (Long, Long, Long, Long)](
-                w.toSeq, b.toSeq, ds => graft.streaming.BpeEncoder
-                  .encode(ds.toDF("doc_id", "text"), merges)
-                  .as[(Long, Long, Long, Long)]),
-                b.length.toLong) // bulk only: warm rows are untimed
-            case "s94_minwise_panel" =>
-              // CDC minwise panel (batch twin q137): state is K·|sources|
-              // pairs regardless of volume — the probe certifies the
-              // per-arrival panel fold stays flat as the doc stream
-              // grows k× (the event log emitted shrinks per row as
-              // panels saturate, so any wall growth is pure fold cost)
-              val rows = spark.read.parquet(s"$dir/documents.parquet")
-                .select(col("source"), col("doc_id"))
-                .orderBy("doc_id").limit(MaxStreamRows)
-                .as[(String, Long)].collect().sortBy(_._2)
-              if (rows.length == MaxStreamRows)
-                System.err.println(s"[scaleprobe] s94 cell CAPPED at $MaxStreamRows rows")
-              val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
-              (timeStream[(String, Long), graft.streaming.MinwisePanel.Out](
-                w.toSeq, b.toSeq, ds => graft.streaming.MinwisePanel.panel(ds)),
-                b.length.toLong) // bulk only: warm rows are untimed
-            case _ =>
-              val rows = spark.read.parquet(s"$dir/documents.parquet")
-                .select(col("source"), col("doc_id"), xxhash64(col("text")).as("fp"))
-                .orderBy("doc_id").limit(MaxStreamRows)
-                .as[(String, Long, Long)].collect().sortBy(_._2)
-              if (rows.length == MaxStreamRows)
-                System.err.println(s"[scaleprobe] s92 cell CAPPED at $MaxStreamRows rows")
-              val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
-              (timeStream[(String, Long, Long), (String, Long, Long, Boolean)](
-                w.toSeq, b.toSeq, ds => graft.streaming.RecentDupGate.gate(ds)),
-                b.length.toLong) // bulk only: warm rows are untimed
-          }
-          System.err.println(f"[scaleprobe] ${s} k=$k: ${wall._1}%.2f s (${wall._2} rows)")
-          k -> wall
-        }.toMap
+    // one stream cell: the first MaxStreamRows rows of `src` in `keys`
+    // order, the first ≤64 of them fed as the untimed warm batch, the
+    // rest timed — (wall seconds, bulk rows)
+    def streamCell[I: Encoder, O](label: String, src: DataFrame, keys: String*)(
+        wire: Dataset[I] => Dataset[O]): (Double, Long) = {
+      val rows = src.orderBy(keys.map(col): _*).limit(MaxStreamRows).as[I].collect()
+      if (rows.length == MaxStreamRows)
+        System.err.println(s"[scaleprobe] $label cell CAPPED at $MaxStreamRows rows")
+      val (w, b) = rows.splitAt(math.min(64, rows.length / 10))
+      (timeStream(w.toSeq, b.toSeq, wire), b.length.toLong)
+    }
+    def docs(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
+    val streamOps: Seq[(String, String => (Double, Long))] = Seq(
+      "s88_token_meter" -> (dir =>
+        streamCell[(String, Long, Long), (String, Long, Long, Boolean, Long)]("s88",
+          docs(dir).select(col("lang"), col("doc_id"),
+            size(split(col("text"), " ")).cast("long").as("n")), "doc_id")(
+          ds => graft.streaming.TokenBudget.meter(ds))),
+      "s91_funnel" -> (dir =>
+        streamCell[(Long, String, Long, Long), graft.streaming.FunnelTracker.Out]("s91",
+          graft.queries.events(spark, dir).select(col("user_id"), col("event_type"),
+            expr("unix_micros(ts)").as("tus"), col("event_id")), "tus", "event_id")(
+          ds => graft.streaming.FunnelTracker.track(ds))),
+      "s92_dup_ring" -> (dir =>
+        streamCell[(String, Long, Long), (String, Long, Long, Boolean)]("s92",
+          docs(dir).select(col("source"), col("doc_id"), xxhash64(col("text")).as("fp")),
+          "doc_id")(ds => graft.streaming.RecentDupGate.gate(ds))),
+      // stateless ingest chunker (batch twin q130): no state store at
+      // all — the probe certifies the streamed Generate stays row-local
+      // as the doc stream grows k× (fixed costs here are micro-batch
+      // planning, not store commits)
+      "s93_chunker" -> (dir =>
+        streamCell[(Long, String), (Long, Long, Long, Long, String)]("s93",
+          docs(dir).select(col("doc_id"), col("text")), "doc_id")(
+          ds => graft.streaming.Chunker.chunk(ds.toDF("doc_id", "text"),
+              graft.queries.LlmOps.ChunkWindow, graft.queries.LlmOps.ChunkStride)
+            .as[(Long, Long, Long, Long, String)])),
+      // CDC minwise panel (batch twin q137): state is K·|sources| pairs
+      // regardless of volume — the probe certifies the per-arrival panel
+      // fold stays flat as the doc stream grows k× (the event log emitted
+      // shrinks per row as panels saturate, so any wall growth is pure
+      // fold cost)
+      "s94_minwise_panel" -> (dir =>
+        streamCell[(String, Long), graft.streaming.MinwisePanel.Out]("s94",
+          docs(dir).select(col("source"), col("doc_id")), "doc_id")(
+          ds => graft.streaming.MinwisePanel.panel(ds))),
+      // stateless ingest classifier (batch twin q147): no state store —
+      // the probe certifies the per-row hashed-feature fold stays
+      // row-local as the doc stream grows k×
+      "s95_classifier_gate" -> (dir =>
+        streamCell[(Long, String), (Long, Long, Long, Boolean)]("s95",
+          docs(dir).select(col("doc_id"), col("text")), "doc_id")(
+          ds => graft.streaming.ClassifierGate.gate(ds.toDF("doc_id", "text"))
+            .as[(Long, Long, Long, Boolean)])),
+      // stateless artifact-fold encode (batch twin q149/q150): the merge
+      // list is learned UNTIMED over the cell's rows (it is the shipped
+      // artifact, not ingest work), then the probe certifies the per-row
+      // R-layer fold stays row-local as the doc stream grows k×
+      "s96_bpe_encode" -> { dir =>
+        val src = docs(dir).select(col("doc_id"), col("text"))
+        val merges = graft.queries.CorpusOps.learnMerges(
+          src.orderBy("doc_id").limit(MaxStreamRows), graft.queries.CorpusOps.BpeRounds)
+        streamCell[(Long, String), (Long, Long, Long, Long)]("s96", src, "doc_id")(
+          ds => graft.streaming.BpeEncoder.encode(ds.toDF("doc_id", "text"), merges)
+            .as[(Long, Long, Long, Long)])
+      })
+    val streamWalls = streamOps.map { case (s, run) =>
+      s -> dirs.map { case (k, dir) =>
+        val wall = run(dir)
+        System.err.println(f"[scaleprobe] $s k=$k: ${wall._1}%.2f s (${wall._2} rows)")
+        k -> wall
       }.toMap
+    }
     spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     sb.append("\n## streaming gates under k× volume — the transformWithState wave\n\n")
     sb.append("The full k× corpus/event stream through MemoryStream → ")
@@ -873,25 +702,21 @@ object ScaleProbe {
     sb.append("fold cost stays flat as volume grows:\n\n")
     sb.append("| op | k=1 wall | k=4 wall (ratio) | k=8 wall (ratio) | rows k=1→4→8 | rows/s at k=8 | gate (≤1.5k) |\n")
     sb.append("|---|---|---|---|---|---|---|\n")
-    var streamPass = true
-    Seq("s88_token_meter", "s91_funnel", "s92_dup_ring",
-      "s93_chunker", "s94_minwise_panel", "s95_classifier_gate",
-      "s96_bpe_encode").foreach { s =>
-      val m = streamWalls(s)
+    val streamPass = streamWalls.map { case (s, m) =>
       val (w1, n1) = m(1); val (w4, n4) = m(4); val (w8, n8) = m(8)
-      val (g4, g8) = (w4 / w1, w8 / w1)
-      val pass = g4 <= GrowthFactor * 4 && g8 <= GrowthFactor * 8
-      streamPass &= pass
-      sb.append(f"| $s | $w1%.2f s | $w4%.2f s ($g4%.2f×) | $w8%.2f s ($g8%.2f×) " +
+      val pass = linear(k => m(k)._1)
+      sb.append(f"| $s | $w1%.2f s | $w4%.2f s (${w4 / w1}%.2f×) | $w8%.2f s (${w8 / w1}%.2f×) " +
         f"| $n1%d → $n4%d → $n8%d | ${n8 / w8}%.0f | ${if (pass) "PASS" else "FAIL"} |\n")
-    }
+      pass
+    }.forall(identity)
     sb.append("\nMicro-batch fixed costs (offset log, store commit) dominate at " +
       "these volumes, so sub-k ratios are expected; the gate only rejects " +
       "super-linear growth — per-row state work creeping with corpus size.\n")
 
-    Files.writeString(Paths.get("/root/repo/SCALEPROBE.md"), sb.toString)
+    val out = graft.Bench.repoRoot.resolve("SCALEPROBE.md")
+    Files.writeString(out, sb.toString)
     val ok = allPass && streamPass
-    println(s"[scaleprobe] wrote SCALEPROBE.md — ${if (ok) "PASS" else "FAIL"}")
+    println(s"[scaleprobe] wrote $out — ${if (ok) "PASS" else "FAIL"}")
     spark.stop()
     if (!ok) sys.exit(1)
   }

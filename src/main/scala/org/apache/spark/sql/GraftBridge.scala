@@ -18,4 +18,9 @@ object GraftBridge {
     * reps 3× in measurement. */
   def unloadStateStores(): Unit =
     execution.streaming.state.StateStore.unloadAll()
+
+  /** Waits until the asynchronous listener bus delivered every event
+    * posted so far (`waitUntilEmpty` is spark-private). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
