@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** AQE partition-coalescing floor (spark.sql.adaptive.coalescePartitions
-    * .minPartitionSize), env-dialed with a 256k default. With
+    * .minPartitionSize): 256k. With
     * parallelismFirst (Spark default) AQE coalesces small shuffle/cache
     * outputs only down to this size, so the floor decides how much
     * PARALLELISM a medium-sized frame keeps. The upstream 1 MB default
@@ -30,11 +30,10 @@ object GraftSession {
     * 25 partitions under 256k). 256k keeps per-task overhead negligible
     * (≥ ~50 ms of compute per task at the engine's densest stages)
     * while kilobyte-sized frames still collapse to one partition.
-    * Dial up (GRAFT_AQE_MIN_PARTITION=1m) for a deployment where
-    * per-partition fetch overhead dominates, e.g. many-executor
-    * clusters with small shuffles. */
-  val AqeMinPartitionSize: String =
-    sys.env.getOrElse("GRAFT_AQE_MIN_PARTITION", "256k")
+    * A deployment where per-partition fetch overhead dominates (e.g.
+    * many-executor clusters with small shuffles) raises it, say to 1m,
+    * through [[builder]]'s `extra` map. */
+  val AqeMinPartitionSize: String = "256k"
 
   /** Shuffle scratch directory (spark.local.dir), env-dialed with a
     * measured default. Precedence, first match wins:

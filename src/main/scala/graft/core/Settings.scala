@@ -1,10 +1,13 @@
 package graft.core
 
 /** Env-backed runtime config mirroring the reference's settings surface
-  * (`/root/reference/src/ex8_producer/settings.py:1-20`): same variable
-  * names, same defaults, same required-at-startup triple
-  * (`app.py:202-203`). S3 credentials map onto `spark.hadoop.fs.s3a.*`
-  * when a real cluster is configured; in this sandbox paths are `file://`.
+  * (`settings.py:1-20`): same variable names, same defaults, same
+  * required-at-startup triple (`app.py:202-203`). S3 credentials map
+  * onto `spark.hadoop.fs.s3a.*` when a real cluster is configured; local
+  * runs use `file://` paths. The reference's three pacing constants
+  * (`settings.py:4-6`) have no field: chunk pacing is deliberately not
+  * reproduced (see [[graft.ingest.Pipeline]]), and the 60 s cadence is
+  * [[graft.ingest.Sinks.ReferenceCadence]].
   */
 final case class Settings(
     awsDefaultRegion: Option[String],
@@ -14,10 +17,7 @@ final case class Settings(
     s3BucketName: Option[String],
     s3PathPrefix: String,
     kafkaBootstrapServers: String,
-    kafkaTopic: String,
-    chunkSize: Int,
-    processIntervalSec: Int,
-    retryDelaySec: Int) {
+    kafkaTopic: String) {
 
   /** Startup validation parity with `app.py:202-203`. */
   def validated: Settings = {
@@ -52,11 +52,12 @@ final case class Settings(
   ).toMap
 }
 
-/** [EXT] Env-backed sketch geometry for the LLM-pipeline dedup/ANN ops
-  * (q81/q88/q89/q91/q92) — the reference's config idiom
-  * (`settings.py:1-20`: env with defaults) applied to the knobs that must
-  * scale with corpus size. The scaling derivations live at the use sites
-  * in `graft.queries.LlmOps`; the operational rule of thumb:
+/** [EXT] Sketch geometry for the LLM-pipeline dedup/ANN ops
+  * (q81/q88/q89/q91/q92): the knobs that must scale with corpus size.
+  * The declared queries run [[SketchGeometry.defaults]]; ScaleProbe and
+  * the specs pass other geometries to the `*WithGeometry` cores. The
+  * scaling derivations live at the use sites in `graft.queries.LlmOps`;
+  * the operational rule of thumb:
   *
   *  - `simhashBandBits`, `srpBits` grow ~log2(corpus) to keep expected
   *    bucket occupancy (n·bands/2^bits resp. n/2^bits) bounded;
@@ -79,10 +80,8 @@ final case class Settings(
   *  - `deconShingleN` is q63's decontamination n-gram width: production
   *    decontamination uses 8–13-token shingles (a 3-gram flags
   *    incidental phrase overlap; a 13-gram only near-verbatim leaks) —
-  *    the default stays 3 so the sf0.01 oracle hashes are stable, a
-  *    real corpus sets GRAFT_DECON_SHINGLE_N=8..13.
-  *
-  * A 100× corpus is a new env, not a recompile.
+  *    the default stays 3 so the sf0.01 oracle hashes are stable; a
+  *    real corpus wants 8..13.
   */
 final case class SketchGeometry(
     minhashK: Int,
@@ -127,28 +126,13 @@ object SketchGeometry {
     simhashBandBits = 16, srpBits = 8, srpProbeRadius = 2, embeddingDim = 64,
     bandOccupancyCap = 1000, deconShingleN = 3,
     // matched to the synthetic corpus's 31-token vocabulary so the OOV
-    // tail is non-empty at every test SF; production corpora dial this
+    // tail is non-empty at every test SF; production corpora size this
     // to the tokenizer's vocab budget (32k-128k)
     oovVocabSize = 16)
-
-  def fromEnv(env: Map[String, String] = sys.env): SketchGeometry = {
-    def i(k: String, d: Int) = env.get(k).map(_.trim.toInt).getOrElse(d)
-    SketchGeometry(
-      minhashK = i("GRAFT_MINHASH_K", defaults.minhashK),
-      minhashRowsPerBand = i("GRAFT_MINHASH_ROWS_PER_BAND", defaults.minhashRowsPerBand),
-      shingleDfCap = i("GRAFT_SHINGLE_DF_CAP", defaults.shingleDfCap),
-      simhashBandBits = i("GRAFT_SIMHASH_BAND_BITS", defaults.simhashBandBits),
-      srpBits = i("GRAFT_SRP_BITS", defaults.srpBits),
-      srpProbeRadius = i("GRAFT_SRP_PROBE_RADIUS", defaults.srpProbeRadius),
-      embeddingDim = i("GRAFT_EMBEDDING_DIM", defaults.embeddingDim),
-      bandOccupancyCap = i("GRAFT_BAND_OCCUPANCY_CAP", defaults.bandOccupancyCap),
-      deconShingleN = i("GRAFT_DECON_SHINGLE_N", defaults.deconShingleN),
-      oovVocabSize = i("GRAFT_OOV_VOCAB", defaults.oovVocabSize))
-  }
 }
 
 object Settings {
-  /** Defaults from `settings.py:4-6,17-18`. */
+  /** Defaults from `settings.py:17-18`. */
   def fromEnv(env: Map[String, String] = sys.env): Settings = Settings(
     awsDefaultRegion = env.get("AWS_DEFAULT_REGION"),
     awsAccessKeyId = env.get("AWS_ACCESS_KEY_ID"),
@@ -157,8 +141,5 @@ object Settings {
     s3BucketName = env.get("S3_BUCKET_NAME"),
     s3PathPrefix = env.getOrElse("S3_PATH_PREFIX", ""),
     kafkaBootstrapServers = env.getOrElse("KAFKA_BOOTSTRAP_SERVERS", "localhost:9092"),
-    kafkaTopic = env.getOrElse("KAFKA_TOPIC", "my-topic"),
-    chunkSize = 10,
-    processIntervalSec = 60,
-    retryDelaySec = 20)
+    kafkaTopic = env.getOrElse("KAFKA_TOPIC", "my-topic"))
 }

@@ -34,15 +34,16 @@ import graft.core.Schemas
   * Null policy (SURVEY.md §7.3): the .avsc is authoritative — a null in
   * one of the 9 required fields raises by default (strict mode, so bad
   * data is loud), instead of the reference's swallowed per-chunk log line
-  * (`app.py:157-158`). With `lenient = true` the poison row is nulled out
-  * and COUNTED through the accumulator instead of killing the batch —
+  * (`app.py:157-158`). Given a `badRecords` counter (lenient mode) the
+  * poison row is nulled out and COUNTED instead of killing the batch —
   * the bad-record metric SURVEY §7.3 promises. (Accumulator caveat: task
   * retries can over-count; it is a monitoring metric, not a ledger.)
   */
 case class AvroEncodeExpression(child: Expression, avscJson: String,
-    lenient: Boolean = false,
     badRecords: Option[org.apache.spark.util.LongAccumulator] = None)
     extends UnaryExpression with CodegenFallback {
+
+  private def lenient: Boolean = badRecords.isDefined
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = child.nullable || lenient
@@ -77,8 +78,8 @@ case class AvroEncodeExpression(child: Expression, avscJson: String,
       enc.flush()
       out.toByteArray
     } catch {
-      case scala.util.control.NonFatal(e) if lenient =>
-        badRecords.foreach(_.add(1L))
+      case scala.util.control.NonFatal(_) if lenient =>
+        badRecords.get.add(1L)
         null
     }
   }
@@ -171,7 +172,7 @@ object AvroCodec {
     val acc = spark.sparkContext.longAccumulator("graft.avro.bad_records")
     val values = canonical.select(record(canonical))
       .select(ColumnBridge.column(AvroEncodeExpression(attr("r"),
-        Schemas.reclamacoesAvsc, lenient = true, badRecords = Some(acc))).as("value"))
+        Schemas.reclamacoesAvsc, badRecords = Some(acc))).as("value"))
       .filter(expr("value IS NOT NULL")) // nulled-out poison rows: counted, not shipped
     (values, acc)
   }

@@ -104,6 +104,6 @@ object Pipeline {
 
   /** The whole producer, running: stream → sink at the reference cadence. */
   def run(spark: SparkSession, sourcePath: String, sink: GraftSink,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
+      trigger: Trigger = Sinks.ReferenceCadence): StreamingQuery =
     Sinks.start(valuesStream(spark, sourcePath), sink, trigger)
 }

@@ -86,9 +86,12 @@ final case class IdempotentParquetSink(path: String, checkpoint: String) extends
 }
 
 object Sinks {
-  /** Start a value frame into a sink with the reference's 60 s cadence
-    * (`PROCESS_INTERVAL`, `settings.py:5`) as the trigger. */
+  /** The reference's 60 s cadence (`PROCESS_INTERVAL`, `settings.py:5`):
+    * the default trigger of every producer stream. */
+  val ReferenceCadence: Trigger = Trigger.ProcessingTime("60 seconds")
+
+  /** Start a value frame into a sink, by default at [[ReferenceCadence]]. */
   def start(values: DataFrame, sink: GraftSink,
-      trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery =
+      trigger: Trigger = ReferenceCadence): StreamingQuery =
     sink.configure(values.writeStream.outputMode("append").trigger(trigger)).start()
 }

@@ -122,15 +122,11 @@ object Composition {
         col("score_fp")))
   }
 
-  /** q135's shingle width — its own dial (default 3, the near-dup
-    * family's width: source overlap is a DUPLICATION diagnostic, not
-    * q133's membership probe, so the q81/q104 width is the right
-    * default). The oracle interpolates the same value. */
-  private[graft] val OverlapShingleN: Int = {
-    val n = sys.env.getOrElse("GRAFT_OVERLAP_SHINGLE_N", "3").toInt
-    require(n >= 2, s"GRAFT_OVERLAP_SHINGLE_N=$n — a width under 2 is a typo")
-    n
-  }
+  /** q135's shingle width — 3, the near-dup family's width: source
+    * overlap is a DUPLICATION diagnostic, not q133's membership probe,
+    * so the q81/q104 width is the right one. The oracle interpolates
+    * the same value. */
+  private[graft] val OverlapShingleN: Int = 3
 
   /** q135 [EXT]: cross-source overlap matrix — for every unordered pair
     * of crawl sources, the distinct-shingle intersection with Jaccard
@@ -204,16 +200,8 @@ object Composition {
     * draw count. Both interpolated into the oracle; like q94's bucket
     * count, the shard count is a declared constant of the dataset build
     * (changing it re-draws the sample). */
-  private[graft] val ResampleShards: Int = {
-    val s = sys.env.getOrElse("GRAFT_RESAMPLE_SHARDS", "16").toInt
-    require(s >= 1, s"GRAFT_RESAMPLE_SHARDS=$s — need at least one shard")
-    s
-  }
-  private[graft] val ResampleTarget: Int = {
-    val m = sys.env.getOrElse("GRAFT_RESAMPLE_TARGET", "200").toInt
-    require(m >= 1, s"GRAFT_RESAMPLE_TARGET=$m — need a positive draw target")
-    m
-  }
+  private[graft] val ResampleShards: Int = 16
+  private[graft] val ResampleTarget: Int = 200
 
   /** q136 [EXT]: DSIR importance resampling — the ACTION stage of q125
     * (Xie et al. 2023): documents are drawn WITH REPLACEMENT
@@ -229,7 +217,7 @@ object Composition {
     *
     * 100 TB — the two-phase shard prefix sum IS the distributed
     * spelling of a global weighted prefix sum: phase 1 shuffles once on
-    * a Knuth-hash shard of doc_id (S shards = the parallelism dial;
+    * a Knuth-hash shard of doc_id (S shards = the parallelism knob;
     * each shard's ordered cumulative sum is one window task over
     * corpus/S rows); phase 2 cumulates the S per-shard totals — an
     * S-row frame — into shard offsets and BROADCASTS them back. No
@@ -301,12 +289,8 @@ object Composition {
 
   /** q138's verbatim threshold: a max-run of R consecutive 8-gram hits
     * spans R + 7 contiguous train-shared tokens (R = 5 ⇒ a 12-token
-    * verbatim splice). Env-dialed, interpolated into the oracle. */
-  private[graft] val MemoRunMin: Int = {
-    val r = sys.env.getOrElse("GRAFT_MEMO_RUN_MIN", "5").toInt
-    require(r >= 1, s"GRAFT_MEMO_RUN_MIN=$r — a non-positive run flags everything")
-    r
-  }
+    * verbatim splice). Interpolated into the oracle. */
+  private[graft] val MemoRunMin: Int = 5
 
   /** q138 [EXT]: memorization-span audit — the POSITIONAL complement of
     * q133's set-overlap leakage score: per val/test doc, the LONGEST
@@ -367,26 +351,18 @@ object Composition {
   }
 
   /** q139's masking geometry: rate in permille (the standard MLM 15%)
-    * and the epoch counter — both env-dialed, both interpolated into
-    * the oracle. Bumping the epoch re-draws every mask (the per-epoch
-    * re-masking real MLM training does) while keeping any single epoch
-    * exactly reproducible. */
-  private[graft] val MaskPermille: Long = {
-    val r = sys.env.getOrElse("GRAFT_MASK_PERMILLE", "150").toLong
-    require(r >= 0 && r <= 1000, s"GRAFT_MASK_PERMILLE=$r — need 0..1000")
-    r
-  }
-  private[graft] val MaskEpoch: Long = {
-    val e = sys.env.getOrElse("GRAFT_MASK_EPOCH", "0").toLong
-    require(e >= 0, s"GRAFT_MASK_EPOCH=$e — need a non-negative epoch")
-    e
-  }
+    * and the epoch counter — both interpolated into the oracle.
+    * Bumping the epoch re-draws every mask (the per-epoch re-masking
+    * real MLM training does) while keeping any single epoch exactly
+    * reproducible. */
+  private[graft] val MaskPermille: Long = 150L
+  private[graft] val MaskEpoch: Long = 0L
 
   /** q139 [EXT]: deterministic MLM masking schedule — which token
     * positions a masked-language-model pass corrupts, decided by hash
     * instead of an RNG so the corpus build is REPRODUCIBLE: the same
     * (doc, position, epoch) always masks the same way, any shard can be
-    * rebuilt bit-identically, and bumping the epoch dial re-draws every
+    * rebuilt bit-identically, and bumping the epoch re-draws every
     * mask the way per-epoch re-masking does in real MLM training.
     * Position i of doc d masks iff
     * `knuthBucket2(d·100003 + i·7 + epoch, 1000) < rate` — the shared
@@ -414,7 +390,7 @@ object Composition {
   /** q139's core over any (doc_id, lang, text) frame with explicit
     * geometry — factored (q48's `oovReport` pattern) so the spec can
     * drive the rate extremes and the epoch re-draw directly (the
-    * declared query binds the env dials, which are fixed at load). */
+    * declared query binds the constants above). */
   private[graft] def mlmMaskReport(docs: DataFrame, rate: Long,
       epoch: Long): DataFrame = {
     val d = docs.select(col("doc_id"), col("lang"),
@@ -442,18 +418,10 @@ object Composition {
     * maximum span length (span length at a start is uniform in
     * [1, max] by a second hash draw). The defaults (30‰ starts,
     * max 8) land the corruption mass near T5's ~15% at mean span
-    * length 4.5. q141 shares q139's epoch dial — one training epoch
+    * length 4.5. q141 shares q139's epoch — one training epoch
     * re-draws both schedules. */
-  private[graft] val SpanStartPermille: Long = {
-    val r = sys.env.getOrElse("GRAFT_SPAN_START_PERMILLE", "30").toLong
-    require(r >= 0 && r <= 1000, s"GRAFT_SPAN_START_PERMILLE=$r — need 0..1000")
-    r
-  }
-  private[graft] val SpanLenMax: Long = {
-    val m = sys.env.getOrElse("GRAFT_SPAN_LEN_MAX", "8").toLong
-    require(m >= 1, s"GRAFT_SPAN_LEN_MAX=$m — need a positive span cap")
-    m
-  }
+  private[graft] val SpanStartPermille: Long = 30L
+  private[graft] val SpanLenMax: Long = 8L
 
   /** q141 [EXT]: deterministic SPAN-corruption schedule — q139's idea at
     * T5/UL2 granularity: instead of independent token masks, position i
@@ -512,11 +480,7 @@ object Composition {
     * phase map at |langs|·cap rows no matter how long the longest
     * document grows (docs at or past the cap are all "hard" — the
     * clamp cannot move a tercile boundary upward past it). */
-  private[graft] val CurriculumLenCap: Long = {
-    val c = sys.env.getOrElse("GRAFT_CURRICULUM_LEN_CAP", "100000").toLong
-    require(c >= 1, s"GRAFT_CURRICULUM_LEN_CAP=$c — need a positive ceiling")
-    c
-  }
+  private[graft] val CurriculumLenCap: Long = 100000L
 
   /** q142 [EXT]: within-source distribution drift — the crawl-snapshot
     * monitoring question: has a source's CONTENT shifted between two
@@ -572,16 +536,8 @@ object Composition {
     * sources) and the per-source repeat ceiling (default 4 epochs — the
     * data-constrained-scaling regime where repeating past ~4 epochs
     * stops paying). Both interpolated into the oracle. */
-  private[graft] val EpochBudgetPermille: Long = {
-    val b = sys.env.getOrElse("GRAFT_EPOCH_BUDGET_PERMILLE", "2500").toLong
-    require(b >= 0, s"GRAFT_EPOCH_BUDGET_PERMILLE=$b — need a non-negative budget")
-    b
-  }
-  private[graft] val EpochCap: Long = {
-    val c = sys.env.getOrElse("GRAFT_EPOCH_CAP", "4").toLong
-    require(c >= 1, s"GRAFT_EPOCH_CAP=$c — need at least one epoch")
-    c
-  }
+  private[graft] val EpochBudgetPermille: Long = 2500L
+  private[graft] val EpochCap: Long = 4L
 
   /** q143 [EXT]: epoch allocation under a token budget — the
     * data-constrained-scaling decision (Muennighoff et al. 2023): given
@@ -725,9 +681,9 @@ object Composition {
     * (JVM, corpus build) — the [[LlmOps.LabelTable]] posture applied to
     * the RETRIEVAL indexes: production hybrid search serves from
     * prebuilt lexical and vector indexes and pays only lookup + fusion
-    * per query; rebuilding both arms inside every fusion call is the
-    * recompute-always posture (`GRAFT_LABEL_MEMO=0` restores it — one
-    * dial, as everywhere). q134/q82 themselves NEVER read these memos:
+    * per query; rebuilding both arms inside every fusion call would be
+    * the recompute-always posture. q134/q82 themselves NEVER read these
+    * memos:
     * the arm builds are their declared benchmarks (the q68/q144/q88
     * division of labor). Rank tables are panel-bounded (queries × k
     * rows of ids + INT ranks), so the parquet round-trip is exact. */

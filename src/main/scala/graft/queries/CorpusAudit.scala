@@ -333,8 +333,7 @@ object CorpusAudit {
   /** q161 [EXT]: the per-document suppression verdict q160's ladder
     * argues about — each document joined to its own quasi-identifier
     * class and admitted iff the class holds at least k = 5 members
-    * (GRAFT_QI_K-dialed; the dial is parsed per call so a bad value
-    * fails only this query, the ADVICE-r12 lazy-dial rule). The
+    * ([[graft.streaming.QiGate.kDial]]). The
     * projection lives in [[graft.streaming.QiGate]] (the s82/s85/s95/
     * s97/s98 shared batch/stream code-object convention), so the s99
     * ingest-time gate — the class table riding as a static broadcast
@@ -565,10 +564,9 @@ object CorpusAudit {
     "q163_pack_efficiency" -> q163PackEfficiency,
     "q164_pii_prevalence" -> q164PiiPrevalence)
 
-  // lazy: entries interpolate env dials (QiGate.kDial) and LlmOps
-  // object members — laziness keeps a bad dial scoped to oracle access
-  // and keeps this object's <clinit> from re-entering LlmOps's (the
-  // OracleCtes scaladoc's deadlock class)
+  // lazy: entries interpolate LlmOps object members — laziness keeps
+  // this object's <clinit> from re-entering LlmOps's (the OracleCtes
+  // scaladoc's deadlock class)
   lazy val oracles: Map[String, String] = Map(
     "q154_split_cluster_aware" ->
       // q68's labels + the package knuthBucketSql arithmetic on both

@@ -297,18 +297,18 @@ object CorpusOps {
   /** q75: k-NN self-join — every vector's top-3 neighbors among its SRP
     * bucket peers, the corpus×corpus generalization of q82's broadcast
     * top-k (which requires a small query side; here BOTH sides are the
-    * corpus). Candidates come from the same env-backed SRP bucket code
+    * corpus). Candidates come from the same SRP bucket code
     * as q91/q92 (serialized into the oracle, so candidate sets match
     * bit-for-bit); the bucket join moves (vec_id, bucket) rows only and
     * vectors re-join by id for scoring — the q92 fingerprints-first
     * shuffle posture. Bucket-local work is Σ occupancy², held constant
-    * by growing GRAFT_SRP_BITS with the corpus (measured under the
-    * geometry dial in SCALEPROBE.md §q92); a vector with no bucket peer
+    * by growing `srpBits` with the corpus (measured under the
+    * geometry sweep in SCALEPROBE.md §q92); a vector with no bucket peer
     * has no neighbors at this probe radius — multi-probing (q91's
     * hamming-ball expansion) is the recall knob and composes unchanged.
     * Top-3 plans as a map-side WindowGroupLimit like q74. */
   /** Geometry-parameterized body — ScaleProbe drives this under the
-    * srpBits dial (bits + ⌈log2 k⌉ at k× data), the same operating
+    * srpBits sweep (bits + ⌈log2 k⌉ at k× data), the same operating
     * procedure q92 documents. */
   private[graft] def q75WithGeometry(g: graft.core.SketchGeometry): Q = (spark, dir) => {
     val v = t(spark, dir, "embeddings")
@@ -544,8 +544,8 @@ object CorpusOps {
 
   /** q48: vocabulary coverage / out-of-vocabulary rate — the
     * tokenizer-design metric: fix the vocab at the top-V tokens by
-    * corpus frequency (V = [[graft.core.SketchGeometry]] `oovVocabSize`,
-    * env `GRAFT_OOV_VOCAB`; 16 here to match the synthetic corpus's
+    * corpus frequency (V = [[graft.core.SketchGeometry]] `oovVocabSize`:
+    * 16 here to match the synthetic corpus's
     * 31-token vocabulary, 32k-128k in production) and report each
     * document's OOV token count and rate. High-OOV docs are either the
     * long-tail content a bigger vocab would serve or noise the corpus
@@ -627,33 +627,9 @@ object CorpusOps {
   /** q144's loop geometry: merge rounds and candidate-table depth per
     * round. Rounds are driver-unrolled — each round is its own CTE
     * block in the oracle (the q108/q111 oracled-iteration recipe) — so
-    * the dial is require-capped to keep the mirror readable. */
-  // defs, not vals: a malformed dial (GRAFT_BPE_ROUNDS=three) must fail
-  // the q144 call that reads it with the require message below — as a
-  // val it threw during CorpusOps STATIC INIT, so every CorpusOps query
-  // in the JVM died with an opaque ExceptionInInitializerError
-  // (round-12 advice). `oracles` is lazy for the same reason.
-  private[graft] def BpeRounds: Int = {
-    val raw = sys.env.getOrElse("GRAFT_BPE_ROUNDS", "2")
-    val r = try raw.toInt catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"GRAFT_BPE_ROUNDS=$raw — expected an integer in 1..6")
-    }
-    require(r >= 1 && r <= 6,
-      s"GRAFT_BPE_ROUNDS=$r — the unrolled oracle supports 1..6 rounds")
-    r
-  }
-  private[graft] def BpeTopK: Int = {
-    val raw = sys.env.getOrElse("GRAFT_BPE_TOPK", "10")
-    val k = try raw.toInt catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"GRAFT_BPE_TOPK=$raw — expected a positive integer")
-    }
-    require(k >= 1, s"GRAFT_BPE_TOPK=$k — need a positive candidate depth")
-    k
-  }
+    * the round count stays small to keep the mirror readable. */
+  private[graft] val BpeRounds: Int = 2
+  private[graft] val BpeTopK: Int = 10
 
   /** q144's merge joiner: base tokens come from splitting on ' ', so a
     * merged symbol joins its parts with the 0x01 byte — one no natural
@@ -894,15 +870,11 @@ object CorpusOps {
     * up per doc. */
   val q149BpeEncode: Q = (spark, dir) => {
     val docs = t(spark, dir, "documents")
-    // memo-on: the production path its scaladoc promises — read the
-    // shipped artifact, pay ONLY the map-only encode fold (artifact ≡
-    // loop pinned by CorpusOpsSpec); memo-off re-runs the learn loop
-    val out =
-      if (sys.env.get("GRAFT_LABEL_MEMO").contains("0"))
-        bpeEncode(docs, BpeRounds)
-      else graft.streaming.BpeEncoder.encode(docs,
-        BpeTable.of(spark, dir, BpeRounds))
-    orderAll(out)
+    // the production path its scaladoc promises — read the shipped
+    // artifact, pay ONLY the map-only encode fold (artifact ≡ loop
+    // pinned by CorpusOpsSpec)
+    orderAll(graft.streaming.BpeEncoder.encode(docs,
+      BpeTable.of(spark, dir, BpeRounds)))
   }
 
   /** q149's core with explicit geometry, spec-drivable on hand corpora
@@ -994,8 +966,7 @@ object CorpusOps {
     * every consumer is the recompute-always posture. q149/q150/q156
     * read this memo; q144 NEVER does — the learn LOOP is its declared
     * benchmark, so every q144 rep re-runs it fresh (the q68/LabelTable
-    * division of labor). `GRAFT_LABEL_MEMO=0` restores recompute-always
-    * (ONE dial governs all materialized artifacts). The artifact is a
+    * division of labor). The artifact is a
     * driver-side list of R string pairs, so the memo is a JVM map keyed
     * by the shared corpus content fingerprint — no parquet, nothing to
     * supersede on disk; a corpus regeneration changes the fingerprint
@@ -1013,19 +984,16 @@ object CorpusOps {
       (String, Int), (String, Seq[(String, String)])]()
 
     def of(spark: SparkSession, dir: String,
-        rounds: Int): Seq[(String, String)] =
-      if (sys.env.get("GRAFT_LABEL_MEMO").contains("0"))
-        learnMerges(t(spark, dir, "documents"), rounds)
-      else {
-        val fp = LlmOps.fingerprint(
-          java.nio.file.Paths.get(dir, "documents.parquet"))
-        val key = (dir, rounds)
-        val hit = memo.get(key)
-        if (hit != null && hit._1 == fp) hit._2
-        else memo.compute(key, (_, old) =>
-          if (old != null && old._1 == fp) old
-          else (fp, learnMerges(t(spark, dir, "documents"), rounds)))._2
-      }
+        rounds: Int): Seq[(String, String)] = {
+      val fp = LlmOps.fingerprint(
+        java.nio.file.Paths.get(dir, "documents.parquet"))
+      val key = (dir, rounds)
+      val hit = memo.get(key)
+      if (hit != null && hit._1 == fp) hit._2
+      else memo.compute(key, (_, old) =>
+        if (old != null && old._1 == fp) old
+        else (fp, learnMerges(t(spark, dir, "documents"), rounds)))._2
+    }
   }
 
   /** q150 [EXT]: per-language tokenizer compression report — the
@@ -1719,9 +1687,8 @@ object CorpusOps {
     "q168_ann_recall" -> q168AnnRecall,
     "q101_knn_pq" -> q101KnnPq)
 
-  // lazy: q144's oracle is GENERATED from the BPE dials, so building
-  // this map eagerly would re-create the static-init failure the dial
-  // defs above exist to avoid
+  // lazy: entries read LlmOps members, so building them only on oracle
+  // access keeps CorpusOps's <clinit> from entering LlmOps's
   lazy val oracles: Map[String, String] = Map(
     "q116_dedup_fuzzy" ->
       // same two-key neighbor-band blocking; full levenshtein <= 8
@@ -1739,7 +1706,7 @@ object CorpusOps {
         |FROM p WHERE levenshtein(pa, pb) <= 8
         |ORDER BY 1 NULLS FIRST, 2 NULLS FIRST, 3 NULLS FIRST""".stripMargin,
     "q110_semantic_dedup" -> {
-      val dim = graft.core.SketchGeometry.fromEnv().embeddingDim
+      val dim = LlmOps.geom.embeddingDim
       // q92's plant, q73's assignment tie-break (row_number mirrors the
       // engine's (cos6, -c_id) struct-max), same 6-dp rounded cosine and
       // the same greedy-by-id >= 0.95 verdict
@@ -2188,7 +2155,7 @@ object CorpusOps {
       // micro-units (sum of m BIGINTs, no float reduction order), re-rank
       // by round-6 cosine, every tie to the lower id — so it mirrors into
       // SQL; the sub-space slicing is interpolated from the same
-      // env-backed embedding dim the Spark side reads
+      // embedding dim the Spark side reads
       s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |cent AS (SELECT vec_id AS c_id, e AS ce FROM v WHERE vec_id < 8),
         |cscored AS (

@@ -27,24 +27,16 @@ object GraphOps {
     * exactly the memory-bandwidth footprint the co-tenant contention
     * multiplies); q115 a wash on mins (4.34 vs 4.44 s) with SER the
     * more outlier-robust arm (worst rounds 5.35 vs 11.99 s) — on record
-    * in SURVEY.md and OPTIMIZATION_r15.md. Env-dialed
-    * (`GRAFT_GRAPH_PERSIST=MEMORY_AND_DISK`) for a CPU-starved,
-    * bandwidth-rich deployment where the trade reverses. */
+    * in SURVEY.md and OPTIMIZATION_r15.md. */
   private[graft] val GraphPersistLevel: org.apache.spark.storage.StorageLevel =
-    sys.env.get("GRAFT_GRAPH_PERSIST") match {
-      case Some("MEMORY_AND_DISK") =>
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    }
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** Node-count ceiling under which each PageRank round's state table
     * (one row per node) broadcasts to the cached edge partitions: the
     * edges then never re-sort or re-shuffle for the join, and the only
     * per-round exchange is the map-side-combined contribution sum.
-    * 50 M nodes ≈ 1.2 GB of (node, outdeg, pr) rows — executor-sized;
-    * dial per cluster via GRAFT_PR_BROADCAST_MAX. */
-  private[graft] val PrBroadcastMaxNodes =
-    sys.env.getOrElse("GRAFT_PR_BROADCAST_MAX", "50000000").toLong
+    * 50 M nodes ≈ 1.2 GB of (node, outdeg, pr) rows — executor-sized. */
+  private[graft] val PrBroadcastMaxNodes = 50000000L
 
   /** q111: PageRank over the customer↔supplier graph — which entities
     * sit at the center of the transaction network (the reference has no
@@ -100,7 +92,7 @@ object GraphOps {
       edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("outdeg")), GraphPersistLevel)
     // the one driver-side scalar: N for the seed/teleport constant —
-    // and the broadcast dial: state is exactly one row per node, so
+    // and the broadcast cap: state is exactly one row per node, so
     // below the node cap each round's state ships TO the cached edge
     // partitions (broadcast hash join: edges never re-sort, the only
     // per-round exchange is the node-sized contribution sum); past the
@@ -134,20 +126,19 @@ object GraphOps {
     * w·(w-1)/2 pairs, so one pathological wide "order" (a catalog dump,
     * a crawler artifact) squares. Orders wider than the cap are dropped
     * whole. TPC-H orders carry ≤ 7 lines, so 64 never fires on testdata
-    * — the cap exists for the 100 TB tail. Env-dialed so ScaleProbe can
-    * exercise it; the oracle string interpolates the SAME value. */
-  private[graft] val MaxOrderWidth =
-    sys.env.getOrElse("GRAFT_TRI_MAX_ORDER_WIDTH", "64").toInt
+    * — the cap exists for the 100 TB tail (ScaleProbe exercises it
+    * through `q115WithWidthCap`); the oracle string interpolates the
+    * SAME value. */
+  private[graft] val MaxOrderWidth = 64
 
   /** Arc-count ceiling under which the out-neighbor adjacency table
     * broadcasts to the edge stream. The adjacency arrays hold exactly
     * one long per arc, so 20 M arcs ≈ 160 MB of array payload —
-    * comfortable in a 4 GiB-executor budget; dial down per cluster via
-    * GRAFT_TRI_BROADCAST_MAX. Above the cap the two edge⋈adjacency
+    * comfortable in a 4 GiB-executor budget. Above the cap the two
+    * edge⋈adjacency
     * attaches run as shuffle joins on src/dst: correct, two more
     * exchanges, unbounded arc-set size. */
-  private[graft] val BroadcastArcMax =
-    sys.env.getOrElse("GRAFT_TRI_BROADCAST_MAX", "20000000").toLong
+  private[graft] val BroadcastArcMax = 20000000L
 
   /** q115 [EXT]: triangle counting over the part co-purchase graph —
     * per-part triangle participation, the clustering-coefficient
@@ -288,7 +279,7 @@ object GraphOps {
     "q115_triangle_count" ->
       // same degree-oriented compact-forward enumeration: each triangle
       // appears exactly once as the path u->v->w plus the closing arc;
-      // the order-width cap interpolates the engine's dial so both
+      // the order-width cap interpolates the engine's constant so both
       // sides drop the same pathological wide orders
       s"""WITH li AS (SELECT l_orderkey, l_partkey FROM (
         |        SELECT l_orderkey, l_partkey,

@@ -81,12 +81,11 @@ object Joins {
     * user_id-shuffle the join needs anyway; AQE skew-join handles
     * residual partition imbalance below the cap. The default cap (10k)
     * sits far above every test fixture's per-user max, so CORRECTNESS
-    * hashes are unchanged — production dials GRAFT_EVENTS_PER_USER_CAP
-    * to its bot-filter budget. `between(1, cap)` rather than `<= cap`:
+    * hashes are unchanged; a production cap is its bot-filter budget.
+    * `between(1, cap)` rather than `<= cap`:
     * row_number is IntegerType, and a >2^31-event user would wrap
     * negative and sneak PAST a plain <=. */
-  private[graft] def EventsPerUserCap: Int =
-    sys.env.get("GRAFT_EVENTS_PER_USER_CAP").map(_.trim.toInt).getOrElse(10000)
+  private[graft] val EventsPerUserCap: Int = 10000
 
   /** q15: theta/range join — keyed on user_id (equi) with a time-band
     * residual, so Spark plans a hash/SMJ join, not a nested loop. Counts,
@@ -447,7 +446,7 @@ object Joins {
         |  ON c.c_custkey = o.o_custkey
         |ORDER BY 1 NULLS FIRST, 2 NULLS FIRST, 3 NULLS FIRST, 4 NULLS FIRST""".stripMargin,
     "q15_join_theta_range" ->
-      // the per-user cap is serialized from the same env knob the engine
+      // the per-user cap is serialized from the same constant the engine
       // binds (q63's pattern), so both engines trim identical event sets
       s"""WITH capped AS (
         |  SELECT user_id, event_id, ts FROM (

@@ -24,12 +24,12 @@ object LlmOps {
 
   import graft.core.SketchGeometry
 
-  /** Sketch geometry, env-backed (the reference's own config idiom,
-    * `settings.py:1-20`): defaults are the sf0.001–0.1 values every
-    * CORRECTNESS run uses; a 100× corpus re-tunes via env
-    * (GRAFT_SRP_BITS etc.), not a recompile. Scaling derivations live on
-    * [[graft.core.SketchGeometry]] and at each use site. */
-  private[graft] val geom: SketchGeometry = SketchGeometry.fromEnv()
+  /** Sketch geometry: the sf0.001–0.1 values every CORRECTNESS run
+    * uses. How each knob scales with corpus size is derived on
+    * [[graft.core.SketchGeometry]] and at each use site; ScaleProbe and
+    * the specs drive other geometries through the `*WithGeometry`
+    * cores. */
+  private[graft] val geom: SketchGeometry = SketchGeometry.defaults
 
   /** Candidate pairs from an LSH band table `(doc_id, band)` — shared by
     * q81 (MinHash bands) and q89 (SimHash bands). Two properties carry
@@ -617,8 +617,7 @@ object LlmOps {
     * of the corpus, so memoized and fresh answers are row-identical —
     * CurationSpec pins the equality). q68 itself NEVER uses the memo:
     * the label computation is its declared benchmark and stays a fresh
-    * full run every time. `GRAFT_LABEL_MEMO=0` restores
-    * recompute-always for the consumers too.
+    * full run every time.
     *
     * Scope honestly stated: staleness is detected by a CONTENT
     * fingerprint of the corpus parquet — every part file's relative
@@ -650,9 +649,9 @@ object LlmOps {
     * names a corpus build that no longer exists). `GRAFT_LABEL_DIR`
     * unset ⇒ a JVM-scoped temp dir; set ⇒ `$base/<prefix>_<fp>`, a
     * STABLE warehouse path shared across JVMs (writer leaves
-    * `_SUCCESS`, later JVMs adopt). `GRAFT_LABEL_MEMO=0` restores
-    * recompute-always. Locking is PER KEY (`ConcurrentHashMap.compute`
-    * — round-13 advice on BpeTable's global lock): the fingerprint walk
+    * `_SUCCESS`, later JVMs adopt). Locking is PER KEY
+    * (`ConcurrentHashMap.compute` — round-13 advice on BpeTable's global
+    * lock): the fingerprint walk
     * and a cache hit never wait on another corpus's seconds-scale
     * build; two consumers racing on the SAME key serialize, so the
     * artifact is built once. */
@@ -671,36 +670,34 @@ object LlmOps {
       of(spark, dir, sys.env.get("GRAFT_LABEL_DIR"))
 
     def of(spark: SparkSession, dir: String,
-        base: Option[String]): DataFrame =
-      if (sys.env.get("GRAFT_LABEL_MEMO").contains("0")) freshFn(spark, dir)
-      else {
-        val fp = fingerprint(java.nio.file.Paths.get(dir, srcTable))
-        val key = (dir, base)
-        val hit = memo.get(key)
-        val path =
-          if (hit != null && hit._1 == fp) hit._2 // lock-free fast path
-          else memo.compute(key, (_, old) => {
-            if (old != null && old._1 == fp) old
-            else {
-              if (old != null) deleteTree(java.nio.file.Paths.get(old._2))
-              val p = base match {
-                case Some(b) =>
-                  val d = java.nio.file.Paths.get(b, s"${prefix}_$fp")
-                  if (!java.nio.file.Files.exists(d.resolve("_SUCCESS"))) {
-                    java.nio.file.Files.createDirectories(d)
-                    freshFn(spark, dir).write.mode("overwrite").parquet(d.toString)
-                  }
-                  d.toString
-                case None =>
-                  val d = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_")
+        base: Option[String]): DataFrame = {
+      val fp = fingerprint(java.nio.file.Paths.get(dir, srcTable))
+      val key = (dir, base)
+      val hit = memo.get(key)
+      val path =
+        if (hit != null && hit._1 == fp) hit._2 // lock-free fast path
+        else memo.compute(key, (_, old) => {
+          if (old != null && old._1 == fp) old
+          else {
+            if (old != null) deleteTree(java.nio.file.Paths.get(old._2))
+            val p = base match {
+              case Some(b) =>
+                val d = java.nio.file.Paths.get(b, s"${prefix}_$fp")
+                if (!java.nio.file.Files.exists(d.resolve("_SUCCESS"))) {
+                  java.nio.file.Files.createDirectories(d)
                   freshFn(spark, dir).write.mode("overwrite").parquet(d.toString)
-                  d.toString
-              }
-              (fp, p)
+                }
+                d.toString
+              case None =>
+                val d = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_")
+                freshFn(spark, dir).write.mode("overwrite").parquet(d.toString)
+                d.toString
             }
-          })._2
-        spark.read.parquet(path)
-      }
+            (fp, p)
+          }
+        })._2
+      spark.read.parquet(path)
+    }
   }
 
   /** Hex fold of every regular file's (relative path, size, mtime)
@@ -733,16 +730,15 @@ object LlmOps {
     * [[LabelTable]] posture extended to the OTHER artifact a nightly
     * near-dup pipeline persists: the inverted band index over the full
     * node universe (the `NearDupGate documents` table q148's scaladoc
-    * names). Rebuilding it per run is the recompute-always posture
-    * (`GRAFT_LABEL_MEMO=0` restores it — one dial governs all
-    * materialized artifacts); reading the persisted index and paying
+    * names). Rebuilding it per run is the recompute-always posture;
+    * reading the persisted index and paying
     * only Δ-batch gating is the production shape. Same staleness key
     * (corpus content fingerprint), same supersede-and-delete, same
     * `GRAFT_LABEL_DIR` warehouse override. The parquet round-trip is
     * exact (doc_id, bigint shingle arrays, band strings), so gated
     * pairs are bit-identical either way — CurationSpec pins memoized ≡
     * fresh, and q148's DuckDB oracle (a full recompute over the union
-    * graph) gates the composed result regardless of posture. */
+    * graph) gates the composed result. */
   private[graft] object GateIndexTable {
     /** The index build itself — the universe is corpus + its planted
       * re-crawls + the ingest batch (a batch doc near-duping another
@@ -769,14 +765,12 @@ object LlmOps {
     * (q88) and the threshold sizing sweep (q169) consume. Production
     * builds the pair table once per corpus build and every decision
     * reads it; re-deriving it inside each consumer is the
-    * recompute-always posture (`GRAFT_LABEL_MEMO=0` restores it — one
-    * dial governs all materialized artifacts, and the annotated
-    * `label_memo:off` BENCH_HISTORY line anchors the fresh build cost).
+    * recompute-always posture (the annotated `label_memo:off`
+    * BENCH_HISTORY line records the fresh build cost).
     * The parquet round-trip is exact (BIGINT ids/counts, one
     * already-rounded double), so consumers are bit-identical either
     * way — CurationSpec pins memoized ≡ fresh, and both consumers'
-    * DuckDB oracles (full pair recomputes) gate the composed results
-    * regardless of posture. */
+    * DuckDB oracles (full pair recomputes) gate the composed results. */
   private[graft] object PairTable {
     private val tbl = new MaterializedTable("pairs", ngramPairJaccard)
     def of(spark: SparkSession, dir: String): DataFrame = tbl.of(spark, dir)
@@ -1045,9 +1039,8 @@ object LlmOps {
     * another batch doc is an edge a full recompute would see, so the
     * delta must carry it). Self-matches (a batch doc finding itself in
     * the index at j = 1) are dropped. The scopedPersist serves the
-    * index's two consumers (band probe + verify join) in EITHER
-    * posture: a cached parquet scan when memoized, the cached fresh
-    * build under GRAFT_LABEL_MEMO=0. */
+    * index's two consumers (band probe + verify join) from one cached
+    * parquet scan. */
   private[graft] def q148Delta(spark: SparkSession, dir: String): DataFrame = {
     val batch = q148Batch(spark, dir)
     val index = GateIndexTable.of(spark, dir).scopedPersist
@@ -1064,7 +1057,7 @@ object LlmOps {
     * The cap bounds per-shingle join fan-out at df² ≤ 400 rows, making
     * total work linear in corpus size. Jaccard is then computed over the
     * informative-shingle sets on BOTH engines (cap mirrored in the
-    * oracle — both read the same env-backed geometry, so they can never
+    * oracle — both read the same geometry, so they can never
     * disagree). */
   private def ShingleDfCap = geom.shingleDfCap
   /** q88: n-gram Jaccard near-dup via shingle inverted index — the join
@@ -1074,10 +1067,9 @@ object LlmOps {
     * materialized [[PairTable]] (built by the first consumer in this
     * JVM — q88's own warm rep in the bench — read thereafter): the
     * production posture where the pair table is a per-corpus-build
-    * artifact and the cut is a read-filter-decide step over it.
-    * `GRAFT_LABEL_MEMO=0` restores the fresh in-query build
-    * ([[ngramPairJaccard]]); the annotated `label_memo:off`
-    * BENCH_HISTORY line carries the fresh cost. */
+    * artifact and the cut is a read-filter-decide step over it. The
+    * fresh in-query build is [[ngramPairJaccard]]; the annotated
+    * `label_memo:off` BENCH_HISTORY line carries its cost. */
   val q88DedupNgram: Q = (spark, dir) => orderAll(
     PairTable.of(spark, dir)
       .filter(col("jacc") >= 0.5)
@@ -1273,8 +1265,7 @@ object LlmOps {
     * per (JVM, corpus build) by [[setsimPairs]]'s own spelling, read by
     * q175's audit thereafter (the PairTable posture: the ground-truth
     * table is a per-corpus-build artifact; q173 itself NEVER reads it —
-    * the fresh join is its declared benchmark). `GRAFT_LABEL_MEMO=0`
-    * restores recompute-always. */
+    * the fresh join is its declared benchmark). */
   private[queries] object SetSimPairTable {
     private val tbl = new MaterializedTable("setsim",
       (s, d) => setsimPairs(s, d))
@@ -1382,7 +1373,7 @@ object LlmOps {
     * 100 TB pipeline to find out — the q157/q160/q163 ladder family
     * applied to the dedup decision. Pairs are q88's EXACT universe
     * (the materialized [[PairTable]] — same df-capped index, same exact
-    * Jaccard, [[ngramPairJaccard]] under `GRAFT_LABEL_MEMO=0`), so the
+    * Jaccard as [[ngramPairJaccard]]), so the
     * 0.5 row of this table is by construction q88's output
     * cardinality.
     *
@@ -1463,21 +1454,13 @@ object LlmOps {
 
   /** Winnowing geometry (Schleimer/Wilkerson/Aiken 2003, "Winnowing:
     * Local Algorithms for Document Fingerprinting" — the MOSS
-    * algorithm): k-gram width and window size, env-dialed and parsed
-    * per call (the lazy-dial rule), interpolated into both oracles.
+    * algorithm): k-gram width and window size, interpolated into both
+    * oracles.
     * The guarantee: any shared token run of length ≥ w + k − 1 SHARES
     * at least one selected fingerprint — a detection floor q88's
     * whole-index Jaccard pays ~(w+1)/2× more index mass to beat. */
-  private[graft] def winnowK: Int = {
-    val k = sys.env.getOrElse("GRAFT_WINNOW_K", "4").toInt
-    require(k >= 2, s"GRAFT_WINNOW_K=$k — a gram under 2 tokens is a typo")
-    k
-  }
-  private[graft] def winnowW: Int = {
-    val w = sys.env.getOrElse("GRAFT_WINNOW_W", "4").toInt
-    require(w >= 1, s"GRAFT_WINNOW_W=$w — the window must be at least 1")
-    w
-  }
+  private[graft] val winnowK: Int = 4
+  private[graft] val winnowW: Int = 4
 
   /** The engine-portable token code winnowing folds into its gram
     * hashes — 4 probes (length, first/mid/last chars) instead of q87's
@@ -1598,7 +1581,7 @@ object LlmOps {
     * 100 TB: the index carries only the winnowed ~2/(w+1) of gram
     * mass (the op's whole point — q165 prices it), fingerprints are
     * 8-byte BIGINTs on every exchange, the df cap bounds bucket
-    * occupancy exactly as q88's (same dial, mirrored in the oracle),
+    * occupancy exactly as q88's (same cap, mirrored in the oracle),
     * and candidate generation is the bucket self-join — never
     * all-pairs. FULLY ORACLED — exactly, not collision-modulo: the
     * portable hash makes DuckDB's selected sets identical, so the
@@ -1639,7 +1622,7 @@ object LlmOps {
     * occupancy is n · NumBands / 2^BandBits — at 16 bits that's ~15 k
     * docs/bucket at 1 B docs (vs ~4 M with the 8-bit bands this
     * replaced). For larger corpora raise BandBits (and the hash width)
-    * rather than the band count — env knob GRAFT_SIMHASH_BAND_BITS. */
+    * rather than the band count (`simhashBandBits`). */
   private def SimhashBandBits = geom.simhashBandBits
   private def SimhashNumBands = geom.simhashBands // bands × bits = the full 64-bit sketch
 
@@ -1718,9 +1701,9 @@ object LlmOps {
     * the default radius 2 — a 37/256 ≈ 14% bucket scan per query, vs
     * 100% for brute force; the radius is the recall-vs-work knob and
     * shrinks relative to 2^bits as bits grow with corpus size). Both
-    * knobs are env-backed like the rest of the geometry: GRAFT_SRP_BITS
-    * and GRAFT_SRP_PROBE_RADIUS; the embedding width (a property of the
-    * upstream embedding model) is GRAFT_EMBEDDING_DIM. */
+    * knobs are [[geom]] fields (`srpBits`, `srpProbeRadius`), like the
+    * embedding width (`embeddingDim`, a property of the upstream
+    * embedding model). */
   private def SrpBits = geom.srpBits
   private def ProbeRadius = geom.srpProbeRadius
   private def EmbeddingDim = geom.embeddingDim
@@ -1781,13 +1764,13 @@ object LlmOps {
     * partitioned (one bucket pass, no per-query scan); only the tiny
     * query side fans out ×|probes| and is broadcast. FULLY ORACLED
     * via q75's recipe plus the probe expansion: the ±1 matrix AND the
-    * hamming-ball mask set (both env-backed) are serialized into the
+    * hamming-ball mask set (both from [[geom]]) are serialized into the
     * DuckDB SQL ([[q91OracleSql]]), so candidate buckets match
     * bit-for-bit; the recall-vs-radius curve + q82 score agreement
     * stay asserted in LlmOpsSpec. */
   val q91SimilarityIvf: Q = (spark, dir) => q91WithGeometry(geom)(spark, dir)
 
-  /** q91 with explicit geometry — the declared query binds the env-backed
+  /** q91 with explicit geometry — the declared query binds
     * [[geom]]; specs pass overridden geometries to measure the
     * recall-vs-work curve of `srpProbeRadius` live. */
   private[graft] def q91WithGeometry(g: SketchGeometry): Q = (spark, dir) => {
@@ -1829,8 +1812,8 @@ object LlmOps {
     * hash-sketch dedups: the ±1 projection matrix is serialized into
     * the DuckDB SQL, so both engines build identical buckets.
     *
-    * Geometry-parameterized (the declared q92 binds the env-backed
-    * [[geom]]): bucket count 2^srpBits is the operational dial that
+    * Geometry-parameterized (the declared q92 binds
+    * [[geom]]): bucket count 2^srpBits is the operational knob that
     * holds bucket occupancy — and so the quadratic-in-occupancy
     * candidate stage — constant as the corpus grows (ScaleProbe
     * demonstrates the scaling: bits + log2(k) at k× data keeps
@@ -1885,7 +1868,7 @@ object LlmOps {
   }
 
   /** q91's oracle — q75's SRP-bucket recipe plus the multi-probe
-    * expansion: the same env-backed hamming-ball mask set the engine
+    * expansion: the same hamming-ball mask set the engine
     * enumerates ([[probeMasks]] — Σ C(bits, r≤radius) masks, 37 at the
     * default 8-bit/radius-2 geometry) is serialized into an unnest
     * literal, so the probed candidate buckets match the engine
@@ -2046,20 +2029,10 @@ object LlmOps {
   }
 
   /** Sliding-window chunk geometry for q130 — window W tokens, stride S
-    * (overlap W−S). Env-dialed; the oracle SQL interpolates the SAME
-    * values so both engines chunk on one geometry. */
-  private[graft] val ChunkWindow: Int = {
-    val w = sys.env.getOrElse("GRAFT_CHUNK_WINDOW", "64").toInt
-    require(w >= 2, s"GRAFT_CHUNK_WINDOW=$w — a window under 2 tokens is a typo")
-    w
-  }
-  private[graft] val ChunkStride: Int = {
-    val s = sys.env.getOrElse("GRAFT_CHUNK_STRIDE", "48").toInt
-    require(s >= 1 && s <= ChunkWindow,
-      s"GRAFT_CHUNK_STRIDE=$s must sit in [1, window=$ChunkWindow] — a stride " +
-        "past the window leaves token gaps no chunk covers")
-    s
-  }
+    * (overlap W−S). The oracle SQL interpolates the SAME values so
+    * both engines chunk on one geometry. */
+  private[graft] val ChunkWindow: Int = 64
+  private[graft] val ChunkStride: Int = 48
 
   /** q130 [EXT]: sliding-window chunking — q97's complement: q97 PACKS
     * short documents into fixed-budget sequences; this SPLITS long
@@ -2068,15 +2041,15 @@ object LlmOps {
     * pretraining tokenizer pipeline expects (a sentence cut at a hard
     * boundary reappears whole in the next chunk). Chunks start at token
     * 1, 1+S, 1+2S, … ≤ n, so every token lands in ≥ 1 chunk for any
-    * S ≤ W (the dial's own require), and the tail chunk truncates to
+    * S ≤ W, and the tail chunk truncates to
     * the document edge rather than padding — n_chunk_toks carries the
     * truth.
     *
     * 100 TB: the ideal map-only shape — one row-local Generate
     * (posexplode over the start sequence) inside whole-stage codegen,
     * NO shuffle, NO join, output ~n/S rows per doc; the corpus is read
-    * once and chunk rows stream straight to the sink. Geometry is
-    * env-dialed and interpolated into the oracle (q103's convention).
+    * once and chunk rows stream straight to the sink. The geometry is
+    * interpolated into the oracle (q103's convention).
     * The projection is the shared batch/stream code object
     * [[graft.streaming.Chunker]] (s82/s85's convention) — s93 pins the
     * streaming spelling row-identical to this oracled batch answer. */
@@ -2156,8 +2129,8 @@ object LlmOps {
     * distinct n-token shingles that appear in ANY eval doc; docs at
     * overlap ≥ 0.5 are flagged contaminated.
     *
-    * The shingle width n is env-backed ([[graft.core.SketchGeometry]],
-    * GRAFT_DECON_SHINGLE_N, default 3 — the sf0.01 oracle geometry):
+    * The shingle width n is [[geom]]'s `deconShingleN` (3 — the sf0.01
+    * oracle geometry):
     * production decontamination runs 8–13-token n-grams, because a
     * 3-gram flags incidental phrase overlap while a wide shingle only
     * fires on near-verbatim leaks (LlmOpsSpec proves both behaviors at
@@ -2275,21 +2248,17 @@ object LlmOps {
     * exchanges keyed on the shingle fingerprint (eval-side explode,
     * train-side distinct), then a doc-keyed re-agg; ids and 8-byte
     * fingerprints cross the wire, bodies never do. */
-  /** q133's shingle width — deliberately its OWN dial, default 8 (the
+  /** q133's shingle width — deliberately its OWN constant, 8 (the
     * standard decontamination n-gram), NOT q63/q103's
-    * `GRAFT_DECON_SHINGLE_N` (default 3): against a ~5-doc eval set a
+    * `deconShingleN` (3): against a ~5-doc eval set a
     * trigram probe is already selective, but against 80% OF THE CORPUS
     * the trigram space saturates — measured 75/96 clean val/test docs
     * flagging at n=3 on sf0.001 (pure vocabulary collision), vs 8/96 at
     * n=8, and those 8 are the fixture's genuine cross-split exact
     * duplicates (q80's groups landing on both sides of the q94 split —
     * real leaks, correct findings). The oracle interpolates the same
-    * dial. */
-  private[graft] val LeakShingleN: Int = {
-    val n = sys.env.getOrElse("GRAFT_LEAK_SHINGLE_N", "8").toInt
-    require(n >= 2, s"GRAFT_LEAK_SHINGLE_N=$n — a width under 2 is a typo")
-    n
-  }
+    * value. */
+  private[graft] val LeakShingleN: Int = 8
 
   /** q133/q138's shared corpus derivation: documents + the planted
     * train→eval leaks (train docs re-ingested truncated under new ids,
@@ -2671,10 +2640,8 @@ object LlmOps {
        |  5 NULLS FIRST, 6 NULLS FIRST""".stripMargin
   }
 
-  // lazy (the CorpusOps pattern): q165/q166 entries parse the winnow
-  // dials and several entries interpolate env-backed geometry — a bad
-  // dial must fail at oracle access, not take down every LlmOps query
-  // via ExceptionInInitializerError (the ADVICE-r12 lazy-dial rule)
+  // lazy: only Verify and the specs read the oracle text, so a query
+  // run never pays to build these SQL strings
   lazy val oracles: Map[String, String] = Map(
     "q117_lm_score" ->
       // same quantized surprisal: unpadded bin() length == Spark's
@@ -2898,7 +2865,7 @@ object LlmOps {
         |ORDER BY 1 NULLS FIRST, 2 NULLS FIRST, 3 NULLS FIRST""".stripMargin,
     "q167_contrastive_pairs" -> {
       // q68's recursive-CTE labels + the package knuth spellings + the
-      // same rank-1/2 minima; buckets interpolated from the engine dial
+      // same rank-1/2 minima; buckets interpolated from the engine constant
       val b = ContrastiveBuckets
       OracleCtes.labels + s""",
         |uni AS (SELECT doc_id FROM documents
@@ -3141,7 +3108,7 @@ object LlmOps {
         |FROM documents
         |ORDER BY 1 NULLS FIRST, 2 NULLS FIRST, 3 NULLS FIRST, 4 NULLS FIRST""".stripMargin,
     "q130_chunk_windows" ->
-      // same geometry interpolated (window/stride env dials); DuckDB
+      // same geometry interpolated (ChunkWindow/ChunkStride); DuckDB
       // range() is end-exclusive so the +1 keeps the final start at
       // len(toks); list slicing toks[a:b] is 1-based inclusive, the
       // mirror of Spark's slice(arr, start, length)

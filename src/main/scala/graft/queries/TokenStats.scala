@@ -338,7 +338,7 @@ object TokenStats {
   /** q129 [EXT]: per-language token-budget admission — the batch twin of
     * the streaming meter (s88, `streaming/TokenBudget.scala`, Spark 4's
     * `transformWithState`): each language holds a token quota
-    * ([[graft.streaming.TokenBudget.Quota]], env-dialed, interpolated
+    * ([[graft.streaming.TokenBudget.Quota]], interpolated
     * into the oracle), docs are metered in doc_id (ingest) order, and a
     * doc is admitted while the language's running token meter — ALL
     * tokens seen, admitted or not — stays within quota. The meter-whole-

@@ -39,15 +39,10 @@ object MinwisePanel {
   val P: Long = graft.queries.KnuthP
   val C: Long = graft.queries.KnuthC
 
-  /** Panel capacity per source. Env-dialed; q137's batch twin and the
-    * DuckDB oracle interpolate the same value. State is K·|sources|
+  /** Panel capacity per source. q137's batch twin and the DuckDB
+    * oracle interpolate the same value. State is K·|sources|
     * (prio, id) pairs regardless of stream volume. */
-  val K: Int = {
-    val k = sys.env.getOrElse("GRAFT_MINWISE_K", "20").toInt
-    require(k >= 1, s"GRAFT_MINWISE_K=$k keeps no panel — a non-positive " +
-      "capacity would make every source's sample empty")
-    k
-  }
+  val K: Int = 20
 
   /** The deterministic sampling priority — kernel-side twin of the
     * column expression in q137 (exact: |id % P| < 1e9, ×C < 2^62). */

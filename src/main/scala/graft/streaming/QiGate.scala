@@ -35,19 +35,8 @@ object QiGate {
     * exist at every SF), so the audit ladder has structure. */
   val BandWidth = 100L
 
-  /** The k dial (suppress below k class members). Parsed per call, not
-    * at object init, so a malformed value fails only the queries that
-    * read it (the GRAFT_BPE_ROUNDS lesson, ADVICE r12). */
-  private[graft] def kDial: Long = {
-    val raw = sys.env.getOrElse("GRAFT_QI_K", "5")
-    val k = try raw.toLong catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"GRAFT_QI_K must be a positive integer, got '$raw'")
-    }
-    require(k >= 1, s"GRAFT_QI_K must be >= 1, got $k")
-    k
-  }
+  /** The anonymity threshold k: suppress below k class members. */
+  private[graft] val kDial: Long = 5L
 
   /** The quasi-identifier projection — one spelling for the audit
     * (q160), the gate (q161), its oracle, and the stream (s99). */

@@ -35,16 +35,10 @@ import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor,
   * horizon and mis-flag bursts otherwise. */
 object RecentDupGate {
 
-  /** Ring capacity per source. Env-dialed: the burst lengths a
-    * deployment must absorb (re-queue depth, mirror fanout), NOT
-    * corpus size — state stays Window·|sources| longs regardless of
-    * volume. */
-  val Window: Int = {
-    val w = sys.env.getOrElse("GRAFT_RECENT_DUP_WINDOW", "64").toInt
-    require(w >= 1, s"GRAFT_RECENT_DUP_WINDOW=$w admits no ring — a " +
-      "non-positive window would silently pass every burst duplicate")
-    w
-  }
+  /** Ring capacity per source: sized to the burst lengths a deployment
+    * must absorb (re-queue depth, mirror fanout), NOT corpus size —
+    * state stays Window·|sources| longs regardless of volume. */
+  val Window: Int = 64
 
   /** Output row: (source, doc_id, fingerprint, is_recent_dup). */
   type Out = (String, Long, Long, Boolean)

@@ -40,15 +40,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * sort cannot repair cross-batch disorder once the meter has folded). */
 object TokenBudget {
 
-  /** Default per-language quota in whitespace tokens (q86's ws_tokens
-    * measure). Env-dialed; q129's oracle SQL interpolates the SAME
-    * value so both engines gate on one number. */
-  val Quota: Long = {
-    val q = sys.env.getOrElse("GRAFT_TOKEN_QUOTA", "2000").toLong
-    require(q >= 0, s"GRAFT_TOKEN_QUOTA=$q — a negative quota admits " +
-      "nothing and reads as a dial typo, not a policy")
-    q
-  }
+  /** Per-language quota in whitespace tokens (q86's ws_tokens
+    * measure). q129's oracle SQL interpolates the SAME value so both
+    * engines gate on one number. */
+  val Quota: Long = 2000L
 
   /** The shared transition: meter' = meter + n, admitted ⇔ meter' ≤
     * quota. One addition and one compare — the entire per-doc state

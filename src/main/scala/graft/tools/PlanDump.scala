@@ -30,7 +30,7 @@ object PlanDump {
     "q67_tfidf_terms" -> "cached tf served to df-agg and join (InMemoryTableScan), map-side WindowGroupLimit top-k",
     "q38_join_bucketed" -> "q10's join over bucketed tables: no hash-partition Exchange (bucket-co-located scans; broadcast disabled to show the large×large shape)",
     "q82_similarity_topk" -> "broadcast query set + codegen'd cosine kernel",
-    "q88_dedup_ngram" -> "ngram dedup serving plan: the memoized PairTable parquet scan + jacc cut (the fresh df-capped index + equi pair join lives under GRAFT_LABEL_MEMO=0 and ScaleProbe's pair_build_fresh row)",
+    "q88_dedup_ngram" -> "ngram dedup serving plan: the memoized PairTable parquet scan + jacc cut (the fresh df-capped index + equi pair join is ScaleProbe's pair_build_fresh row and PlanSpec's direct fresh-build checks)",
     "q89_dedup_simhash" -> "native simhash64 kernel + cached sketch, 16-bit band equi join",
     "q92_dedup_embedding" -> "SRP-bucket self equi-join + exact-cosine verify (no cross join)",
     "q69_dedup_substring" -> "single first-shingle probe of the df-capped index; id-only candidates, bodies re-joined by id",

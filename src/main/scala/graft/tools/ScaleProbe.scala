@@ -304,22 +304,19 @@ object ScaleProbe {
     import graft.queries.{CorpusOps, LlmOps}
     // the SRP-bucket candidate stage is quadratic in bucket OCCUPANCY, so
     // fixed geometry at k× data grows candidate work ~k²/2^bits; the
-    // production answer is the env-backed dial — srpBits + ⌈log2 k⌉
-    // holds occupancy (and so per-bucket work) constant. The env overlay
-    // keeps ONLY the bits override on the real env — a synthetic Map
-    // would silently reset every other geometry knob (embeddingDim,
-    // probe radius, ...) to defaults and probe a different operator
-    // than the session's
-    val baseBits = graft.core.SketchGeometry.fromEnv().srpBits
+    // production answer is the geometry's srpBits — srpBits + ⌈log2 k⌉
+    // holds occupancy (and so per-bucket work) constant. Only srpBits
+    // moves; every other knob stays the declared queries' geometry
+    val base = graft.core.SketchGeometry.defaults
     def srpDial(f: graft.core.SketchGeometry => graft.queries.Q)(k: Int) = {
-      val bits = baseBits + (math.log(k.toDouble) / math.log(2.0)).ceil.toInt
-      (bits, f(graft.core.SketchGeometry.fromEnv(sys.env + ("GRAFT_SRP_BITS" -> bits.toString))))
+      val bits = base.srpBits + (math.log(k.toDouble) / math.log(2.0)).ceil.toInt
+      (bits, f(base.copy(srpBits = bits)))
     }
     Seq(
       Dial("q92", "q92 embedding dedup under the geometry dial", "srpBits", "pairs",
         srpDial(LlmOps.q92WithGeometry),
         "The SRP-bucket candidate stage is quadratic in bucket occupancy; at k× data the " +
-          "operating procedure is srpBits + ⌈log2 k⌉ (the env-backed `GRAFT_SRP_BITS`), " +
+          "operating procedure is srpBits + ⌈log2 k⌉ (`SketchGeometry.srpBits`), " +
           "holding occupancy — and per-bucket join work — constant. Vectors are scaled by " +
           "per-copy diagonal ±1 transforms (within-copy cosines exact, cross-copy " +
           "decorrelated):",

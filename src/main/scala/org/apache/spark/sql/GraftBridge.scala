@@ -23,4 +23,10 @@ object GraftBridge {
     * posted so far (`waitUntilEmpty` is spark-private). */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The distinct operation-scope names (`Exchange`, `WholeStageCodegen
+    * (2)`, ...) of a stage's RDDs, in RDD id order
+    * (`RDDOperationScope` is spark-private). */
+  def stageScopes(si: org.apache.spark.scheduler.StageInfo): Seq[String] =
+    si.rddInfos.sortBy(_.id).flatMap(_.scope).map(_.name).distinct.toSeq
 }

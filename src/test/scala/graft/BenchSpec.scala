@@ -53,4 +53,23 @@ class BenchSpec extends SparkSpec {
       assert(listener.stageTable().size == r("stages"))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("every stage of a labeled shuffled query is named after the query and lists its scopes") {
+    val listener = new Bench.QueryListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      listener.reset()
+      Bench.labeled(spark, "bench_spec_label")(Bench.run(shuffled()))
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      val lines = listener.stageTable()
+      assert(lines.size >= 2, lines.mkString("\n"))
+      lines.foreach { l =>
+        assert(l.contains("bench_spec_label"), l)
+        assert(!l.contains("CompletableFuture"), l)
+      }
+      assert(lines.exists(_.contains("Exchange")), lines.mkString("\n"))
+      assert(lines.exists(_.contains("WholeStageCodegen")), lines.mkString("\n"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

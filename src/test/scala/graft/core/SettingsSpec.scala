@@ -22,9 +22,8 @@ class SettingsSpec extends AnyFunSuite {
     val s = Settings.fromEnv(fullEnv)
     assert(s.s3BucketName.contains("bucket"))
     assert(s.kafkaBootstrapServers == "k1:9092")
-    assert(s.chunkSize == 10)           // settings.py:4
-    assert(s.processIntervalSec == 60)  // settings.py:5
-    assert(s.retryDelaySec == 20)       // settings.py:6
+    assert(graft.ingest.Sinks.ReferenceCadence ==        // settings.py:5
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime("60 seconds"))
     assert(s.sourceRoot == "s3a://bucket/incoming/csv")
   }
 
@@ -61,22 +60,22 @@ class SettingsSpec extends AnyFunSuite {
   }
 
   test("SketchGeometry: defaults match the shipped sf0.001-0.1 geometry") {
-    val g = SketchGeometry.fromEnv(Map.empty)
-    assert(g == SketchGeometry.defaults)
+    val g = SketchGeometry.defaults
+    assert(g == graft.queries.LlmOps.geom)
     assert(g.minhashBands == 4)
     assert(g.simhashBands == 4)
     assert(g.srpBuckets == 256)
   }
 
   test("SketchGeometry: env overrides change the derived bucket counts") {
-    val g = SketchGeometry.fromEnv(Map(
-      "GRAFT_SRP_BITS" -> "12",
-      "GRAFT_SIMHASH_BAND_BITS" -> "8",
-      "GRAFT_MINHASH_K" -> "20",
-      "GRAFT_MINHASH_ROWS_PER_BAND" -> "4",
-      "GRAFT_SHINGLE_DF_CAP" -> "50",
-      "GRAFT_BAND_OCCUPANCY_CAP" -> "200"))
-    assert(g.srpBuckets == 4096, "srp bucket count must follow GRAFT_SRP_BITS")
+    val g = SketchGeometry.defaults.copy(
+      srpBits = 12,
+      simhashBandBits = 8,
+      minhashK = 20,
+      minhashRowsPerBand = 4,
+      shingleDfCap = 50,
+      bandOccupancyCap = 200)
+    assert(g.srpBuckets == 4096, "srp bucket count must follow srpBits")
     assert(g.simhashBands == 8)
     assert(g.minhashBands == 5)
     assert(g.shingleDfCap == 50)
@@ -84,30 +83,29 @@ class SettingsSpec extends AnyFunSuite {
   }
 
   test("SketchGeometry: probe radius and embedding dim are env knobs too") {
-    val d = SketchGeometry.fromEnv(Map.empty)
+    val d = SketchGeometry.defaults
     assert(d.srpProbeRadius == 2 && d.embeddingDim == 64)
     assert(d.srpProbeCount == 37, "default 8 bits @ radius 2 = 1+8+28 probes")
-    val g = SketchGeometry.fromEnv(Map(
-      "GRAFT_SRP_PROBE_RADIUS" -> "1",
-      "GRAFT_EMBEDDING_DIM" -> "128"))
+    val g = d.copy(srpProbeRadius = 1, embeddingDim = 128)
     assert(g.srpProbeCount == 9, "radius 1 over 8 bits = 1+8 probes")
     assert(g.embeddingDim == 128)
     assert(d.oovVocabSize == 16)
-    assert(SketchGeometry.fromEnv(Map("GRAFT_OOV_VOCAB" -> "32768")).oovVocabSize == 32768)
+    assert(d.copy(oovVocabSize = 32768).oovVocabSize == 32768)
   }
 
   test("SketchGeometry rejects inconsistent geometry loudly") {
+    val d = SketchGeometry.defaults
     intercept[IllegalArgumentException](
-      SketchGeometry.fromEnv(Map("GRAFT_MINHASH_ROWS_PER_BAND" -> "5"))) // 12 % 5 != 0
+      d.copy(minhashRowsPerBand = 5)) // 12 % 5 != 0
     intercept[IllegalArgumentException](
-      SketchGeometry.fromEnv(Map("GRAFT_SIMHASH_BAND_BITS" -> "7"))) // 64 % 7 != 0
+      d.copy(simhashBandBits = 7)) // 64 % 7 != 0
     intercept[IllegalArgumentException](
-      SketchGeometry.fromEnv(Map("GRAFT_SRP_BITS" -> "0")))
+      d.copy(srpBits = 0))
     intercept[IllegalArgumentException]( // probing past every bit is nonsense
-      SketchGeometry.fromEnv(Map("GRAFT_SRP_PROBE_RADIUS" -> "9")))
+      d.copy(srpProbeRadius = 9))
     intercept[IllegalArgumentException](
-      SketchGeometry.fromEnv(Map("GRAFT_EMBEDDING_DIM" -> "0")))
+      d.copy(embeddingDim = 0))
     intercept[IllegalArgumentException](
-      SketchGeometry.fromEnv(Map("GRAFT_OOV_VOCAB" -> "0")))
+      d.copy(oovVocabSize = 0))
   }
 }

@@ -82,7 +82,7 @@ class LlmOpsSpec extends SparkSpec {
   test("sketch geometry is env-driven: an SRP_BITS override changes live bucket counts") {
     val v = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("embedding").cast("array<double>").as("e"))
-    val g4 = SketchGeometry.fromEnv(Map("GRAFT_SRP_BITS" -> "4"))
+    val g4 = SketchGeometry.defaults.copy(srpBits = 4)
     val b4 = v.select(LlmOps.srpBucket(col("e"), g4).as("b")).distinct().count()
     val b8 = v.select(LlmOps.srpBucket(col("e"), LlmOps.geom).as("b")).distinct().count()
     assert(b4 <= 16, s"4-bit geometry produced $b4 buckets (> 2^4)")
@@ -91,11 +91,11 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("q91 probeMasks enumerates exactly the hamming ball of the env-backed radius") {
-    // radius is now geometry (GRAFT_SRP_PROBE_RADIUS), not a constant:
+    // radius is geometry (srpProbeRadius), not a constant:
     // the mask set must be exactly {m : popcount(m) <= r} over `bits`
     // positions, and its size must match srpProbeCount for every radius
     (0 to 3).foreach { r =>
-      val g = SketchGeometry.fromEnv(Map("GRAFT_SRP_PROBE_RADIUS" -> r.toString))
+      val g = SketchGeometry.defaults.copy(srpProbeRadius = r)
       val masks = LlmOps.probeMasks(g.srpBits, g.srpProbeRadius)
       assert(masks.distinct.size == masks.size, s"radius $r: duplicate masks")
       assert(masks.size == g.srpProbeCount,
@@ -427,7 +427,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("q91 recall climbs with the env-backed probe radius (the recall-vs-work knob)") {
-    // GRAFT_SRP_PROBE_RADIUS is the operational dial: each +1 of radius
+    // srpProbeRadius is the operational knob: each +1 of radius
     // probes the next hamming shell (C(bits, r) more buckets per query)
     // and strictly widens the candidate set, so recall vs the brute-force
     // top-3 must be monotone in the radius, reaching >=0.8 by radius 4
@@ -435,7 +435,7 @@ class LlmOpsSpec extends SparkSpec {
     val top3 = LlmOps.q82SimilarityTopk(spark, sf).collect()
       .filter(_.getInt(1) <= 3).map(r => (r.getLong(0), r.getLong(2))).toSet
     val recalls = Seq(2, 4).map { r =>
-      val g = SketchGeometry.fromEnv(Map("GRAFT_SRP_PROBE_RADIUS" -> r.toString))
+      val g = SketchGeometry.defaults.copy(srpProbeRadius = r)
       val got = LlmOps.q91WithGeometry(g)(spark, sf).collect()
         .map(row => (row.getLong(0), row.getLong(2))).toSet
       val rec = got.intersect(top3).size.toDouble / top3.size
@@ -448,7 +448,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("q63 at n=8: planted leaks still flagged, incidental phrase overlap gone") {
-    // the production-width argument (GRAFT_DECON_SHINGLE_N=8..13): a
+    // the production-width argument (deconShingleN = 8..13): a
     // 3-token shingle fires on incidental phrase overlap between honest
     // corpus docs and the eval set; an 8-token shingle only matches
     // near-verbatim leaks. Planted leaks (id+3e6, one token dropped)

@@ -175,8 +175,8 @@ class PlanSpec extends SparkSpec {
     // persist the explode subtree appears once PER consumer (measured
     // 6× at sf0.1) — InMemoryTableScan in the plan proves reuse.
     // q88's serving plan is now a PairTable parquet read, so the pin
-    // targets the fresh pair BUILD directly (what GRAFT_LABEL_MEMO=0
-    // and every first-touch materialization actually executes)
+    // targets the fresh pair BUILD directly (what every first-touch
+    // materialization actually executes)
     assert(LlmOps.ngramPairJaccard(spark, sf)
       .queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
       "ngramPairJaccard: no cache reuse")

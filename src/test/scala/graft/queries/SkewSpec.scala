@@ -7,7 +7,7 @@ import graft.SparkSpec
 /** q15's hot-key guard on a planted bot user: the theta-range join's
   * output is quadratic in events-per-user-inside-the-band, so a single
   * hot key (scraper/bot traffic) explodes regardless of partitioning.
-  * The per-user event cap (GRAFT_EVENTS_PER_USER_CAP) bounds each user's
+  * The per-user event cap (`Joins.EventsPerUserCap`) bounds each user's
   * contribution at cap² pairs — these tests plant a 500-event bot among
   * normal users and check the bound binds, deterministically. */
 class SkewSpec extends SparkSpec {
