@@ -227,7 +227,7 @@ object Bench {
 
   /** Per-query Spark runtime counters from the public listener API:
     * jobs, stages, tasks, Σ executor run / CPU / GC time, shuffle
-    * read/write volume, fetch-wait and shuffle-write time — named like
+    * read/write volume, fetch-wait and shuffle-write time, spill — named like
     * perfbench's `spark.*` trace metrics, so a Bench row and a traced
     * perfbench run read alike. [[reset]] before an action; read
     * [[record]] and [[stageTable]] after `GraftBridge.drainListenerBus`,
@@ -235,7 +235,7 @@ object Bench {
   final class QueryListener extends SparkListener {
     private case class Stage(id: Int, submitted: Long, durMs: Long, tasks: Int,
       runMs: Long, cpuMs: Long, gcMs: Long, readB: Long, writeB: Long,
-      fetchWaitMs: Long, writeMs: Long, name: String, scopes: Seq[String])
+      fetchWaitMs: Long, writeMs: Long, spillB: Long, name: String, scopes: Seq[String])
     private val stages = mutable.ArrayBuffer.empty[Stage]
     private var jobs = 0
 
@@ -250,6 +250,7 @@ object Bench {
           si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000, m.jvmGCTime,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
           m.shuffleReadMetrics.fetchWaitTime, m.shuffleWriteMetrics.writeTime / 1000000,
+          m.memoryBytesSpilled + m.diskBytesSpilled,
           si.name.linesIterator.next().take(90),
           org.apache.spark.sql.GraftBridge.stageScopes(si))
       }
@@ -263,7 +264,9 @@ object Bench {
         "executor_run_s" -> sum(_.runMs) / 1e3, "executor_cpu_s" -> sum(_.cpuMs) / 1e3,
         "gc_s" -> sum(_.gcMs) / 1e3, "shuffle_read_mb" -> sum(_.readB) / 1048576.0,
         "shuffle_write_mb" -> sum(_.writeB) / 1048576.0,
-        "fetch_wait_s" -> sum(_.fetchWaitMs) / 1e3, "shuffle_write_s" -> sum(_.writeMs) / 1e3)
+        "fetch_wait_s" -> sum(_.fetchWaitMs) / 1e3, "shuffle_write_s" -> sum(_.writeMs) / 1e3,
+        // the Spark UI's two spill columns, memory and disk, together
+        "spill_mb" -> sum(_.spillB) / 1048576.0)
     }
 
     /** One line per completed stage, in submission order: its counters,

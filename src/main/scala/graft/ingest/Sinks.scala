@@ -22,12 +22,21 @@ sealed trait GraftSink {
 }
 
 /** Durable file sink — the local stand-in with the same delivery
-  * semantics class (exactly-once per file via the commit protocol). */
+  * semantics class (exactly-once per file via the commit protocol).
+  *
+  * It writes [[Sinks.Codec]] (snappy), not the session's zstd. The sink
+  * stands in for Kafka, whose bytes never pass through parquet, so its
+  * codec buys the producer nothing; parquet-hadoop's zstd path wraps each
+  * page in a finalizable `ZstdOutputStream` that pins its column
+  * writer's 1 MiB buffer until the finalizer thread runs, which held
+  * about 20 MB of producer heap. The cost is size: one 60,000-row
+  * catch-up round writes 4.26 MB instead of 2.59 MB (+64%). */
 final case class ParquetSink(path: String, checkpoint: String) extends GraftSink {
   def configure(w: DataStreamWriter[Row]): DataStreamWriter[Row] =
     w.format("parquet").option("path", path).option("checkpointLocation", checkpoint)
+      .option("compression", Sinks.Codec)
   def writeBatch(df: DataFrame): Unit =
-    df.write.mode("append").parquet(path)
+    df.write.mode("append").option("compression", Sinks.Codec).parquet(path)
 }
 
 /** In-memory sink for deterministic streaming tests. */
@@ -78,7 +87,7 @@ final case class ForeachBatchSink(write: (DataFrame, Long) => Unit) extends Graf
   * per-batch directories double as retention/compaction units. */
 final case class IdempotentParquetSink(path: String, checkpoint: String) extends GraftSink {
   private[ingest] def writeOne(df: DataFrame, id: Long): Unit =
-    df.write.mode("overwrite").parquet(s"$path/batch_id=$id")
+    df.write.mode("overwrite").option("compression", Sinks.Codec).parquet(s"$path/batch_id=$id")
   def configure(w: DataStreamWriter[Row]): DataStreamWriter[Row] =
     w.option("checkpointLocation", checkpoint)
       .foreachBatch((df: org.apache.spark.sql.Dataset[Row], id: Long) => writeOne(df.toDF(), id))
@@ -89,6 +98,9 @@ object Sinks {
   /** The reference's 60 s cadence (`PROCESS_INTERVAL`, `settings.py:5`):
     * the default trigger of every producer stream. */
   val ReferenceCadence: Trigger = Trigger.ProcessingTime("60 seconds")
+
+  /** Parquet codec of the file sinks ([[ParquetSink]] says why). */
+  val Codec: String = "snappy"
 
   /** Start a value frame into a sink, by default at [[ReferenceCadence]]. */
   def start(values: DataFrame, sink: GraftSink,

@@ -647,7 +647,7 @@ object LlmOps {
     * files, so the key moves even inside one mtime tick); a superseded
     * table is deleted (temp AND warehouse mode — the old fingerprint
     * names a corpus build that no longer exists). `GRAFT_LABEL_DIR`
-    * unset ⇒ a JVM-scoped temp dir; set ⇒ `$base/<prefix>_<fp>`, a
+    * unset ⇒ a JVM-scoped temp dir, deleted at JVM exit; set ⇒ `$base/<prefix>_<fp>`, a
     * STABLE warehouse path shared across JVMs (writer leaves
     * `_SUCCESS`, later JVMs adopt). Locking is PER KEY
     * (`ConcurrentHashMap.compute` — round-13 advice on BpeTable's global
@@ -690,6 +690,7 @@ object LlmOps {
                 d.toString
               case None =>
                 val d = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_")
+                deleteAtExit(d.toString)
                 freshFn(spark, dir).write.mode("overwrite").parquet(d.toString)
                 d.toString
             }
@@ -716,6 +717,14 @@ object LlmOps {
       finally stream.close()
     Integer.toHexString(scala.util.hashing.MurmurHash3.seqHash(files))
   }
+
+  /** Temp-mode [[MaterializedTable]] directories, deleted by one hook at
+    * JVM exit (a warehouse table is shared across JVMs and stays). */
+  private[queries] val tempTables = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private lazy val tempTablesHook: Unit = sys.addShutdownHook(
+    tempTables.forEach(d => deleteTree(java.nio.file.Paths.get(d))))
+
+  private def deleteAtExit(dir: String): Unit = { tempTablesHook; tempTables.add(dir) }
 
   private def deleteTree(root: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(root)) {

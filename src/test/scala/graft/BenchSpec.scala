@@ -50,6 +50,7 @@ class BenchSpec extends SparkSpec {
       assert(r("stages").asInstanceOf[Int] >= 2, r)
       assert(r("tasks").asInstanceOf[Int] > 0, r)
       assert(r("shuffle_write_mb").asInstanceOf[Double] > 0, r)
+      assert(r.get("spill_mb").contains(0.0), r) // the grouped sum spills nothing
       assert(listener.stageTable().size == r("stages"))
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -19,6 +19,16 @@ class GraftSessionSpec extends SparkSpec {
     }
   }
 
+  test("file: resolves to the fork-free local filesystem through both Hadoop APIs") {
+    // FileSystem's cache keys on scheme and authority, not on fs.file.impl:
+    // this is what shows the suites really run the engine's classes
+    val conf = spark.sessionState.newHadoopConf()
+    val uri = java.net.URI.create("file:///")
+    assert(org.apache.hadoop.fs.FileSystem.get(uri, conf).isInstanceOf[GraftLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+      .getDefaultFileSystem.isInstanceOf[GraftLocalFs])
+  }
+
   test("the as-of join strategy is planned exactly once") {
     assert(spark.sessionState.planner.strategies.count(_ == AsOfJoinStrategy) == 1)
   }

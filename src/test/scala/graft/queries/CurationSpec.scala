@@ -229,6 +229,19 @@ class CurationSpec extends SparkSpec {
       "an embeddings rebuild did NOT invalidate the embeddings-keyed memo")
   }
 
+  test("MaterializedTable: a temp-mode table is registered for deletion at JVM exit, a warehouse table is not") {
+    import scala.jdk.CollectionConverters._
+    def registered = LlmOps.tempTables.asScala.toSet
+    val tbl = new LlmOps.MaterializedTable("exittest", (s, _) => s.range(2).toDF("doc_id"))
+    val base = tmpDir("graft_exit_wh_")
+    tbl.of(spark, sf, Some(base)).count()
+    assert(!registered.exists(_.startsWith(base)), "a warehouse table was registered")
+    val before = registered
+    tbl.of(spark, sf, None).count()
+    val added = registered -- before
+    assert(added.size == 1 && added.head.contains("graft_exittest_"), added)
+  }
+
   test("PairTable: the materialized pair universe is row-identical to a fresh ngramPairJaccard run") {
     // q88 (the 0.5 cut) and q169 (the threshold sweep) both read this
     // artifact: the parquet round-trip (BIGINT ids/counts, the
