@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{col, expr, struct}
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,29 +31,17 @@ import graft.core.Schemas
   * rows within a task (the reference allocates per record —
   * `app.py:149` — one of the places a columnar engine just does better).
   *
-  * Null policy (SURVEY.md §7.3): the .avsc is authoritative — a null in
-  * one of the 9 required fields raises by default (strict mode, so bad
-  * data is loud), instead of the reference's swallowed per-chunk log line
-  * (`app.py:157-158`). Given a `badRecords` counter (lenient mode) the
-  * poison row is nulled out and COUNTED instead of killing the batch —
-  * the bad-record metric SURVEY §7.3 promises. (Accumulator caveat: task
-  * retries can over-count; it is a monitoring metric, not a ledger.)
+  * Null policy (SURVEY.md §7.3): one, strict. The .avsc is authoritative
+  * — a null in one of the 9 required fields fails the task, so bad data
+  * is loud instead of the reference's swallowed per-chunk log line
+  * (`app.py:157-158`). Which rows are wire-valid is decided upstream,
+  * by `Pipeline`'s `guarded` switch (it drops and counts them as the
+  * `rejected` observed metric); this expression only encodes.
   */
-case class AvroEncodeExpression(child: Expression, avscJson: String,
-    badRecords: Option[org.apache.spark.util.LongAccumulator] = None)
+case class AvroEncodeExpression(child: Expression, avscJson: String)
     extends UnaryExpression with CodegenFallback {
 
-  private def lenient: Boolean = badRecords.isDefined
-
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = child.nullable || lenient
-
-  /** Lenient mode has a side effect (the counter), so advertise
-    * non-determinism: it stops Catalyst from duplicating the expression
-    * (e.g. pushing a `value IS NOT NULL` filter through the projection),
-    * which would double-count bad records. */
-  override lazy val deterministic: Boolean =
-    !lenient && children.forall(_.deterministic)
 
   private def structType = child.dataType.asInstanceOf[StructType]
 
@@ -72,16 +60,10 @@ case class AvroEncodeExpression(child: Expression, avscJson: String,
       i += 1
     }
     out.reset()
-    try {
-      val enc = EncoderFactory.get().directBinaryEncoder(out, null)
-      writer.write(rec, enc)
-      enc.flush()
-      out.toByteArray
-    } catch {
-      case scala.util.control.NonFatal(_) if lenient =>
-        badRecords.get.add(1L)
-        null
-    }
+    val enc = EncoderFactory.get().directBinaryEncoder(out, null)
+    writer.write(rec, enc)
+    enc.flush()
+    out.toByteArray
   }
 
   override protected def withNewChildInternal(newChild: Expression): AvroEncodeExpression =
@@ -161,21 +143,6 @@ object AvroCodec {
   def encodeFrame(spark: SparkSession, canonical: DataFrame): DataFrame =
     canonical.select(record(canonical)).select(ColumnBridge.column(
       AvroEncodeExpression(attr("r"), Schemas.reclamacoesAvsc)).as("value"))
-
-  /** Lenient flavor: rows that violate the wire schema (null in a
-    * required field) are dropped and counted instead of failing the
-    * batch/micro-batch — returns the value frame plus the live
-    * bad-record counter (SURVEY §7.3's promised metric). Each call binds
-    * its own accumulator into its own expression. */
-  def encodeFrameLenient(spark: SparkSession, canonical: DataFrame)
-      : (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    val acc = spark.sparkContext.longAccumulator("graft.avro.bad_records")
-    val values = canonical.select(record(canonical))
-      .select(ColumnBridge.column(AvroEncodeExpression(attr("r"),
-        Schemas.reclamacoesAvsc, badRecords = Some(acc))).as("value"))
-      .filter(expr("value IS NOT NULL")) // nulled-out poison rows: counted, not shipped
-    (values, acc)
-  }
 
   /** value column → canonical wire columns (round-trip/test path). */
   def decodeFrame(spark: SparkSession, encoded: DataFrame): DataFrame =

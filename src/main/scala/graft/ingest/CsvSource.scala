@@ -25,21 +25,17 @@ object CsvSource {
       "Quantidade de reclamações não reguladas;Quantidade total de reclamações;" +
       "Quantidade total de clientes – CCS e SCR;Quantidade de clientes – CCS;Quantidade de clientes – SCR"
 
-  private def common(r: org.apache.spark.sql.DataFrameReader) = r
-    .option("sep", ";")
-    .option("encoding", "ISO-8859-1")
-    .option("header", "true")
-    .option("mode", "PERMISSIVE")
-    .option("ignoreMissingFiles", "true")
-    .option("pathGlobFilter", "*.csv")
+  /** The scan options batch and stream share. */
+  private val options = Map(
+    "sep" -> ";",
+    "encoding" -> "ISO-8859-1",
+    "header" -> "true",
+    "mode" -> "PERMISSIVE",
+    "pathGlobFilter" -> "*.csv")
 
   /** Batch scan: every column `StringType`, like `csv.DictReader`. */
   def readBatch(spark: SparkSession, path: String): DataFrame =
-    common(spark.read).csv(path)
-
-  /** Batch scan against an explicit schema (typed ingestion path). */
-  def readBatch(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    common(spark.read).schema(schema).csv(path)
+    spark.read.options(options).option("ignoreMissingFiles", "true").csv(path)
 
   /** Streaming flavor of the same scan — replaces the reference's 60 s
     * re-list-everything polling loop (`app.py:176-196`) with Spark's
@@ -53,12 +49,7 @@ object CsvSource {
     * still splits across tasks, and a huge backlog never becomes one
     * unbounded batch. */
   def readStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream
-      .option("sep", ";")
-      .option("encoding", "ISO-8859-1")
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("pathGlobFilter", "*.csv")
+    spark.readStream.options(options)
       .option("maxBytesPerTrigger", batchByteBudget(spark).toString)
       .schema(schema)
       .csv(path)

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -23,72 +23,59 @@ import graft.core.Schemas
   */
 object Pipeline {
 
-  /** All-strings scan of raw reclamações CSV (header contract R2). */
-  private def canonicalize(raw: DataFrame): DataFrame =
-    Canonicalize(raw, Schemas.reclamacoesColumns)
-
   /** Batch: directory of CSVs → canonical 14-column frame. */
   def canonicalBatch(spark: SparkSession, path: String): DataFrame =
-    canonicalize(CsvSource.readBatch(spark, path))
+    Canonicalize(CsvSource.readBatch(spark, path), Schemas.reclamacoesColumns)
 
-  /** Batch: directory of CSVs → Avro `value` frame. */
-  def valuesBatch(spark: SparkSession, path: String): DataFrame =
-    AvroCodec.encodeFrame(spark, canonicalBatch(spark, path))
+  /** Batch: directory of CSVs → Avro `value` frame (see [[values]] for
+    * `guarded`). */
+  def valuesBatch(spark: SparkSession, path: String, guarded: Boolean = false): DataFrame =
+    values(spark, canonicalBatch(spark, path), guarded)
 
-  /** Data-quality metrics observed on the canonical frame: row volume,
-    * null rate of the reference's join/identity key (CNPJ), and quarter
-    * cardinality (HLL — DISTINCT aggregates are disallowed in observed
-    * metrics because they would break the single-pass guarantee). At
-    * 100 TB a metrics pass IS a corpus scan, so these must ride the
-    * shipping action, never re-scan (`CollectMetrics` folds them into
-    * the same task that ships each partition). */
+  /** Streaming: unbounded CSV prefix → Avro `value` frame (see [[values]]
+    * for `guarded`). The schema must be declared up front (streaming
+    * sources cannot infer); the wire StructType is exactly the
+    * csv.DictReader shape — all strings. */
+  def valuesStream(spark: SparkSession, path: String, guarded: Boolean = false): DataFrame = {
+    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path))
+    values(spark, Canonicalize(raw, Schemas.reclamacoesColumns), guarded)
+  }
+
+  /** Name of the observation a guarded frame carries: `rows`, `null_cnpj`
+    * (null rate of the reference's join/identity key), `quarters` (HLL —
+    * DISTINCT aggregates are disallowed in observed metrics because they
+    * would break the single-pass guarantee) and `rejected` (rows dropped
+    * by the guard). A batch action reads them from its
+    * `queryExecution.observedMetrics`, a stream from each
+    * `StreamingQueryProgress.observedMetrics`. At 100 TB a metrics pass IS
+    * a corpus scan, so they ride the shipping action (`CollectMetrics`
+    * folds them into the task that ships each partition). */
   val observedMetricsName = "canon_metrics"
-  private def qualityMetrics: Seq[Column] = Seq(
-    count(lit(1)).as("rows"),
-    sum(col("cnpj_if").isNull.cast("long")).as("null_cnpj"),
-    approx_count_distinct(col("trimestre")).as("quarters"))
 
-  /** Batch flavor of [[valuesBatch]] with quality metrics attached: the
-    * returned Observation resolves as a side effect of whatever action
-    * ships the values frame — one corpus pass for data AND metrics. */
-  def valuesBatchObserved(spark: SparkSession, path: String): (DataFrame, Observation) = {
-    val obs = Observation(observedMetricsName)
-    val canon = canonicalBatch(spark, path)
-      .observe(obs, qualityMetrics.head, qualityMetrics.tail: _*)
-    (AvroCodec.encodeFrame(spark, canon), obs)
-  }
+  /** The wire fields the .avsc declares without a null branch. */
+  private val requiredFields: Seq[String] =
+    Schemas.reclamacoesWire.fields.toSeq.filterNot(_.nullable).map(_.name)
 
-  /** Streaming: unbounded CSV prefix → Avro `value` frame. The schema
-    * must be declared up front (streaming sources cannot infer); the wire
-    * StructType is exactly the csv.DictReader shape — all strings. */
-  def valuesStream(spark: SparkSession, path: String): DataFrame = {
-    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path))
-    AvroCodec.encodeFrame(spark, canonicalize(raw))
-  }
-
-  /** Lenient streaming flavor: rows violating the wire schema (null in a
-    * required Avro field — the reference's latent serialization bug,
-    * `README.md:208`) are dropped and counted via the returned metric
-    * instead of failing the micro-batch. This is the production posture:
-    * one poison row in a 100 TB backfill should cost one counter tick,
-    * not the query. */
-  def valuesStreamLenient(spark: SparkSession, path: String)
-      : (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path))
-    AvroCodec.encodeFrameLenient(spark, canonicalize(raw))
-  }
-
-  /** Streaming flavor of [[valuesBatchObserved]]: the same per-batch
-    * quality metrics surface in each `StreamingQueryProgress
-    * .observedMetrics(observedMetricsName)` — the Observation handle is
-    * batch-only, but the `CollectMetrics` node is the same, so
-    * production monitoring reads progress events instead of a handle. */
-  def valuesStreamObserved(spark: SparkSession, path: String): DataFrame = {
-    val raw = CsvSource.readStream(spark, path, rawCsvSchema(spark, path))
-    val canon = canonicalize(raw)
-      .observe(observedMetricsName, qualityMetrics.head, qualityMetrics.tail: _*)
-    AvroCodec.encodeFrame(spark, canon)
-  }
+  /** Canonical frame → Avro `value` frame. The encoder is strict: a null
+    * in a required wire field (the reference's latent serialization bug,
+    * `README.md:208`) fails the action. `guarded` observes the canonical
+    * frame under [[observedMetricsName]] and drops every row with a null
+    * in one of the 9 required fields before the encoder, so one poison
+    * row in a backfill costs one `rejected` tick, not the query. It adds
+    * an aggregate and a filter per row, which is why it is not the
+    * default (ROADMAP 4(a) has the measured cost). */
+  private def values(spark: SparkSession, canonical: DataFrame, guarded: Boolean): DataFrame =
+    if (!guarded) AvroCodec.encodeFrame(spark, canonical)
+    else {
+      val wireValid = requiredFields.map(col(_).isNotNull).reduce(_ && _)
+      AvroCodec.encodeFrame(spark, canonical
+        .observe(observedMetricsName,
+          count(lit(1)).as("rows"),
+          count_if(col("cnpj_if").isNull).as("null_cnpj"),
+          approx_count_distinct(col("trimestre")).as("quarters"),
+          count_if(!wireValid).as("rejected"))
+        .filter(wireValid))
+    }
 
   /** Streaming schema bootstrap: one batch peek at the header (the
     * streaming analog of DictReader's first-row header read). A prefix
@@ -102,7 +89,8 @@ object Pipeline {
         StructType(CsvSource.bcbHeader.split(';').toSeq.map(StructField(_, StringType)))
     }
 
-  /** The whole producer, running: stream → sink at the reference cadence. */
+  /** The whole producer, running: stream → sink at the reference cadence,
+    * unguarded (a poison row fails the query with the encoder's error). */
   def run(spark: SparkSession, sourcePath: String, sink: GraftSink,
       trigger: Trigger = Sinks.ReferenceCadence): StreamingQuery =
     Sinks.start(valuesStream(spark, sourcePath), sink, trigger)

@@ -62,28 +62,18 @@ class AvroCodecSpec extends SparkSpec {
     assert(ex.getMessage != null)
   }
 
-  test("lenient encode: poison row is counted and dropped, batch completes") {
-    val badRow = Row("2022", null, "x", "x", null, "x", "x", "0",
-      null, null, "0", "0", "0", null) // trimestre (required) is null
-    val (values, bad) = AvroCodec.encodeFrameLenient(spark, frame(sample, badRow))
-    val rows = values.collect() // must NOT throw: the poison row is metered out
-    assert(rows.length == 1)
-    assert(rows.head.getAs[Array[Byte]]("value")(0) == 8) // the good row, intact
-    assert(bad.value == 1L, s"bad-record metric = ${bad.value}, want 1")
-  }
-
-  test("lenient encode: interleaved calls keep independent counters (no registry race)") {
-    val badRow = Row("2022", null, "x", "x", null, "x", "x", "0",
-      null, null, "0", "0", "0", null)
-    // interleave: build BOTH frames before collecting EITHER — with a
-    // shared registered name the second registration would capture the
-    // first frame's accumulator (or vice versa)
-    val (v1, bad1) = AvroCodec.encodeFrameLenient(spark, frame(sample, badRow))
-    val (v2, bad2) = AvroCodec.encodeFrameLenient(spark, frame(sample))
-    assert(v2.collect().length == 1)
-    assert(v1.collect().length == 1)
-    assert(bad1.value == 1L, s"call-1 counter = ${bad1.value}, want 1 (its own poison row)")
-    assert(bad2.value == 0L, s"call-2 counter = ${bad2.value}, want 0 (clean batch)")
+  test("the wire schema's required fields are the .avsc's fields without a null branch") {
+    // Pipeline's guard drops rows by the first set, the encoder fails on
+    // the second: equal sets mean the guard lets through exactly what the
+    // encoder accepts
+    import scala.jdk.CollectionConverters._
+    val avsc = new Schema.Parser().parse(Schemas.reclamacoesAvsc)
+    val avscRequired = avsc.getFields.asScala.filterNot(f =>
+      f.schema().getType == Schema.Type.UNION &&
+        f.schema().getTypes.asScala.exists(_.getType == Schema.Type.NULL)).map(_.name()).toSet
+    val wireRequired = Schemas.reclamacoesWire.fields.filterNot(_.nullable).map(_.name).toSet
+    assert(wireRequired == avscRequired)
+    assert(wireRequired.size == 9)
   }
 
   test("property: decode(encode(r)) == r for arbitrary conforming rows") {

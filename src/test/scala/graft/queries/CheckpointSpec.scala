@@ -10,7 +10,7 @@ class CheckpointSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("q68 reliable-checkpoint mode writes round files and matches local mode") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val tmp = java.nio.file.Paths.get(tmpDir("graft_ckpt"))
     val local = LlmOps.q68WithCheckpoint(None)(spark, sf)
       .collect().map(_.toString).toSeq
     graft.core.CacheScope.drain()

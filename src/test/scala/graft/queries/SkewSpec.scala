@@ -18,7 +18,7 @@ class SkewSpec extends SparkSpec {
     * users 2–10 have 5 events each, a minute apart. */
   private lazy val skewDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = tmpDir("graft_skew")
     val bot = (1 to 500).map(i => (1L, 10000L + i, (86400L + i) * 1000000000L))
     val normal = for { u <- 2 to 10; i <- 1 to 5 }
       yield (u.toLong, u * 1000L + i, (86400L + i * 60L) * 1000000000L)

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 import graft.core.Schemas
@@ -84,23 +84,44 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("s70b: lenient ingest — a poison row costs one counter tick, not the batch") {
+  test("s70b: guarded ingest — a poison row costs one rejected tick, not the query") {
     val dir = tmpDir("s70b_src")
     // row 2 has an empty Trimestre: R5 nullifies it, and Trimestre is one
-    // of the 9 REQUIRED wire fields — strict mode would kill the batch
+    // of the 9 REQUIRED wire fields — the strict encoder would fail on it
     writeCsv(dir, "a.csv",
       "2022;1º;C;B;1;BANCO A;2;3;4;5;6;7;8;9",
       "2022;;C;B;2;BANCO RUIM;3;4;5;6;7;8;9;10")
-    val (values, bad) = Pipeline.valuesStreamLenient(spark, dir)
-    val q = Sinks.start(values, MemorySink("s70b_out"), Trigger.ProcessingTime(0))
+    val q = Sinks.start(Pipeline.valuesStream(spark, dir, guarded = true),
+      MemorySink("s70b_out"), Trigger.ProcessingTime(0))
     try {
       q.processAllAvailable() // must NOT throw
+      val rejected = q.recentProgress.toSeq
+        .flatMap(p => Option(p.observedMetrics.get(Pipeline.observedMetricsName)))
+        .map(_.getAs[Long]("rejected"))
+      assert(rejected.sum == 1L, s"rejected per batch: $rejected")
       val vals = spark.table("s70b_out")
       assert(vals.count() == 1, "only the good row ships")
-      val decoded = AvroCodec.decodeFrame(spark, vals).collect()
-      assert(decoded.head.getAs[String]("instituicao_financeira") == "BANCO A")
-      assert(bad.value == 1L, s"bad-record metric = ${bad.value}, want 1")
+      assert(AvroCodec.decodeFrame(spark, vals).collect()
+        .head.getAs[String]("instituicao_financeira") == "BANCO A")
+      // the query lives on: a later file still lands
+      landCsv(dir, "b.csv", "2023;2º;C;B;3;BANCO B;3;4;5;6;7;8;9;10")
+      q.processAllAvailable()
+      assert(AvroCodec.decodeFrame(spark, spark.table("s70b_out")).collect()
+        .map(_.getAs[String]("instituicao_financeira")).sorted.toSeq == Seq("BANCO A", "BANCO B"))
     } finally q.stop()
+  }
+
+  test("s70f: the default Pipeline.run stays strict — a poison row ends the query") {
+    val dir = tmpDir("s70f_src")
+    writeCsv(dir, "a.csv",
+      "2022;1º;C;B;1;BANCO A;2;3;4;5;6;7;8;9",
+      "2022;;C;B;2;BANCO RUIM;3;4;5;6;7;8;9;10")
+    val q = Pipeline.run(spark, dir, MemorySink("s70f_out"), Trigger.AvailableNow())
+    val ex = try intercept[StreamingQueryException](q.awaitTermination()) finally q.stop()
+    // the encoder's own error: Avro names the required field it found null
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .flatMap(e => Option(e.getMessage)).toSeq
+    assert(messages.exists(_.contains("trimestre")), messages.mkString("\n"))
   }
 
   test("s70c: Pipeline.run starts on an empty prefix and decodes the first file to land") {
